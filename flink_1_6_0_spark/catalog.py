@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_1_6_0_spark.sources.batch import parquet_rows, parquet_schema, read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -64,12 +66,6 @@ def normalize_table(name: str, df: DataFrame) -> DataFrame:
     return df
 
 
-# Per-path cache of the rewritten events read schema (None = the arrived
-# dtype is not NTZ, fall back to normalize_table's dtype dispatch). The footer
-# sniff costs one metadata read per path per process — amortized to zero.
-_EVENTS_READ_SCHEMA: dict[str, "object | None"] = {}
-
-
 def _events_read_schema(spark: SparkSession, path: str):
     """If events.ts arrives TIMESTAMP_NTZ, build an explicit read schema with
     ts as TIMESTAMP so the vectorized parquet reader performs the conversion
@@ -77,21 +73,21 @@ def _events_read_schema(spark: SparkSession, path: str):
     (the r3->r4 window_tumble/over_rows_unbounded regression root cause): the
     cast added a Project between the scan and the window/agg, while the
     read-schema path is conversion-free inside the columnar batch decode —
-    value-identical under the UTC session timezone."""
-    if path not in _EVENTS_READ_SCHEMA:
-        from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
+    value-identical under the UTC session timezone. Derived from the
+    memoized inferred schema (``sources.batch.parquet_schema``), so a file
+    rewritten at the same path gets its new schema; None = the arrived dtype
+    is not NTZ, fall back to normalize_table's dtype dispatch."""
+    from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
-        arrived = spark.read.parquet(path).schema
-        if isinstance(arrived["ts"].dataType, TimestampNTZType):
-            _EVENTS_READ_SCHEMA[path] = StructType(
-                [
-                    StructField("ts", TimestampType(), f.nullable) if f.name == "ts" else f
-                    for f in arrived.fields
-                ]
-            )
-        else:
-            _EVENTS_READ_SCHEMA[path] = None
-    return _EVENTS_READ_SCHEMA[path]
+    arrived = parquet_schema(spark, path)
+    if not isinstance(arrived["ts"].dataType, TimestampNTZType):
+        return None
+    return StructType(
+        [
+            StructField("ts", TimestampType(), f.nullable) if f.name == "ts" else f
+            for f in arrived.fields
+        ]
+    )
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -104,7 +100,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         schema = _events_read_schema(spark, path)
         if schema is not None:
             return spark.read.schema(schema).parquet(path)
-    return normalize_table(name, spark.read.parquet(path))
+    return normalize_table(name, read_parquet(spark, path))
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of one star-schema table, from the input-metadata memo."""
+    return parquet_rows(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

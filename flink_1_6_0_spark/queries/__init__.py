@@ -13,11 +13,10 @@ Conventions (driver contract, see __spark_entry__.py):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.catalog import read_table
+from flink_1_6_0_spark.session import _default_parallelism
 
 
 # Runtime-settable confs the engine's correctness contract depends on. The
@@ -53,15 +52,18 @@ def harden_session(spark: SparkSession) -> None:
     for k, v in _SESSION_HARDENING.items():
         spark.conf.set(k, v)
     if spark.conf.get("spark.sql.shuffle.partitions", _SHUFFLE_DEFAULT) == _SHUFFLE_DEFAULT:
-        spark.conf.set("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
+        spark.conf.set("spark.sql.shuffle.partitions", str(_default_parallelism()))
     _HARDENED.add(key)
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one star-schema table from a scale-factor dir (lazy parquet scan).
+    """Load one star-schema table from a scale-factor dir as a lazy parquet
+    scan: the schema comes from the input-metadata memo
+    (``sources.batch.read_parquet``), so once a table has been seen a call
+    launches no Spark job.
 
-    Nanosecond-timestamp columns arrive as long (nanosAsLong) and are
-    normalized to microsecond timestamps — matching DuckDB's ns→µs truncation.
+    Nanosecond-timestamp columns are normalized to microsecond timestamps —
+    matching DuckDB's ns→µs truncation (see ``catalog.read_table``).
     Defensively hardens the session (see ``_SESSION_HARDENING``) because the
     driver's session has none of session.py's confs.
     """
@@ -78,35 +80,13 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # both engines keep the identical subset on any partitioning.
 EMB_CAP = 2000  # the sf0.1 embeddings count — the proven-tractable n²
 
-# r16 (r15 verdict task 7): emb_capped ran an EAGER emb.count() at
-# plan-build time on every invocation — one extra Spark job per call of the
-# capped queries (and dedup_semantic_ml pays the same count for its
-# k = sqrt(n) sizing). The count only changes when the underlying parquet
-# does, so key it on (realpath, mtime_ns, size) exactly like
-# sources.stream._PER_TRIGGER_CACHE keys its epoch sizing.
-_COUNT_CACHE: dict[tuple[str, int, int], int] = {}
-
-
-def cached_table_count(df: DataFrame, sf_dir: str, name: str) -> int:
-    """``df.count()`` memoized per (path, mtime, size) — the frame must be
-    the unmodified ``T(spark, sf_dir, name)`` scan for the key to be valid."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    except OSError:
-        return df.count()  # non-file source: no safe cache key
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = df.count()
-    return _COUNT_CACHE[key]
-
-
 def emb_capped(emb: DataFrame, salt: str, n: int | None = None) -> DataFrame:
     """Spark side of the cap: keep rows whose portable md5 gate lands under
     rate = min(1000, 1000*EMB_CAP // n) permille; exact no-op when the
     table already fits (rate == 1000 keeps every row AND skips the filter,
     so plans at gated tiers are untouched). ``n`` lets callers that already
-    know the table count (cached_table_count) skip the eager count job."""
+    know the table count (``catalog.table_rows``) skip the eager
+    count job."""
     import pyspark.sql.functions as F
 
     from flink_1_6_0_spark.operators.utils import deterministic_sample

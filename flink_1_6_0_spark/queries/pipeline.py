@@ -927,10 +927,11 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 slice above it, so this CORRECTNESS TWIN stays
     oracle-tractable at the x10 tier (k=8, unrolled-Lloyd oracle) instead
     of a declared skip; the uncapped production path is dedup_semantic_ml."""
-    from flink_1_6_0_spark.queries import cached_table_count, emb_capped
+    from flink_1_6_0_spark.catalog import table_rows
+    from flink_1_6_0_spark.queries import emb_capped
 
     emb = T(spark, sf_dir, "embeddings")
-    emb = emb_capped(emb, "semcap", n=cached_table_count(emb, sf_dir, "embeddings"))
+    emb = emb_capped(emb, "semcap", n=table_rows(spark, sf_dir, "embeddings"))
     return sim.semantic_dedup(
         emb, "vec_id", "embedding", tau=0.35, dim=64, n_centroids=8
     )
@@ -1005,10 +1006,10 @@ def dedup_semantic_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet metadata (footer count, no data scan)."""
     import math
 
-    from flink_1_6_0_spark.queries import cached_table_count
+    from flink_1_6_0_spark.catalog import table_rows
 
     emb = T(spark, sf_dir, "embeddings")
-    k = max(8, int(math.sqrt(cached_table_count(emb, sf_dir, "embeddings"))))
+    k = max(8, int(math.sqrt(table_rows(spark, sf_dir, "embeddings"))))
     return sim.semantic_dedup(
         emb, "vec_id", "embedding", tau=0.35, dim=64, n_centroids=k,
         assigner="ml", materialize_assignment=_semdedup_ml_assign_path(sf_dir),

@@ -360,10 +360,11 @@ def ml_sos_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the SCALE BOUNDARY docstring on the operator stands: sample or
     pre-cluster first at 100 TB — this gate IS that sample)."""
     from flink_1_6_0_spark.operators.ml import sos_outlier_fixed
-    from flink_1_6_0_spark.queries import cached_table_count, emb_capped
+    from flink_1_6_0_spark.catalog import table_rows
+    from flink_1_6_0_spark.queries import emb_capped
 
     e = T(spark, sf_dir, "embeddings")
-    emb = emb_capped(e, "soscap", n=cached_table_count(e, sf_dir, "embeddings")).select(
+    emb = emb_capped(e, "soscap", n=table_rows(spark, sf_dir, "embeddings")).select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
     )
     return sos_outlier_fixed(emb, perplexity=10.0)

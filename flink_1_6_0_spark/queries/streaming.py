@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.registry import query
+from flink_1_6_0_spark.sources.batch import read_parquet
 from flink_1_6_0_spark.sources.stream import (
     events_stream,
     scaled_state_partitions,
@@ -698,7 +699,7 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_6_0_spark.sources.stream import read_parquet_stream
 
     bench = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
         .filter(F.col("doc_id") % 13 == 0)
         .select(F.explode(word_shingles(F.col("text"), 3)).alias("s"))
         .distinct()
@@ -745,7 +746,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_6_0_spark.sources.stream import read_parquet_stream
 
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    corpus = spark.read.parquet(docs_path).filter(F.col("doc_id") % 5 != 0)
+    corpus = read_parquet(spark, docs_path).filter(F.col("doc_id") % 5 != 0)
     work = tempfile.mkdtemp(prefix="sid_")
     seed_dedup_state(corpus, "doc_id", "text", f"{work}/state")
     stream = read_parquet_stream(
@@ -812,7 +813,7 @@ def stream_group_agg_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_6_0_spark.streaming.cleanup_state import group_agg_retention_df
 
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_parquet(spark, f"{sf_dir}/events.parquet")
         .select(
             "user_id",
             "event_id",
@@ -858,7 +859,7 @@ def stream_proctime_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number."""
     from flink_1_6_0_spark.streaming.cleanup_state import proctime_sort_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         "event_id",
         F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("tick"),
@@ -897,7 +898,7 @@ def stream_over_proctime_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from flink_1_6_0_spark.streaming.cleanup_state import proctime_rows_over_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         "event_id",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("pt"),
@@ -965,7 +966,7 @@ def stream_nonwindow_join_retention(spark: SparkSession, sf_dir: str) -> DataFra
     from flink_1_6_0_spark.streaming.cleanup_state import StreamQueryConfig
     from flink_1_6_0_spark.streaming.join_kernels import nonwindow_join_retention_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         "event_id",
         F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / 86400000).cast("long").alias("epoch"),
@@ -1036,7 +1037,7 @@ def stream_timebounded_join_kernel(spark: SparkSession, sf_dir: str) -> DataFram
     FULL OUTER rows."""
     from flink_1_6_0_spark.streaming.join_kernels import timebounded_join_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         (F.col("event_id") % 2).cast("int").alias("side"),
         F.unix_millis(F.col("ts").cast("timestamp")).alias("pt"),
@@ -1084,7 +1085,7 @@ def stream_rowtime_sort_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12)."""
     from flink_1_6_0_spark.streaming.cleanup_state import rowtime_sort_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         "event_id",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("rt"),
@@ -1135,7 +1136,7 @@ def stream_rowtime_timebounded_join_kernel(spark: SparkSession, sf_dir: str) -> 
     expiry)."""
     from flink_1_6_0_spark.streaming.join_kernels import rowtime_timebounded_join_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         F.when(F.col("event_id") % 3 == 0, F.lit(0)).otherwise(F.lit(1)).alias("side"),
         F.unix_millis(F.col("ts").cast("timestamp")).alias("rt"),
@@ -1230,7 +1231,7 @@ def stream_window_lateness_kernel(spark: SparkSession, sf_dir: str) -> DataFrame
     only match if the merge/lateness/re-fire/cleanup protocol runs."""
     from flink_1_6_0_spark.streaming.session_window import event_time_window_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         (F.unix_millis(F.col("ts").cast("timestamp")) * 2).alias("rt"),
         (F.col("event_id") % 7 == 0).alias("is_late"),
@@ -1350,7 +1351,7 @@ def stream_session_window_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop to the side output. Hash-match requires the merge protocol to run."""
     from flink_1_6_0_spark.streaming.session_window import event_time_window_df
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id",
         (F.unix_millis(F.col("ts").cast("timestamp")) * 2).alias("rt"),
         (F.col("event_id") % 5 == 0).alias("is_late"),

@@ -130,13 +130,14 @@ class TableEnvironment:
         from pyspark.sql.types import TimestampNTZType
 
         from flink_1_6_0_spark.catalog import normalize_table
+        from flink_1_6_0_spark.sources.batch import read_parquet
 
         # route through the catalog's ns-timestamp normalization, then cast
         # any remaining TIMESTAMP_NTZ column to TIMESTAMP regardless of the
         # registered view name (normalize_table keys on 'events'): a raw NTZ
         # column breaks TUMBLE and withWatermark downstream, and under the
         # UTC session timezone the cast is value-preserving
-        df = normalize_table(name, self.spark.read.parquet(path))
+        df = normalize_table(name, read_parquet(self.spark, path))
         for f in df.schema.fields:
             if isinstance(f.dataType, TimestampNTZType):
                 df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))

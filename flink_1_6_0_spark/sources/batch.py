@@ -20,9 +20,11 @@ scans receive pruned columns + pushed filters from Catalyst automatically
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def from_elements(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
@@ -56,8 +58,85 @@ def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
+# Session confs that change what Spark infers from a parquet footer: a memo
+# entry is served only under the values it was inferred with.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+class _InputMeta:
+    """One memo entry: the inferred schema, and the row count once asked."""
+
+    __slots__ = ("schema", "rows")
+
+    def __init__(self, schema: StructType):
+        self.schema = schema
+        self.rows: int | None = None
+
+
+# The engine's one input-metadata memo (the TableSource.getTableSchema
+# analog: a source's schema is derived once, not per scan). A schema-less
+# spark.read.parquet launches a Spark job to infer the schema — ~100 ms
+# against ~20 ms for a read with an explicit schema — and every registered
+# query paid it once per table read, on every call.
+_INPUT_META: dict[tuple, _InputMeta] = {}
+
+
+def _file_identity(path: str) -> tuple[str, int, int] | None:
+    """``(realpath, mtime_ns, size)`` of an immutable input; a directory
+    stamped ``_TIME_ORDERED`` is identified by its marker, which every
+    publish re-stamps. None for a path the local FS cannot stat (hdfs://,
+    s3://): such an input has no safe key and is never memoized."""
+    marker = os.path.join(path, "_TIME_ORDERED")
+    try:
+        st = os.stat(marker if os.path.isfile(marker) else path)
+    except OSError:
+        return None
+    return (os.path.realpath(path), st.st_mtime_ns, st.st_size)
+
+
+def _input_meta(spark: SparkSession, path: str) -> _InputMeta | None:
+    ident = _file_identity(path)
+    if ident is None:
+        return None
+    key = ident + tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    meta = _INPUT_META.get(key)
+    if meta is None:
+        meta = _INPUT_META[key] = _InputMeta(spark.read.parquet(path).schema)
+    return meta
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    file identity and inference confs."""
+    meta = _input_meta(spark, path)
+    return spark.read.parquet(path).schema if meta is None else meta.schema
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Lazy scan of an immutable parquet input with its memoized schema: no
+    Spark job once the input has been seen. Directories a call has just
+    written (state dirs, flags) have nothing to reuse and read directly."""
+    meta = _input_meta(spark, path)
+    if meta is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(meta.schema).parquet(path)
+
+
+def parquet_rows(spark: SparkSession, path: str) -> int:
+    """Row count of an immutable parquet input (a footer-metadata job),
+    counted once per memo entry."""
+    meta = _input_meta(spark, path)
+    if meta is None:
+        return spark.read.parquet(path).count()
+    if meta.rows is None:
+        meta.rows = spark.read.schema(meta.schema).parquet(path).count()
+    return meta.rows
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -120,7 +199,6 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite", codec: str = "
     except Exception:
         pass  # spark-avro DataSource jar absent — pure-Python path below
 
-    import os
     import shutil
     import uuid
 

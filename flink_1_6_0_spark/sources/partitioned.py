@@ -36,6 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.catalog import read_table
+from flink_1_6_0_spark.sources.batch import parquet_schema, read_parquet
 
 
 def _lake_root() -> str:
@@ -187,7 +188,7 @@ def cep_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     mtime order — >= 4 real micro-batches with 2 dates per boundary arriving
     a whole batch late."""
     path = cep_funnel_stream_dir(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(path, "g0.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(path, "g0.parquet"))
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -246,7 +247,7 @@ def cep_late_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — the earliest-dates slice arrives a whole batch late (weeks of
     event time)."""
     path = cep_late_replay_dir(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(path, "g0.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(path, "g0.parquet"))
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -259,7 +260,7 @@ def read_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, so date predicates become ``PartitionFilters`` (directories never
     listed into the scan — the 100 TB pruning contract, pinned in
     tests/test_plans.py)."""
-    return spark.read.parquet(partitioned_events_dir(spark, sf_dir))
+    return read_parquet(spark, partitioned_events_dir(spark, sf_dir))
 
 
 def partitioned_events_stream(
@@ -271,7 +272,7 @@ def partitioned_events_stream(
     batch boundaries (the single-file TESTDATA layout could never show this).
     """
     path = partitioned_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -28,6 +28,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
+from flink_1_6_0_spark.sources.batch import read_parquet
 from flink_1_6_0_spark.sources.partitioned import _lake_root, _publish
 
 
@@ -53,7 +54,7 @@ def synthesize(spark: SparkSession, base: str, n: int, out: str) -> None:
         return u
 
     B = 1_000_000_000
-    ev = spark.read.parquet(f"{base}/events.parquet")
+    ev = read_parquet(spark, f"{base}/events.parquet")
     # events lands as TIME-ORDERED part files (r14 verdict task 3): one file
     # per contiguous ts range, ascending mtimes, plus a _TIME_ORDERED marker
     # — so sources/stream.events_stream can replay this directory as >= 3
@@ -81,15 +82,15 @@ def synthesize(spark: SparkSession, base: str, n: int, out: str) -> None:
             F.concat(F.translate(F.col("text"), "aeiou", rot), F.lit(f" copytag{i}")),
         )
 
-    docs = spark.read.parquet(f"{base}/documents.parquet")
+    docs = read_parquet(spark, f"{base}/documents.parquet")
     times(docs, "doc_id", B, perturb).write.mode("overwrite").parquet(f"{out}/documents.parquet")
 
-    emb = spark.read.parquet(f"{base}/embeddings.parquet")
+    emb = read_parquet(spark, f"{base}/embeddings.parquet")
     times(emb, "vec_id", B).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
 
-    li = spark.read.parquet(f"{base}/lineitem.parquet")
+    li = read_parquet(spark, f"{base}/lineitem.parquet")
     times(li, "l_orderkey", B).write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
-    od = spark.read.parquet(f"{base}/orders.parquet")
+    od = read_parquet(spark, f"{base}/orders.parquet")
     times(od, "o_orderkey", B).write.mode("overwrite").parquet(f"{out}/orders.parquet")
 
 

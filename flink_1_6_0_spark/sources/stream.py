@@ -24,6 +24,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.catalog import _events_read_schema, normalize_table
+from flink_1_6_0_spark.session import _default_parallelism
+from flink_1_6_0_spark.sources.batch import parquet_rows, parquet_schema
 
 
 #: Per-epoch row budget for time-ordered directory replays. The r15 x100
@@ -36,8 +38,6 @@ from flink_1_6_0_spark.catalog import _events_read_schema, normalize_table
 #: scales with executor count.
 _EPOCH_ROWS_TARGET = 350_000
 
-
-_PER_TRIGGER_CACHE: dict[tuple[str, float], int] = {}
 
 #: Rows of per-epoch input one streaming state partition should carry. The
 #: r16 scaling block showed stateful queries were state-store-COMMIT bound,
@@ -55,28 +55,6 @@ _PER_TRIGGER_CACHE: dict[tuple[str, float], int] = {}
 #: partitions at both core counts, so the driver's core sweep measures the
 #: engine, not store constants).
 _ROWS_PER_STATE_PARTITION = 50_000
-
-_ROW_COUNT_CACHE: dict[tuple[str, int, int], int] = {}
-
-
-def _cached_row_count(spark: SparkSession, path: str) -> int:
-    """Parquet row count (footer metadata job), memoized per
-    (realpath, mtime_ns, size) — the same immutable-input convention as
-    _PER_TRIGGER_CACHE / the EMB_CAP count memo; bench runs construct the
-    same stream dozens of times."""
-    stat_target = path
-    if os.path.isdir(path):
-        marker = os.path.join(path, "_TIME_ORDERED")
-        if os.path.isfile(marker):
-            stat_target = marker
-    st = os.stat(stat_target)
-    key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    hit = _ROW_COUNT_CACHE.get(key)
-    if hit is None:
-        hit = spark.read.parquet(path).count()
-        _ROW_COUNT_CACHE[key] = hit
-    return hit
-
 
 def _source_epochs(spark: SparkSession, path: str) -> int:
     """How many micro-batches the bounded replay of ``path`` produces under
@@ -99,12 +77,13 @@ def stateful_shuffle_partitions(
     ceil(rows-per-epoch / _ROWS_PER_STATE_PARTITION), clamped to
     [1, SPARK_GRAFT_CPUS]. Derived from data volume only (see the constant's
     note); the CPUS cap is the cluster-parallelism ceiling, not a tuning
-    knob."""
-    total = _cached_row_count(spark, path)
+    knob. The row count is the input-metadata memo's (footer metadata,
+    counted once per file identity)."""
+    total = parquet_rows(spark, path)
     if epochs is None:
         epochs = _source_epochs(spark, path)
     per_epoch = max(1, total // max(1, epochs))
-    cap = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cap = _default_parallelism()
     return max(1, min(cap, -(-per_epoch // _ROWS_PER_STATE_PARTITION)))
 
 
@@ -127,17 +106,13 @@ def _time_ordered_per_trigger(spark: SparkSession, path: str) -> int:
     """maxFilesPerTrigger for a `_TIME_ORDERED`-stamped directory: at least
     3 epochs (multi-batch evidence), more when needed to keep each epoch
     under _EPOCH_ROWS_TARGET rows. The row count is parquet-footer
-    metadata (no data scan) but still a Spark job — cached per
-    (path, marker mtime) since stamped tiers are immutable once published
+    metadata (no data scan) but still a Spark job — taken from the
+    input-metadata memo, since stamped tiers are immutable once published
     (bench runs construct the same stream dozens of times)."""
-    key = (path, os.path.getmtime(os.path.join(path, "_TIME_ORDERED")))
-    hit = _PER_TRIGGER_CACHE.get(key)
-    if hit is not None:
-        return hit
     n_parts = sum(
         1 for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")
     )
-    total = _cached_row_count(spark, path)
+    total = parquet_rows(spark, path)
     epochs = max(3, -(-total // _EPOCH_ROWS_TARGET))
     per = max(1, n_parts // epochs)
     if n_parts < epochs:
@@ -157,7 +132,6 @@ def _time_ordered_per_trigger(spark: SparkSession, path: str) -> int:
             RuntimeWarning,
             stacklevel=2,
         )
-    _PER_TRIGGER_CACHE[key] = per
     return per
 
 
@@ -168,11 +142,12 @@ def read_parquet_stream(spark: SparkSession, path: str, max_files_per_trigger: i
 
     Hardens the session first: the schema probe below dies on
     TIMESTAMP(NANOS) parquet (events table) unless nanosAsLong is set — and
-    a bare driver session may run a streaming query before any batch one."""
+    a bare driver session may run a streaming query before any batch one.
+    The probe is the input-metadata memo's, inferred once per input."""
     from flink_1_6_0_spark.queries import harden_session
 
     harden_session(spark)
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     if os.path.isdir(path) and os.path.isfile(os.path.join(path, "_TIME_ORDERED")):
         # Directory table stamped time-ordered (scale_synth._stamp_time_ordered:
         # one part file per disjoint ts range, ascending mtimes): replay as

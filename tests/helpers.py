@@ -1,9 +1,12 @@
-"""Comparison helpers mirroring the driver's order-insensitive value check."""
+"""Comparison helpers mirroring the driver's order-insensitive value check,
+and a Spark job counter."""
 
 from __future__ import annotations
 
 import datetime as _dt
 import math
+import uuid
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -68,3 +71,21 @@ def assert_frames_match(spark_df, duck_rel, query_name: str = "") -> None:
     assert not mism, (
         f"{query_name}: {len(mism)} mismatched rows; first: spark={a[mism[0]]!r} duck={b[mism[0]]!r}"
     )
+
+
+@contextmanager
+def jobs_launched(spark):
+    """Count the Spark jobs launched inside the block: yields a list that
+    holds the count once the block exits. The block's jobs run under a
+    fresh job group, read back through ``sc.statusTracker()``; the thread's
+    previous job group is restored afterwards."""
+    sc = spark.sparkContext
+    group = f"jobs-launched-{uuid.uuid4().hex[:8]}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, "jobs_launched probe")
+    box: list[int] = []
+    try:
+        yield box
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+        box.append(len(sc.statusTracker().getJobIdsForGroup(group)))

@@ -630,6 +630,23 @@ def test_stateful_shuffle_partitions_derive_from_rows(spark, sf_dir, tmp_path):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_harden_session_sizes_shuffle_from_the_engine_cpu_count(spark, monkeypatch):
+    """A bare session at Spark's 200-partition default is resized to the
+    same CPU count the session factory and the state-partition cap use
+    (``session._default_parallelism``), so a CPU-limited run sees one count."""
+    from flink_1_6_0_spark import queries
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.setattr(queries, "_HARDENED", set())
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        queries.harden_session(spark)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 def test_scaled_state_partitions_preserve_stream_results(spark, sf_dir):
     """The data-derived state partition count must not change WHAT a
     stateful streaming query computes — only how many store instances
