@@ -90,12 +90,17 @@ def _events_read_schema(spark: SparkSession, path: str):
     )
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Path of one star-schema table in a scale-factor dir."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table, normalizing driver-generated quirks the
     cheapest way available: events gets an explicit TIMESTAMP read schema
     (scan-time conversion, no extra projection) when possible, else the
     post-read dtype dispatch of :func:`normalize_table`."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if name == "events":
         schema = _events_read_schema(spark, path)
         if schema is not None:
@@ -105,7 +110,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of one star-schema table, from the input-metadata memo."""
-    return parquet_rows(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return parquet_rows(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -13,11 +13,11 @@ hash match also certifies the materialization itself.
 from __future__ import annotations
 
 import time
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_1_6_0_spark.catalog import table_path
 from flink_1_6_0_spark.registry import query
 from flink_1_6_0_spark.sources.partitioned import (
     CEP_REPLAY_DISORDER_S,
@@ -26,7 +26,7 @@ from flink_1_6_0_spark.sources.partitioned import (
     partitioned_events_stream,
     read_partitioned_events,
 )
-from flink_1_6_0_spark.sources.stream import to_memory_sink
+from flink_1_6_0_spark.sources.stream import drain, drain_to_memory
 
 
 @query(
@@ -61,50 +61,6 @@ def events_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_stream(
-    df: DataFrame, mode: str, min_batches: int, sf_dir: str | None = None
-) -> tuple[DataFrame, list]:
-    """Drive a bounded stream to completion; return (result, progress).
-
-    Raises if fewer than ``min_batches`` micro-batches carried input rows —
-    the multi-batch claim is load-bearing (cross-batch state), so a layout
-    change that collapses the replay into one batch must fail loudly, not
-    silently pass on weaker evidence.
-
-    With ``sf_dir`` the query runs under a data-derived state partition
-    count (sources.stream.scaled_state_partitions — see _materialize in
-    queries/streaming.py for the r16/r17 commit-overhead evidence). The
-    events row count with ``min_batches`` epochs is the per-epoch volume
-    proxy; partition values are key-hashed so computed rows are unchanged.
-    """
-    import os as _os
-    from contextlib import nullcontext
-
-    from flink_1_6_0_spark.sources.stream import scaled_state_partitions
-
-    spark = df.sparkSession
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    scope = (
-        scaled_state_partitions(
-            spark, _os.path.join(sf_dir, "events.parquet"), epochs=min_batches
-        )
-        if sf_dir
-        else nullcontext()
-    )
-    with scope:
-        q = to_memory_sink(df, name, mode)
-        try:
-            q.processAllAvailable()
-            progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        finally:
-            q.stop()
-    if len(progress) < min_batches:
-        raise AssertionError(
-            f"expected >= {min_batches} non-empty micro-batches, got {len(progress)}"
-        )
-    return spark.table(name), progress
-
-
 @query(
     "stream_multibatch_tumble",
     oracle="""
@@ -126,13 +82,19 @@ def stream_multibatch_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
     would overstate the evidence; the watermark-PARTICIPATING path (append
     mode, late-data drop) is exercised by stream_tumble_agg and
     streaming/late_data.py."""
+    return _drain_multibatch_tumble(spark, sf_dir)[0]
+
+
+def _drain_multibatch_tumble(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """stream_multibatch_tumble's plan, drained: shared with bench.py's
+    streaming figure so the figure measures the registered query's plan at
+    its state-partition count."""
     stream = partitioned_events_stream(spark, sf_dir)
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     out = agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
-    result, _ = _run_stream(out, "complete", min_batches=3, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "complete", table_path(sf_dir, "events"), min_batches=3)
 
 
 @query(
@@ -146,9 +108,8 @@ def stream_multibatch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch the append-mode output would re-emit repeat users and the
     DISTINCT oracle would hash-mismatch. This is the driver-checkable proof
     that streaming state is cross-batch, not per-trigger."""
-    stream = partitioned_events_stream(spark, sf_dir).select("user_id")
-    result, _ = _run_stream(stream.dropDuplicates(["user_id"]), "append", min_batches=3, sf_dir=sf_dir)
-    return result
+    out = partitioned_events_stream(spark, sf_dir).select("user_id").dropDuplicates(["user_id"])
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=3)[0]
 
 
 @query(
@@ -207,8 +168,7 @@ def stream_multibatch_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         use_cleanup_timer=False,
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)[0]
 
 
 @query(
@@ -276,8 +236,7 @@ def stream_multibatch_cep_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
         disorder_seconds=CEP_REPLAY_DISORDER_S,
         with_timeouts=True,
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)[0]
 
 
 @query(
@@ -330,8 +289,7 @@ def stream_multibatch_cep_iterative(spark: SparkSession, sf_dir: str) -> DataFra
         disorder_seconds=CEP_REPLAY_DISORDER_S,
         attr_cols=["value"],
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)[0]
 
 
 @query(
@@ -382,8 +340,7 @@ def stream_multibatch_cep_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         select_fn=_funnel_select_fn,
         output_schema="view_id long, purchase_id long, value_delta double, dwell_sec long",
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)[0]
 
 
 @query(
@@ -452,8 +409,7 @@ def stream_multibatch_cep_select_timeout(spark: SparkSession, sf_dir: str) -> Da
         timeout_fn=_funnel_timeout_fn,
         timeout_schema="view_id long, deadline_sec long",
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)[0]
 
 
 @query(
@@ -517,7 +473,7 @@ def stream_multibatch_cep_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         use_cleanup_timer=False,
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
+    result, _ = drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)
     return result.select(
         "user_id",
         "view_id",
@@ -574,26 +530,17 @@ def stream_cep_late_side(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    result, _ = _run_stream(out, "append", min_batches=2, sf_dir=sf_dir)
-    return result
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=2)[0]
 
 
 def streaming_throughput(spark: SparkSession, sf_dir: str) -> dict:
     """End-to-end micro-batch throughput figure for bench.py (BASELINE.md
     bench family 7): rows/s over the full multi-batch replay of the
-    partitioned lake through the tumbling-window aggregate, measured from
-    stream start to last committed batch. Returns
+    partitioned lake through stream_multibatch_tumble's plan and state
+    partitions, measured from plan build to last committed batch. Returns
     ``{rows, sec, rows_per_sec, batches}``."""
-    stream = partitioned_events_stream(spark, sf_dir)
-    agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
-    )
     t0 = time.perf_counter()
-    _, progress = _run_stream(
-        agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value"),
-        "complete",
-        min_batches=3,
-    )
+    _, progress = _drain_multibatch_tumble(spark, sf_dir)
     sec = time.perf_counter() - t0
     rows = sum(p["numInputRows"] for p in progress)
     return {
@@ -635,8 +582,9 @@ def stream_multibatch_retract_chain(spark: SparkSession, sf_dir: str) -> DataFra
     def emit(df: DataFrame, epoch: int) -> None:
         final["rows"] = [(r["n_events"], r["n_users"]) for r in df.collect()]
 
-    q = (
-        chained_group_agg(
+    drain(
+        spark,
+        lambda: chained_group_agg(
             stream,
             ["user_id"],
             [F.count("*").alias("n_events")],
@@ -646,15 +594,9 @@ def stream_multibatch_retract_chain(spark: SparkSession, sf_dir: str) -> DataFra
             emit,
         )
         .option("checkpointLocation", f"{work}/ckpt")
-        .start()
+        .start(),
+        min_batches=3,
     )
-    try:
-        q.processAllAvailable()
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
-    if len(progress) < 3:
-        raise AssertionError(f"expected >= 3 non-empty micro-batches, got {len(progress)}")
     return spark.createDataFrame(final["rows"], "n_events long, n_users long")
 
 
@@ -707,5 +649,5 @@ def stream_cep_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
         disorder_seconds=CEP_REPLAY_DISORDER_S,
         comparator_cols=["value"],
     )
-    result, _ = _run_stream(out, "append", min_batches=4, sf_dir=sf_dir)
+    result, _ = drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=4)
     return result.select("user_id", "view_id", "click_id")

@@ -2,60 +2,31 @@
 bench item 7).
 
 Each query runs a REAL Structured Streaming pipeline (file source replayed as
-a stream → stateful operator → memory sink, driven to completion with
-processAllAvailable) and returns the materialized result — so the DuckDB
-oracle checks the streaming operator's semantics end-to-end, not a batch
-stand-in.
+a stream → stateful operator → memory sink, drained to completion by
+sources.stream.drain_to_memory) and returns the materialized result — so
+the DuckDB oracle checks the streaming operator's semantics end-to-end, not
+a batch stand-in.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
-from contextlib import nullcontext
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_1_6_0_spark.catalog import table_path
 from flink_1_6_0_spark.registry import query
 from flink_1_6_0_spark.sources.batch import read_parquet
 from flink_1_6_0_spark.sources.stream import (
+    drain,
+    drain_to_memory,
     events_stream,
-    scaled_state_partitions,
-    to_memory_sink,
+    read_parquet_stream,
 )
 from flink_1_6_0_spark.streaming.dedup import dedup_stream
 from flink_1_6_0_spark.streaming.group_agg import continuous_group_agg
 from flink_1_6_0_spark.streaming.interval_join import stream_interval_join as interval_join_op
-
-
-def _materialize(
-    df: DataFrame, mode: str, sf_dir: str | None = None, table: str = "events"
-) -> DataFrame:
-    """Drive the bounded stream to completion through a memory sink.
-
-    With ``sf_dir`` the query runs under a DATA-DERIVED state partition
-    count (sources.stream.scaled_state_partitions): the r16 scaling block
-    showed CPUS-many state partitions hand a toy epoch two orders of
-    magnitude of per-store commit constants (stream_outer_join spent 217 s
-    cumulative commitTimeMs across 128 store instances on ~4k state rows).
-    Partition values are key-hashed, so the computed rows are unchanged —
-    only the state-store instance count and output order move (the oracle
-    normalizes order)."""
-    spark = df.sparkSession
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    scope = (
-        scaled_state_partitions(spark, os.path.join(sf_dir, f"{table}.parquet"))
-        if sf_dir
-        else nullcontext()
-    )
-    with scope:
-        q = to_memory_sink(df, name, mode)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
 
 
 @query(
@@ -79,7 +50,7 @@ def stream_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     out = agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
-    return _materialize(out, "complete", sf_dir)
+    return drain_to_memory(out, "complete", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -98,7 +69,7 @@ def stream_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         [F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
     )
-    return _materialize(agg, "complete", sf_dir)
+    return drain_to_memory(agg, "complete", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -109,7 +80,7 @@ def stream_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_first_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming first-row-per-key dedup (keyed state; dropDuplicates)."""
     out = dedup_stream(events_stream(spark, sf_dir).select("user_id"), ["user_id"])
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -143,7 +114,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_delay="1 minute",
         right_delay="1 minute",
     ).select(F.col("event_id").alias("click_id"), F.col("b_event_id").alias("purchase_id"))
-    return _materialize(joined, "append", sf_dir)
+    return drain_to_memory(joined, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -180,7 +151,7 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select(
         "user_id", F.col("session_window.start").alias("session_start"), "n", "sum_value"
     )
-    return _materialize(out, "complete", sf_dir)
+    return drain_to_memory(out, "complete", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -208,7 +179,7 @@ def stream_hop_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
     out = agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value")
-    return _materialize(out, "complete", sf_dir)
+    return drain_to_memory(out, "complete", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -244,7 +215,7 @@ def stream_evicted_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_evicted_window(
         stream, ["user_id"], "ts", "event_id", "value", 86400, keep_last_n=2
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -277,7 +248,7 @@ def stream_purging_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_continuous_window(
         stream, ["user_id"], "ts", "value", 86400, 21600, purging=True
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -320,7 +291,7 @@ def stream_continuous_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_continuous_window(
         stream, ["user_id"], "ts", "value", 86400, 21600, purging=False
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -370,7 +341,7 @@ def stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sum_value",
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -396,7 +367,7 @@ def stream_over_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_running_agg(
         events_stream(spark, sf_dir), ["user_id"], "ts", "event_id", "value"
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -441,7 +412,7 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("event_id").alias("click_id"), F.col("b_event_id").alias("purchase_id")
     )
-    return _materialize(joined, "append", sf_dir)
+    return drain_to_memory(joined, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -466,7 +437,7 @@ def stream_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream(spark, sf_dir)
     agg = distinct_agg(ev, ["event_type"], "user_id", agg_alias="n_users")
-    return _materialize(agg, "complete", sf_dir)
+    return drain_to_memory(agg, "complete", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -505,7 +476,7 @@ def stream_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         use_cleanup_timer=False,
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -552,7 +523,7 @@ def stream_cep_value_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         use_cleanup_timer=False,
         attr_cols=["value"],
     )
-    return _materialize(out, "append", sf_dir)
+    return drain_to_memory(out, "append", table_path(sf_dir, "events"))[0]
 
 
 @query(
@@ -588,32 +559,29 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.col("ts").alias("p_ts"), "event_id", "value"
     )
     state = tempfile.mkdtemp(prefix="asof_state_")
-    holder: dict = {}
-
-    def emit(df: DataFrame, epoch_id: int) -> None:
-        holder["last"] = df
-
-    q = foreach_batch_asof_join(
-        clicks,
-        purch_stream,
-        key="user_id",
-        left_ts="ts",
-        right_ts="p_ts",
-        right_payload=["event_id", "value"],
-        left_state_path=f"{state}/l",
-        right_state_path=f"{state}/r",
-        emit_fn=emit,
-        checkpoint=f"{state}/ckpt",
-        direction="backward",
+    # the per-epoch emissions are superseded by the final-state recompute
+    # below; the drain only has to see at least one non-empty epoch
+    drain(
+        spark,
+        lambda: foreach_batch_asof_join(
+            clicks,
+            purch_stream,
+            key="user_id",
+            left_ts="ts",
+            right_ts="p_ts",
+            right_payload=["event_id", "value"],
+            left_state_path=f"{state}/l",
+            right_state_path=f"{state}/r",
+            emit_fn=lambda df, epoch_id: None,
+            checkpoint=f"{state}/ckpt",
+            direction="backward",
+        ),
+        min_batches=1,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = holder["last"]
     # final-state recompute with the deterministic (user_id, ts)-unique right
-    # side: rebuild from the accumulated state tables (the emission above
-    # used raw arrivals; dedup here mirrors join_asof_events' pre-reduce)
+    # side: rebuild from the accumulated state tables (the per-epoch
+    # emissions used raw arrivals; dedup here mirrors join_asof_events'
+    # pre-reduce)
     rs = (
         spark.read.parquet(f"{state}/r")
         .groupBy("user_id", "p_ts")
@@ -654,19 +622,17 @@ def stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands. Quality scoring is the same pure-Column expression as the batch
     `text_quality` gate (JVM-side per micro-batch); state is one row per
     source."""
-    import os
-
     from flink_1_6_0_spark.pipeline.text import quality_score
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream
 
-    docs = read_parquet_stream(spark, os.path.join(sf_dir, "documents.parquet"))
+    docs_path = os.path.join(sf_dir, "documents.parquet")
+    docs = read_parquet_stream(spark, docs_path)
     scored = docs.select("source", quality_score("text").alias("q"))
     agg = scored.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("q") >= 0.5, 1).otherwise(0)).cast("long").alias("n_pass"),
         F.round(F.avg("q"), 4).alias("avg_quality"),
     )
-    return _materialize(agg, "complete", sf_dir, table="documents")
+    return drain_to_memory(agg, "complete", docs_path)[0]
 
 
 @query(
@@ -693,24 +659,20 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stream-static BroadcastHashJoin; per-doc hit counts accumulate in
     complete mode. The flag-contaminated-data-as-it-lands shape — state is
     one row per contaminated doc, the benchmark side ships once."""
-    import os
-
     from flink_1_6_0_spark.pipeline.dedup import word_shingles
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream
 
+    docs_path = os.path.join(sf_dir, "documents.parquet")
     bench = (
-        read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+        read_parquet(spark, docs_path)
         .filter(F.col("doc_id") % 13 == 0)
         .select(F.explode(word_shingles(F.col("text"), 3)).alias("s"))
         .distinct()
     )
-    stream = read_parquet_stream(spark, os.path.join(sf_dir, "documents.parquet")).filter(
-        F.col("doc_id") % 13 != 0
-    )
+    stream = read_parquet_stream(spark, docs_path).filter(F.col("doc_id") % 13 != 0)
     sh = stream.select("doc_id", F.explode(word_shingles(F.col("text"), 3)).alias("s"))
     hits = sh.join(F.broadcast(bench), "s")
     agg = hits.groupBy("doc_id").agg(F.count("*").alias("n_contaminated"))
-    return _materialize(agg, "complete", sf_dir, table="documents")
+    return drain_to_memory(agg, "complete", docs_path)[0]
 
 
 # one shared spelling with the batch dedup_incremental oracle — the drained
@@ -736,14 +698,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch dedup_incremental — same oracle, same spelling (cross-EPOCH
     accumulation is pinned separately in tests/test_prep.py with a two-wave
     stream)."""
-    import os
     import tempfile
 
     from flink_1_6_0_spark.pipeline.dedup import (
         seed_dedup_state,
         streaming_incremental_dedup,
     )
-    from flink_1_6_0_spark.sources.stream import read_parquet_stream
 
     docs_path = os.path.join(sf_dir, "documents.parquet")
     corpus = read_parquet(spark, docs_path).filter(F.col("doc_id") % 5 != 0)
@@ -756,13 +716,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def emit(df: DataFrame, epoch_id: int) -> None:
         df.write.mode("append").parquet(f"{work}/flags")
 
-    q = streaming_incremental_dedup(
-        stream, "doc_id", "text", f"{work}/state", emit, f"{work}/ckpt"
+    drain(
+        spark,
+        lambda: streaming_incremental_dedup(
+            stream, "doc_id", "text", f"{work}/state", emit, f"{work}/ckpt"
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(f"{work}/flags")
 
 

@@ -36,7 +36,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.catalog import read_table
-from flink_1_6_0_spark.sources.batch import parquet_schema, read_parquet
+from flink_1_6_0_spark.sources.batch import read_parquet
+from flink_1_6_0_spark.sources.stream import read_parquet_stream
 
 
 def _lake_root() -> str:
@@ -187,13 +188,7 @@ def cep_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scrambled funnel replay as a stream: 4 files, 1 per trigger, in
     mtime order — >= 4 real micro-batches with 2 dates per boundary arriving
     a whole batch late."""
-    path = cep_funnel_stream_dir(spark, sf_dir)
-    schema = parquet_schema(spark, os.path.join(path, "g0.parquet"))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    return read_parquet_stream(spark, cep_funnel_stream_dir(spark, sf_dir))
 
 
 def cep_late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -246,13 +241,7 @@ def cep_late_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The late replay as a stream: 2 files, 1 per trigger, oldest mtime
     first — the earliest-dates slice arrives a whole batch late (weeks of
     event time)."""
-    path = cep_late_replay_dir(spark, sf_dir)
-    schema = parquet_schema(spark, os.path.join(path, "g0.parquet"))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    return read_parquet_stream(spark, cep_late_replay_dir(spark, sf_dir))
 
 
 def read_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,10 +260,4 @@ def partitioned_events_stream(
     micro-batches, so stateful operators demonstrably carry state across
     batch boundaries (the single-file TESTDATA layout could never show this).
     """
-    path = partitioned_events_dir(spark, sf_dir)
-    schema = parquet_schema(spark, path)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+    return read_parquet_stream(spark, partitioned_events_dir(spark, sf_dir), max_files_per_trigger)

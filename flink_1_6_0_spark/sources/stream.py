@@ -19,11 +19,16 @@ Kafka/socket need live endpoints; tests drive the file and memory paths.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+import uuid
+from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from flink_1_6_0_spark.catalog import _events_read_schema, normalize_table
+from flink_1_6_0_spark.queries import harden_session
 from flink_1_6_0_spark.session import _default_parallelism
 from flink_1_6_0_spark.sources.batch import parquet_rows, parquet_schema
 
@@ -56,12 +61,17 @@ _EPOCH_ROWS_TARGET = 350_000
 #: engine, not store constants).
 _ROWS_PER_STATE_PARTITION = 50_000
 
+
+def _is_time_ordered(path: str) -> bool:
+    return os.path.isfile(os.path.join(path, "_TIME_ORDERED"))
+
+
 def _source_epochs(spark: SparkSession, path: str) -> int:
     """How many micro-batches the bounded replay of ``path`` produces under
-    the same rules events_stream/read_parquet_stream apply: single files and
-    unstamped directories drain in ONE epoch; a _TIME_ORDERED directory
-    replays ceil(n_parts / per_trigger) epochs."""
-    if os.path.isdir(path) and os.path.isfile(os.path.join(path, "_TIME_ORDERED")):
+    the rules read_parquet_stream applies at events_stream's files per
+    trigger: single files and unstamped directories drain in ONE epoch; a
+    _TIME_ORDERED directory replays ceil(n_parts / per_trigger) epochs."""
+    if _is_time_ordered(path):
         per = _time_ordered_per_trigger(spark, path)
         n_parts = sum(
             1 for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")
@@ -135,31 +145,37 @@ def _time_ordered_per_trigger(spark: SparkSession, path: str) -> int:
     return per
 
 
-def read_parquet_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
-    """A parquet directory replayed as a stream (readFile watch-mode analog;
-    also the test harness for every windowed-agg/join query: bounded input
-    drives the stream to completion with processAllAvailable).
+def read_parquet_stream(
+    spark: SparkSession,
+    path: str,
+    max_files_per_trigger: int = 1,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """A parquet input replayed as a bounded stream (readFile watch-mode
+    analog) — the engine's one file-replay reader. The layout decides how
+    the input is cut into micro-batches:
 
-    Hardens the session first: the schema probe below dies on
+    - a single file: the file source needs a directory, so the parent is
+      read narrowed by a ``pathGlobFilter`` (one file, one micro-batch);
+    - a ``_TIME_ORDERED`` directory (scale_synth._stamp_time_ordered: one
+      part file per disjoint ts range, ascending mtimes): >= 3 genuinely
+      time-ordered micro-batches at the row-budgeted files per trigger —
+      the file source admits oldest-mtime first, so watermarks advance
+      strictly forward, and no epoch outgrows _EPOCH_ROWS_TARGET;
+    - any other directory: ``max_files_per_trigger`` files per micro-batch.
+
+    ``schema`` replaces the inferred one (events_stream's scan-time ts
+    conversion). Hardens the session first: the schema probe dies on
     TIMESTAMP(NANOS) parquet (events table) unless nanosAsLong is set — and
     a bare driver session may run a streaming query before any batch one.
     The probe is the input-metadata memo's, inferred once per input."""
-    from flink_1_6_0_spark.queries import harden_session
-
     harden_session(spark)
-    schema = parquet_schema(spark, path)
-    if os.path.isdir(path) and os.path.isfile(os.path.join(path, "_TIME_ORDERED")):
-        # Directory table stamped time-ordered (scale_synth._stamp_time_ordered:
-        # one part file per disjoint ts range, ascending mtimes): replay as
-        # >= 3 genuinely time-ordered micro-batches — the file source admits
-        # oldest-mtime first, so watermarks advance strictly forward. The
-        # caller's max_files_per_trigger is overridden: its default of 1 was
-        # tuned for single-file/staged layouts, and an unstamped directory
-        # would have to drain in one epoch instead (see events_stream).
+    if schema is None:
+        schema = parquet_schema(spark, path)
+    if _is_time_ordered(path):
         max_files_per_trigger = _time_ordered_per_trigger(spark, path)
     reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", max_files_per_trigger)
     if os.path.isfile(path):
-        # file streams require a directory source; narrow with a glob filter
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
     return reader.parquet(path)
@@ -170,46 +186,19 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     When events.ts arrives TIMESTAMP_NTZ the explicit TIMESTAMP read schema
     does the conversion inside the scan (same trick as catalog.read_table —
-    no cast projection per micro-batch); otherwise normalize post-read."""
-    path = os.path.join(sf_dir, "events.parquet")
-    from flink_1_6_0_spark.queries import harden_session
+    no cast projection per micro-batch); otherwise normalize post-read.
 
+    An unstamped directory table drains in ONE micro-batch: its part files
+    are not time-ordered, so a 1-file-per-trigger replay feeds the
+    watermark out of order and drops most rows as late (r14 x10 gate
+    finding) — the bounded-replay semantics the oracles model are the
+    single-epoch drain. Ordered MULTI-batch progression comes from a
+    _TIME_ORDERED tier and from the stream_multibatch_* family over the
+    date-partitioned lake, whose batches are genuinely time-ordered."""
+    path = os.path.join(sf_dir, "events.parquet")
     harden_session(spark)
-    schema = _events_read_schema(spark, path)
-    if schema is not None:
-        if os.path.isfile(path):
-            # single-file testdata layout: glob-narrow within the parent
-            reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            reader = reader.option("pathGlobFilter", os.path.basename(path))
-            return reader.parquet(os.path.dirname(path))
-        if os.path.isfile(os.path.join(path, "_TIME_ORDERED")):
-            # r15 (r14 verdict task 3): a directory table stamped
-            # time-ordered (scale_synth writes the x10 events as one part
-            # file per disjoint ts range with ascending mtimes) replays as
-            # >= 3 REAL micro-batches — the file source admits oldest-mtime
-            # first, so the watermark advances strictly forward and the
-            # whole watermarked stream family gets multi-epoch progression
-            # evidence at the 1M-event tier instead of a single-epoch drain.
-            # Epoch size is row-budgeted (see _EPOCH_ROWS_TARGET): stateful
-            # kernels buffer per-key state until the epoch's watermark
-            # advance, so unbounded epochs OOM exactly when the tier grows.
-            reader = spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", _time_ordered_per_trigger(spark, path)
-            )
-            return reader.parquet(path)
-        # Unstamped Spark-written DIRECTORY table: stream the directory
-        # itself — the unconditional glob filter used to match 0 files here
-        # and every stream query read an empty source (r14 x10 gate
-        # finding). Drain in ONE micro-batch: part files are not
-        # time-ordered, so a 1-file-per-trigger replay feeds the watermark
-        # out of order and drops most rows as late — the bounded-replay
-        # semantics the oracles model are the single-epoch drain. Ordered
-        # MULTI-batch progression is separately exercised (and oracle-
-        # checked) by the stream_multibatch_* family over the date-
-        # partitioned lake, whose batches are genuinely time-ordered.
-        reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1_000_000)
-        return reader.parquet(path)
-    return normalize_table("events", read_parquet_stream(spark, path))
+    stream = read_parquet_stream(spark, path, 1_000_000, _events_read_schema(spark, path))
+    return normalize_table("events", stream)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
@@ -269,10 +258,63 @@ def kafka_sink(df: DataFrame, bootstrap: str, topic: str, checkpoint: str):
 
 
 def to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
-    """Debug/test sink: run to completion synchronously, query via SQL.
-    Returns the StreamingQuery (caller stops it)."""
-    q = df.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
-    return q
+    """Debug/test sink: START the query into the in-memory table ``name``
+    (read it back with ``spark.table(name)``). Returns the running
+    StreamingQuery; the caller drives and stops it — drain_to_memory does
+    both for a bounded stream."""
+    return df.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
+
+
+def drain(
+    spark: SparkSession,
+    start: Callable[[], StreamingQuery],
+    sizing: str | None = None,
+    min_batches: int = 0,
+) -> list[dict]:
+    """Drive one bounded stream to completion — the engine's one run-to-
+    completion entry point (the StreamExecutionEnvironment.execute analog
+    for a bounded job). ``start`` starts the query: a memory sink
+    (drain_to_memory) or a foreachBatch kernel that starts its own.
+
+    With a ``sizing`` path the query STARTS inside scaled_state_partitions
+    for that input, so its state-store partition count follows the data
+    volume, not the core count (see _ROWS_PER_STATE_PARTITION). A replay
+    that promises ``min_batches`` epochs is sized at that many; otherwise
+    at the source layout's epoch count. Partition values are key-hashed,
+    so computed rows are unchanged — only the store-instance count and
+    output order move.
+
+    Returns the progress of the micro-batches that carried input rows (the
+    Structured Streaming per-batch progress model) and raises if there are
+    fewer than ``min_batches``: a multi-batch claim is load-bearing
+    (cross-batch state), so a layout change that collapses the replay must
+    fail loudly, not pass on weaker evidence. The query is stopped either
+    way."""
+    scope = (
+        scaled_state_partitions(spark, sizing, min_batches or None) if sizing else nullcontext()
+    )
+    with scope:
+        q = start()
+        try:
+            q.processAllAvailable()
+            progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        finally:
+            q.stop()
+    if len(progress) < min_batches:
+        raise AssertionError(
+            f"expected >= {min_batches} non-empty micro-batches, got {len(progress)}"
+        )
+    return progress
+
+
+def drain_to_memory(
+    df: DataFrame, mode: str, sizing: str | None = None, min_batches: int = 0
+) -> tuple[DataFrame, list[dict]]:
+    """drain() through a memory sink in output ``mode``; returns
+    ``(result table, progress)``."""
+    name = f"q_{uuid.uuid4().hex[:12]}"
+    progress = drain(df.sparkSession, lambda: to_memory_sink(df, name, mode), sizing, min_batches)
+    return df.sparkSession.table(name), progress
 
 
 def to_parquet_sink(df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"):

@@ -1351,8 +1351,8 @@ def cep_stream(
     (IntervalJoin/NFA timers); a timer wake-up now FLUSHES the buffer (final
     scan with negations closable — the stream has been quiet for a full
     horizon, the event-time analog of the job-end watermark) before dropping
-    it. Disable ``use_cleanup_timer`` for bounded-replay tests driven by
-    processAllAvailable — pending processing-time timers keep scheduling
+    it. Disable ``use_cleanup_timer`` for bounded replays driven by
+    sources.stream.drain — pending processing-time timers keep scheduling
     micro-batches, so the synchronous drain never observes an idle query
     (state is still trimmed on every arriving event either way).
 

@@ -252,12 +252,12 @@ def test_cep_late_side_is_exactly_the_kernels_drop_set(spark, sf_dir, duck):
     derived drop set, and (b) the MAIN kernel's matches never reference a
     dropped event — the side output is the exact complement of what the
     kernel admitted."""
-    from flink_1_6_0_spark.queries.lake import _run_stream
     from flink_1_6_0_spark.registry import get
     from flink_1_6_0_spark.sources.partitioned import (
         CEP_REPLAY_DISORDER_S,
         cep_late_replay_stream,
     )
+    from flink_1_6_0_spark.sources.stream import drain_to_memory
     from flink_1_6_0_spark.streaming.cep import Pattern, cep_stream
 
     spec = get("stream_cep_late_side")
@@ -281,7 +281,7 @@ def test_cep_late_side_is_exactly_the_kernels_drop_set(spark, sf_dir, duck):
         use_cleanup_timer=False,
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
-    matches, _ = _run_stream(main, "append", min_batches=2)
+    matches, _ = drain_to_memory(main, "append", min_batches=2)
     got = matches.toPandas()
     dropped = set(side["event_id"])
     used = set(got["view_id"]) | set(got["purchase_id"])

@@ -684,3 +684,61 @@ def test_scaled_state_partitions_preserve_stream_results(spark, sf_dir):
         return sorted(map(tuple, spark.table(name).collect()))
 
     assert run(True) == run(False)
+
+
+def test_unstamped_events_directory_drains_in_one_batch(spark, sf_dir, tmp_path):
+    """A Spark-written, unstamped events directory (ts arrives TIMESTAMP, so
+    no NTZ read schema) must drain in ONE micro-batch like the NTZ layout:
+    its part files are not time-ordered, and a file-per-trigger replay
+    would feed the watermark backwards."""
+    from flink_1_6_0_spark.catalog import read_table
+    from flink_1_6_0_spark.sources.stream import drain_to_memory, events_stream
+
+    ev = read_table(spark, sf_dir, "events")
+    d = str(tmp_path / "tier")
+    ev.repartition(4).write.parquet(os.path.join(d, "events.parquet"))
+
+    got, progress = drain_to_memory(events_stream(spark, d), "append")
+    assert [p["numInputRows"] for p in progress] == [ev.count()]
+    assert got.count() == ev.count()
+
+
+def _tumble_counts(spark, sf_dir):
+    from flink_1_6_0_spark.sources.stream import events_stream
+
+    stream = events_stream(spark, sf_dir).withWatermark("ts", "1 minute")
+    return stream.groupBy(F.window("ts", "1 hour"), "event_type").count()
+
+
+def test_drain_sizes_state_partitions_and_restores_the_conf(spark, sf_dir):
+    """sources.stream.drain, the one bounded-stream driver: with a sizing
+    path the query's state stores number exactly what the data-derived rule
+    says, and the session's shuffle-partition conf is restored after."""
+    from flink_1_6_0_spark.sources.stream import drain_to_memory, stateful_shuffle_partitions
+
+    events = os.path.join(sf_dir, "events.parquet")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    _, progress = drain_to_memory(_tumble_counts(spark, sf_dir), "complete", events)
+    want = stateful_shuffle_partitions(spark, events)
+    assert progress[-1]["stateOperators"][0]["numShufflePartitions"] == want
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    # unsized, the query keeps the session's own count
+    _, progress = drain_to_memory(_tumble_counts(spark, sf_dir), "complete")
+    assert progress[-1]["stateOperators"][0]["numShufflePartitions"] == int(before)
+
+
+def test_drain_raises_below_min_batches_and_stops_the_query(spark, sf_dir):
+    """A replay that collapses below ``min_batches`` non-empty batches
+    raises, restores the conf, and leaves none of its queries running."""
+    import pytest
+
+    from flink_1_6_0_spark.sources.stream import drain_to_memory
+
+    events = os.path.join(sf_dir, "events.parquet")
+    before_conf = spark.conf.get("spark.sql.shuffle.partitions")
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(AssertionError, match="expected >= 2 non-empty micro-batches, got 1"):
+        drain_to_memory(_tumble_counts(spark, sf_dir), "complete", events, min_batches=2)
+    assert {q.id for q in spark.streams.active} <= before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before_conf
