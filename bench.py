@@ -1,433 +1,291 @@
-"""Benchmark harness — runs the headline (bench=True) registered queries.
+"""Benchmark harness — times the headline (bench=True) registered queries.
 
-Usage: python bench.py
+Usage: python bench.py [query ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_CPUS   (default: all cores)
-       SPARK_GRAFT_BENCH_RUNS (default 3 — median-of-N per query)
+       SPARK_GRAFT_BENCH_RUNS (default 3 — timed rounds of the headline sweep)
+       SPARK_GRAFT_SF1    (default 1; 0 skips the two sf1 blocks)
+
+Query names, when given, restrict every block to those registered queries
+(an A/B is two checkouts each running ``python bench.py <query>``).
 
 Prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ..., "vs_baseline_matched": R, ...}.
+"queries": {name: sec, ...}, "sf": ..., "vs_baseline_matched": R, ...}; the
+full record goes to BENCH_DETAIL.json. Every query runs to completion into a
+``noop`` sink: the whole plan executes and nothing is collected.
 
-Each query is executed to completion with a `noop` sink write — full plan
-runs, nothing is collected to the driver (the 100 TB-honest way to measure).
-Per-query time is the MEDIAN of N runs (single runs at sub-second scale showed
-±2x jitter across rounds — r3's window_tumble "regression" was irreproducible).
+The rule, in order:
 
-Self-comparability (round-3 ADVICE): per-query recorded baselines live in
-BENCHBASE.json; `vs_baseline_matched` is sum(current)/sum(baseline) over the
-queries present in BOTH — so adding or dropping a bench query never skews the
-headline ratio, and no judge recomputes matched-set arithmetic by hand.
-
-Environment fingerprint (round-6 verdict: r6's run came out a uniform ~1.4x
-of r4's on UNCHANGED code — machine-level drift that the raw ratio could not
-distinguish from a plan regression): every run now records an `env` block
-(Spark/JVM/Python versions, CPU count, loadavg before/after) plus a
-fixed-cost SENTINEL — since r12 a 32-task shuffle+agg microjob (see
-`_sentinel_sec` for why the old single-stage range-sum misread contention),
-a data-independent job whose speed tracks the machine, not the engine.
-BENCHBASE.json carries the re-seeded sentinel regime;
-`vs_baseline_normalized` divides the raw matched ratio by
-(sentinel_now / sentinel_base), so environment drift cancels and what
-remains is plan-level change.
-
-Mid-sweep contamination guard (round-15, after three driver sweeps in a row
-landed on a loaded machine and r14's shipped 1.451 needed a judge re-run to
-adjudicate): every query and scale block now carries a sentinel stamp taken
-DURING the sweep; drifted queries are re-run behind a settle barrier, and a
-run that never lands calm ships `"contaminated": true` plus the drifted list
-— the output is self-adjudicating either way.
+- One wall-clock deadline, ``DEADLINE_S`` from process start; data
+  generation counts against it. The sf0.1 headline sweep runs first, then
+  the sf1 synth block and the sf1 dbgen block in the time that is left, then
+  the streaming rows/s figure.
+- Every block goes through ``time_block``: one untimed warm-up pass at the
+  block's own dir, then ``runs`` timed rounds interleaved round-robin (every
+  query once per round, so drift hits every query alike), with one
+  ``_sentinel_sec`` stamp after each round. A run is not started if,
+  judged from that query's last sample, it would end past the deadline; the
+  block stops there. Per-query time is the median over the completed rounds
+  (over the cut round's samples when none completed). A query that raises
+  reads -1.0 and drops out of later rounds.
+- A block is contaminated when the deadline cut it short, or when its median
+  round stamp exceeds ``DRIFT`` x BENCHBASE's sentinel. ``contaminated`` is
+  true when any block is; it is null when BENCHBASE has no sentinel.
+  ``env_drift`` and the normalized ratios divide by the median round stamp.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import platform
 import re
 import statistics
 import sys
 import time
 
-from flink_1_6_0_spark.registry import load_all
-from flink_1_6_0_spark.session import get_spark
+_START = time.monotonic()
 
-BENCHBASE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCHBASE.json")
+DEADLINE_S = 20 * 60
+DRIFT = 1.3
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BENCHBASE = os.path.join(HERE, "BENCHBASE.json")
+
+SF1_SET = (
+    "tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21",
+    "dedup_minhash_lsh", "corpus_e2e_pretrain", "graph_triadic_census_directed",
+)
+DBGEN_SET = ("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21")
 
 
 def _consume(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _sentinel_sec(spark, runs: int = 3) -> float:
-    """Median wall time of a fixed, data-independent 32-task SHUFFLE+AGG job
-    — the machine-speed proxy the normalized ratio divides by.
+def _sentinel_sec(spark) -> float:
+    """Wall time of a fixed, data-independent 32-task SHUFFLE+AGG job — the
+    machine-speed proxy the normalized ratio divides by.
 
-    r12 redesign (r11 verdict task 4): the old sentinel was a single-stage
-    ``range(2e8).sum()`` — CPU-only whole-stage codegen, one task chain, no
-    exchange. On a loaded machine (r11: loadavg 7.7) it read 0.084 s — i.e.
-    it got a free core and saw NO contention — while every real query (32
-    parallel tasks + shuffles) slowed ~40%; env_drift came out 0.452 and the
-    normalized headline 1.623 against a raw matched ratio of 0.733. The
-    sentinel must exercise the SAME resources the queries contend for:
-    this one runs 32 parallel map tasks, a hash partial aggregate, one
-    shuffle exchange and a final aggregate — the dominant plan shape of the
-    bench head. BENCHBASE.json's ``sentinel_sec`` was re-seeded for this
-    job (``_sentinel_note`` there records the artifact)."""
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 12_000_000, 1, 32)
-            .selectExpr("id % 100000 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        samples.append(time.perf_counter() - t0)
-    return round(statistics.median(samples), 3)
+    It exercises the resources the queries contend for: 32 parallel map
+    tasks, a hash partial aggregate, one shuffle exchange and a final
+    aggregate — the dominant plan shape of the bench head. A single-stage
+    ``range().sum()`` gets a free core on a loaded machine and reads no
+    contention while every real query slows. BENCHBASE.json's
+    ``sentinel_sec`` was recorded for this job."""
+    t0 = time.perf_counter()
+    (
+        spark.range(0, 12_000_000, 1, 32)
+        .selectExpr("id % 100000 AS k", "id AS v")
+        .groupBy("k")
+        .agg({"v": "sum"})
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return round(time.perf_counter() - t0, 3)
+
+
+def time_block(run, stamp, d, names, runs, deadline, clock=time.monotonic) -> dict:
+    """Time ``names`` at dir ``d``: one untimed warm-up pass, then ``runs``
+    round-robin rounds with one ``stamp()`` after each, none started past
+    ``deadline`` (see the module docstring). ``run(name, d)`` executes one
+    query; ``clock`` reads seconds on the deadline's scale."""
+    last: dict[str, float] = {}
+    failed: set[str] = set()
+
+    def attempt(name: str) -> float | None:
+        t0 = clock()
+        try:
+            run(name, d)
+        except Exception as exc:  # a failing query must not sink the bench
+            print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
+            failed.add(name)
+            return None
+        last[name] = clock() - t0
+        return last[name]
+
+    for name in names:
+        if clock() >= deadline:
+            break
+        attempt(name)
+    rounds: list[dict[str, float | None]] = []
+    stamps: list[float] = []
+    stopped = False
+    while len(rounds) < runs and not stopped:
+        this = {}
+        for name in names:
+            if name in failed:
+                continue
+            if name not in last or clock() + last[name] > deadline:
+                stopped = True
+                break
+            this[name] = attempt(name)
+        else:
+            rounds.append(this)
+            stamps.append(stamp())
+    kept = rounds or [this]
+    queries: dict[str, float] = {}
+    for name in names:
+        samples = [r[name] for r in kept if r.get(name) is not None]
+        if name in failed:
+            queries[name] = -1.0
+        elif samples:
+            queries[name] = round(statistics.median(samples), 3)
+    return {
+        "queries": queries,
+        "runs_per_query": runs,
+        "rounds_completed": len(rounds),
+        "round_sentinels": stamps,
+        "sentinel_sec": round(statistics.median(stamps), 3) if stamps else None,
+        "cut_by_deadline": len(rounds) < runs,
+    }
+
+
+def contamination(blocks: dict[str, dict], base: float | None) -> tuple[bool | None, list[str]]:
+    """``(contaminated, names)`` over the timed blocks: a block counts when
+    the deadline cut it short or its median round stamp exceeds ``DRIFT`` x
+    the BENCHBASE sentinel ``base``. Unchecked (None) without a base."""
+    if not base:
+        return None, []
+    bad = [
+        name for name, b in blocks.items()
+        if b["cut_by_deadline"] or (b["sentinel_sec"] or 0.0) > DRIFT * base
+    ]
+    return bool(bad), bad
 
 
 def _env_block(spark) -> dict:
-    import platform
+    from flink_1_6_0_spark.session import _default_parallelism
 
     try:
-        load = os.getloadavg()
+        load = [round(x, 2) for x in os.getloadavg()]
     except OSError:
-        load = (-1.0, -1.0, -1.0)
+        load = [-1.0, -1.0, -1.0]
     return {
         "spark_version": spark.version,
         "java_version": str(
             spark.sparkContext._jvm.java.lang.System.getProperty("java.version")
         ),
         "python_version": platform.python_version(),
-        "cpus": os.cpu_count(),
-        "loadavg_start": [round(x, 2) for x in load],
+        "cpus": _default_parallelism(),
+        "loadavg_start": load,
     }
 
 
-def _settle(spark, base_sentinel: float | None, limit_sec: float = 180.0) -> None:
-    """Wait for the machine to return to the baseline speed regime before a
-    timed block starts (r14: the 36-query warm-up pass leaves GC/load
-    pressure that inflated whatever ran next — the scale blocks read
-    block-sentinels of 1.3-1.4x however they were ordered). Polls the 1-run
-    sentinel until it reads <= 1.25x the recorded regime or the time budget
-    runs out — on this dedicated box the pressure drains in well under a
-    minute; on a genuinely busy machine the budget caps the wait and the
-    block's env stamp still records what it ran under."""
-    if not base_sentinel:
-        return
-    deadline = time.monotonic() + limit_sec
-    while time.monotonic() < deadline:
-        if _sentinel_sec(spark, runs=1) <= 1.25 * base_sentinel:
-            return
-        time.sleep(15)
+def _vs_baseline(times: dict[str, float], baseline: dict[str, float]) -> dict:
+    """Matched-set ratio sum(current)/sum(baseline) over the queries present
+    in both, so adding or dropping a bench query never skews it."""
+    matched = [q for q, t in times.items() if t >= 0 and q in baseline]
+    if not matched:
+        return {}
+    return {
+        "vs_baseline_matched": round(
+            sum(times[q] for q in matched) / sum(baseline[q] for q in matched), 3
+        ),
+        "matched_queries": len(matched),
+        "per_query_ratio": {q: round(times[q] / baseline[q], 2) for q in matched},
+    }
 
 
-def _mini_env(spark) -> dict:
-    """Per-block environment stamp (r12 verdict item 7: the sf1/sf1_dbgen
-    blocks carried no env snapshot, so their run-to-run variance got
-    re-litigated from prose every round): loadavg at block start plus a
-    single-run sentinel reading for the machine-speed regime."""
-    try:
-        load = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load = [-1.0, -1.0, -1.0]
-    return {"loadavg": load, "sentinel_sec": _sentinel_sec(spark, runs=1)}
+def _normalize(out: dict, sentinel_now: float | None, sentinel_base: float | None, key: str) -> None:
+    """Divide the matched ratio by this block's machine-speed drift
+    (median round stamp / the regime its baselines were recorded under)."""
+    if "vs_baseline_matched" in out and sentinel_now and sentinel_base:
+        drift = sentinel_now / sentinel_base
+        out[key] = round(drift, 3)
+        out["vs_baseline_normalized"] = round(out["vs_baseline_matched"] / drift, 3)
 
 
-def main() -> None:
+def _compact_line(out: dict) -> str:
+    """The driver keeps only the tail of stdout: print one line that fits
+    in 1900 chars, coarsening and then trimming the fastest queries."""
+    compact = {
+        k: out[k]
+        for k in (
+            "metric", "value", "unit", "queries", "sf", "runs_per_query",
+            "vs_baseline_matched", "matched_queries", "env_drift",
+            "vs_baseline_normalized", "throughput_rows_s", "stream_batches",
+            "guard_active", "contaminated", "contaminated_list", "sentinel_sec",
+        )
+        if k in out
+    }
+    for blk in ("sf1", "sf1_dbgen"):
+        if blk in out:
+            compact[blk] = {k: out[blk][k] for k in ("sf", "vs_baseline_matched") if k in out[blk]}
+    compact["detail"] = "BENCH_DETAIL.json"
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > 1900:
+        compact["queries"] = {q: round(t, 2) for q, t in compact["queries"].items()}
+        line = json.dumps(compact, separators=(",", ":"))
+    while len(line) > 1900 and compact["queries"]:
+        del compact["queries"][min(compact["queries"], key=compact["queries"].get)]
+        compact["queries_truncated"] = True
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
+
+
+def main(argv: list[str]) -> None:
+    from flink_1_6_0_spark.registry import load_all
+    from flink_1_6_0_spark.session import get_spark
+
+    deadline = _START + DEADLINE_S
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
+    specs = load_all()
+    unknown = [n for n in argv if n not in specs]
+    if unknown:
+        sys.exit(f"bench: unknown queries {unknown}")
+    names = tuple(argv) or tuple(n for n, s in specs.items() if s.bench)
+    try:
+        with open(BENCHBASE) as fh:
+            base = json.load(fh)
+    except (OSError, ValueError):
+        base = {}
+
     spark = get_spark(app_name="flink-1.6.0-spark-bench")
-    specs = [s for s in load_all().values() if s.bench]
+    env = _env_block(spark)
 
-    # Warm-up pass at the smallest SF: compiles every query's codegen/plan once
-    # so the timed runs measure steady-state execution, not first-run JIT.
-    # (Expression-heavy queries pay multi-second one-time compilation that a
-    # long-running cluster amortizes to zero — see SCALING.md.)
-    warm_dir = "/root/testdata/sf0.001"
-    for spec in specs:
+    def run(name: str, d: str) -> None:
+        _consume(specs[name].fn(spark, d))
+
+    def stamp() -> float:
+        return _sentinel_sec(spark)
+
+    stamp()  # compile the stamp job before its first recorded reading
+    head = time_block(run, stamp, sf_dir, names, runs, deadline)
+    timings = head.pop("queries")
+    blocks = {"headline": head}
+
+    scale = os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9
+    for key, subset, gen_key, note in (
+        ("sf1", SF1_SET, "synth_or_cache_sec", "10x key-shifted scale-up of sf0.1 (scale_synth.py)"),
+        ("sf1_dbgen", DBGEN_SET, "gen_or_cache_sec", "REAL TPC-H sf1 (DuckDB dbgen)"),
+    ):
+        block_names = tuple(n for n in subset if n in names)
+        if not (scale and block_names) or time.monotonic() >= deadline:
+            continue
         try:
-            _consume(spec.fn(spark, warm_dir if os.path.isdir(warm_dir) else sf_dir))
-        except Exception:
-            pass
-
-    # Scale blocks run FIRST (r13 verdict task 3): when they ran last — after
-    # 35 queries × 3 runs of synthesis/GC pressure — their block sentinels
-    # read 1.3–1.4× the baseline regime while the main sweep's read ~1.1,
-    # so sf1 numbers arrived structurally noisy every round. Generation is
-    # cache-hit after the first round; the main sweep below still has its
-    # own min-sentinel retry, so ordering costs it nothing.
-    sf1_block: dict | None = None
-    dbgen_block: dict | None = None
-    sf1_set = (
-        "tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21",
-        "dedup_minhash_lsh", "corpus_e2e_pretrain",
-        "graph_triadic_census_directed",
-    )
-    dbgen_set = ("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21")
-    by_name = {s.name: s for s in specs}
-
-    def _timed_block(d: str, names: tuple[str, ...]) -> dict[str, float]:
-        res: dict[str, float] = {}
-        for name in names:
-            spec = by_name.get(name)
-            if spec is None:
-                continue
-            # One untimed warm-up per query (r14 ADVICE): the blocks now run
-            # FIRST in a cold session, so without this the two timed samples
-            # include first-run JIT/codegen cost that the sf0.1 side of
-            # x10_ratio (warmed by the main sweep's warm-up pass) never pays.
-            try:
-                _consume(spec.fn(spark, d))
-            except Exception:
-                pass
-            samples = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                _consume(spec.fn(spark, d))
-                samples.append(time.perf_counter() - t0)
-            res[name] = round(statistics.median(samples), 3)
-        return res
-
-    try:
-        _sent_base0 = json.load(open(BENCHBASE)).get("sentinel_sec")
-    except Exception:
-        _sent_base0 = None
-
-    # Mid-sweep contamination threshold (r14 verdict task 1): three driver
-    # sweeps in a row landed on a loaded machine, and the single start-of-
-    # sweep sentinel read FAST while the sweep itself was being squeezed
-    # (BENCH_PROBES final_bench_attempt_r14). Everything timed now carries
-    # sentinel stamps taken DURING the measurement; anything whose local
-    # stamp drifts past this factor of the recorded regime is re-run after
-    # a settle, and a run that never lands calm is flagged `contaminated`.
-    DRIFT = 1.3
-
-    def _guarded_block(d: str, names: tuple[str, ...]) -> dict:
-        """Run a scale block with the mid-sweep guard: stamp the regime
-        before (``env``) and after (``sentinel_after``) the timed block.
-
-        A drifted post-stamp is AMBIGUOUS: a heavy block leaves its own
-        GC/allocator tail that reads exactly like ambient load (the first
-        two r15 calm closures flagged the sf1 block on an IDLE machine —
-        post-stamp 0.78-0.90 every run, block ratios at their best ever).
-        Disambiguate by settling and re-stamping: the block's own tail
-        drains in seconds, co-tenant load does not. Only a STILL-drifted
-        settled stamp means real mid-block load — then re-run once and
-        keep the pass with the calmer settled stamp.
-
-        LIMIT (r15 ADVICE): both the block stamps and the sweep's
-        per-query stamps are post-hoc — they bound contamination that
-        PERSISTS past the measurement. A co-tenant burst confined to the
-        measurement window (ending before the post-stamp) is
-        indistinguishable from the block's own GC tail and ships
-        unflagged; `contaminated: false` is strong but not absolute."""
-        best: dict | None = None
-        for attempt in range(2):
-            env = _mini_env(spark)
-            qs = _timed_block(d, names)
-            post = _sentinel_sec(spark, runs=1)
-            cand = {"env": env, "queries": qs, "sentinel_after": post}
-            if _sent_base0 is not None and post > DRIFT * _sent_base0:
-                _settle(spark, _sent_base0, limit_sec=60.0)
-                settled = _sentinel_sec(spark, runs=1)
-                cand["sentinel_after_settled"] = settled
-                post = min(post, settled)
-            cand["sentinel_verdict"] = post
-            if best is None or post < best["sentinel_verdict"]:
-                best = cand
-            if _sent_base0 is None or post <= DRIFT * _sent_base0:
-                break
-            print(
-                f"bench: block settled post-sentinel {post:.3f} > {DRIFT}x "
-                f"regime {_sent_base0:.3f} — real mid-block load, re-running",
-                file=sys.stderr,
-            )
-        best["block_contaminated"] = bool(
-            _sent_base0 and best["sentinel_verdict"] > DRIFT * _sent_base0
-        )
-        return best
-
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9:
-        try:
-            from flink_1_6_0_spark.sources.scale_synth import sf1_dir
-
             t0 = time.perf_counter()
-            d1 = sf1_dir(spark)
-            synth_sec = round(time.perf_counter() - t0, 1)
-            _settle(spark, _sent_base0)
-            sf1_block = {
-                "sf": 1.0,
-                "note": "10x key-shifted scale-up of sf0.1 (scale_synth.py)",
-                "synth_or_cache_sec": synth_sec,
-                "runs_per_query": 2,
-                **_guarded_block(d1, sf1_set),
-            }
+            if key == "sf1":
+                from flink_1_6_0_spark.sources.scale_synth import sf1_dir
+
+                d = sf1_dir(spark)
+            else:
+                from flink_1_6_0_spark.sources.tpch_dbgen import tpch_dir
+
+                d = tpch_dir(1.0)
+            gen = round(time.perf_counter() - t0, 1)
+            blocks[key] = {"sf": 1.0, "note": note, gen_key: gen,
+                           **time_block(run, stamp, d, block_names, 2, deadline)}
         except Exception as exc:
-            print(f"bench: sf1 sweep skipped: {exc}", file=sys.stderr)
-        try:
-            from flink_1_6_0_spark.sources.tpch_dbgen import tpch_dir
-
-            t0 = time.perf_counter()
-            dd = tpch_dir(1.0)
-            gen_sec = round(time.perf_counter() - t0, 1)
-            _settle(spark, _sent_base0)
-            dbgen_block = {
-                "sf": 1.0,
-                "note": "REAL TPC-H sf1 (DuckDB dbgen, sources/tpch_dbgen.py)",
-                "gen_or_cache_sec": gen_sec,
-                "runs_per_query": 2,
-                **_guarded_block(dd, dbgen_set),
-            }
-        except Exception as exc:
-            print(f"bench: sf1 dbgen sweep skipped: {exc}", file=sys.stderr)
-
-    _sent_base = _sent_base0  # one BENCHBASE load serves blocks and sweep
-
-    def _settled_stamp(raw: float) -> float:
-        """Disambiguate a drifted 1-run stamp from the measured work's own
-        GC/allocator tail — the same rule _guarded_block applies to the
-        scale blocks (a tail drains under a brief settle; co-tenant load
-        does not). Returns the calmer of the raw and settled readings."""
-        if _sent_base is None or raw <= DRIFT * _sent_base:
-            return raw
-        _settle(spark, _sent_base, limit_sec=45.0)
-        return min(raw, _sentinel_sec(spark, runs=1))
-
-    def _run_one(spec) -> float:
-        samples: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            _consume(spec.fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        return round(statistics.median(samples), 3)
-
-    def sweep() -> tuple[dict, dict[str, float], dict]:
-        """One full timed pass with the PER-QUERY contamination guard (r14
-        verdict task 1): after each query's timed runs a 1-run sentinel
-        stamps the regime that query actually ran under — the start-of-sweep
-        sentinel alone can read fast while load arrives mid-sweep (the
-        final_bench_attempt_r14 signature: throughput collapsed to 7.2k
-        rows/s yet the opening sentinel read 0.48 s). Queries whose local
-        stamp drifts past DRIFT x the recorded regime are re-run after a
-        settle; a re-run timing replaces the original only when its own
-        stamp is CALMER, so every shipped number carries the provenance of
-        the calmest regime it was actually measured under. Queries still
-        drifted after re-runs land in ``guard["contaminated_queries"]``."""
-        env = _env_block(spark)
-        # sentinel FIRST (one throwaway run excludes its own JIT cost): it
-        # stamps the machine-speed regime this sweep ran under
-        _sentinel_sec(spark, runs=1)
-        env["sentinel_sec"] = _sentinel_sec(spark)
-        timings: dict[str, float] = {}
-        stamps: dict[str, float] = {}
-        for spec in specs:
-            try:
-                timings[spec.name] = _run_one(spec)
-            except Exception as exc:  # a failing query must not sink the bench
-                print(f"bench: {spec.name} FAILED: {exc}", file=sys.stderr)
-                timings[spec.name] = -1.0
-            if _sent_base is not None:
-                stamps[spec.name] = _settled_stamp(_sentinel_sec(spark, runs=1))
-        guard: dict = {"query_sentinels": stamps}
-        if _sent_base is not None:
-            drifted = sorted(
-                q for q, s in stamps.items()
-                if s > DRIFT * _sent_base and timings.get(q, -1.0) >= 0
-            )
-            guard["drifted_queries"] = drifted
-            if drifted:
-                print(
-                    f"bench: {len(drifted)} queries measured under a drifted "
-                    f"regime — re-running after settle: {drifted}",
-                    file=sys.stderr,
-                )
-            reruns: dict[str, list[float]] = {}
-            # Re-run budget: on a PERSISTENTLY loaded machine every query
-            # drifts, and an unbounded repair pass (settle up to 180 s per
-            # re-run) could stretch the sweep into hours. Cap the whole
-            # pass; whatever stays drifted when the budget runs out ships
-            # under the contaminated flag — which is the honest outcome on
-            # a machine like that anyway.
-            rerun_deadline = time.monotonic() + float(
-                os.environ.get("SPARK_GRAFT_RERUN_BUDGET_S", "600")
-            )
-            for q in drifted:
-                spec = next(s for s in specs if s.name == q)
-                for _ in range(2):
-                    if time.monotonic() > rerun_deadline:
-                        print("bench: re-run budget exhausted", file=sys.stderr)
-                        break
-                    _settle(spark, _sent_base, limit_sec=45.0)
-                    try:
-                        t = _run_one(spec)
-                    except Exception as exc:
-                        print(f"bench: rerun {q} FAILED: {exc}", file=sys.stderr)
-                        break
-                    s_local = _settled_stamp(_sentinel_sec(spark, runs=1))
-                    reruns.setdefault(q, []).append(s_local)
-                    if s_local < stamps[q]:
-                        timings[q] = t
-                        stamps[q] = s_local
-                    if s_local <= DRIFT * _sent_base:
-                        break
-                if time.monotonic() > rerun_deadline:
-                    break
-            if reruns:
-                guard["rerun_sentinels"] = reruns
-            guard["contaminated_queries"] = sorted(
-                q for q, s in stamps.items()
-                if s > DRIFT * _sent_base and timings.get(q, -1.0) >= 0
-            )
-        return env, timings, guard
-
-    # Min-sentinel retry (round-10 verdict task 5): a co-tenant noise burst
-    # during THE sweep inflates every number uniformly; when the sweep's own
-    # sentinel reads >1.15x the baseline regime, re-run the whole sweep (up
-    # to SPARK_GRAFT_BENCH_ATTEMPTS, default 3) and keep the attempt with
-    # the smallest sentinel — the calmest environment actually observed.
-    # The per-query guard inside sweep() (r15) repairs MID-sweep bursts this
-    # whole-sweep retry can't see: its retry condition samples the opening
-    # sentinel only, which reads calm when load arrives later.
-    max_attempts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3")))
-    attempts: list[tuple[dict, dict[str, float], dict]] = []
-    for i in range(max_attempts):
-        _settle(spark, _sent_base)  # cheap when already calm
-        attempts.append(sweep())
-        s = attempts[-1][0].get("sentinel_sec")
-        if (
-            _sent_base is None
-            or s is None
-            or (s <= 1.15 * _sent_base and not attempts[-1][2].get("contaminated_queries"))
-        ):
-            break
-        print(
-            f"bench: attempt {i + 1} sentinel {s:.3f} (>1.15x baseline "
-            f"{_sent_base:.3f}) or unrepaired drifted queries — retrying",
-            file=sys.stderr,
-        )
-
-    def _attempt_rank(a: tuple[dict, dict[str, float], dict]) -> tuple:
-        # fewest unrepaired-contaminated queries first, then calmest sentinel
-        return (len(a[2].get("contaminated_queries", ())), a[0].get("sentinel_sec") or 1e9)
-
-    env, timings, guard = min(attempts, key=_attempt_rank)
-
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-
-    try:
-        env["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        pass
+            print(f"bench: {key} block skipped: {exc}", file=sys.stderr)
 
     # End-to-end micro-batch throughput (BASELINE.md bench family 7): rows/s
-    # across a real >=3-micro-batch replay of the date-partitioned lake
-    # through the tumbling-window aggregate (queries/lake.py).
+    # over a >=3-micro-batch replay of the date-partitioned lake.
     throughput: dict | None = None
     try:
         from flink_1_6_0_spark.queries.lake import streaming_throughput
@@ -435,152 +293,53 @@ def main() -> None:
         throughput = streaming_throughput(spark, sf_dir)
     except Exception as exc:
         print(f"bench: streaming throughput skipped: {exc}", file=sys.stderr)
+    try:
+        env["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
+    except OSError:
+        pass
 
     out = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(t for t in timings.values() if t >= 0), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "runs_per_query": runs,
         "env": env,
-        "bench_attempts": len(attempts),
-        "guard": guard,
+        **head,
     }
-    # Top-level contamination verdict (r14 verdict task 1): TRUE iff any
-    # shipped number — main-sweep query or scale block — was last measured
-    # under a regime whose local sentinel stayed >DRIFT x baseline after
-    # re-runs. A BENCH_r{N}.json with guard_active=true and this flag false
-    # can be trusted without a judge re-run; with it set, the listed
-    # queries are the ones whose timings are environment-inflated.
-    #
-    # KNOWN LIMIT (r15 ADVICE): the stamps are post-hoc — they bound
-    # contamination that PERSISTS past each measurement (co-tenant load,
-    # sustained pressure). A burst confined exactly to one measurement
-    # window, ending before its post-stamp, reads identically to the
-    # block's own GC tail and ships unflagged. The flag is a strong
-    # negative signal, not an absolute guarantee.
-    #
-    # guard_active (r15 ADVICE): when BENCHBASE is missing the guard never
-    # stamped anything — contaminated=null then, so consumers can tell a
-    # verified-clean run from an UNCHECKED one.
-    _contam = list(guard.get("contaminated_queries", ()))
-    for _blk in (sf1_block, dbgen_block):
-        if _blk is not None and _blk.get("block_contaminated"):
-            _contam.append(
-                "sf1_block" if _blk is sf1_block else "sf1_dbgen_block"
-            )
-    out["guard_active"] = _sent_base is not None
-    out["contaminated"] = bool(_contam) if _sent_base is not None else None
-    if _contam:
-        out["contaminated_list"] = _contam
+    out["guard_active"] = bool(base.get("sentinel_sec"))
+    out["contaminated"], contaminated = contamination(blocks, base.get("sentinel_sec"))
+    if contaminated:
+        out["contaminated_list"] = contaminated
     if throughput is not None:
         out["throughput_rows_s"] = throughput["rows_per_sec"]
         out["stream_batches"] = throughput["batches"]
         out["stream_rows"] = throughput["rows"]
 
-    # Attach the scale blocks measured BEFORE the main sweep (see above).
-    # `x10_ratio` is t(sf1)/t(sf0.1) from the SAME process: /10 of it is the
-    # per-decade exponent (1.0 = perfectly linear in data size).
-    if sf1_block is not None:
-        sf1_times = sf1_block["queries"]
-        sf1_block["x10_ratio"] = {
-            q: round(sf1_times[q] / timings[q], 2)
-            for q in sf1_times
-            if timings.get(q, -1) > 0
-        }
-        out["sf1"] = sf1_block
-    if dbgen_block is not None:
-        out["sf1_dbgen"] = dbgen_block
+    if abs(base.get("sf", -1) - sf) < 1e-9:
+        out.update(_vs_baseline(timings, dict(base.get("baseline", {}), **base.get("_added", {}))))
+        _normalize(out, head["sentinel_sec"], base.get("sentinel_sec"), "env_drift")
+        out["unmatched_new"] = sorted(
+            q for q, t in timings.items() if t >= 0 and q not in out.get("per_query_ratio", {})
+        )
+    for key in ("sf1", "sf1_dbgen"):
+        if key in blocks:
+            blk = out[key] = blocks[key]
+            if key == "sf1":  # t(sf1)/t(sf0.1) from one process: the per-decade scaling
+                blk["x10_ratio"] = {
+                    q: round(t / timings[q], 2)
+                    for q, t in blk["queries"].items() if t >= 0 and timings.get(q, -1) > 0
+                }
+            blk.update(_vs_baseline(blk["queries"], base.get(f"{key}_baseline", {})))
+            _normalize(blk, blk["sentinel_sec"], base.get(f"{key}_sentinel_sec"), "block_env_drift")
 
-    # Matched-set ratio vs the recorded per-query baselines (BENCHBASE.json).
     try:
-        base = json.load(open(BENCHBASE))
-        baseline = dict(base.get("baseline", {}), **base.get("_added", {}))
-        matched = [q for q, t in timings.items() if t >= 0 and q in baseline]
-        if matched and abs(base.get("sf", -1) - sf) < 1e-9:
-            cur = sum(timings[q] for q in matched)
-            ref = sum(baseline[q] for q in matched)
-            out["vs_baseline_matched"] = round(cur / ref, 3)
-            out["matched_queries"] = len(matched)
-            # sentinel-normalized ratio: divide out the machine-speed drift
-            # measured by the fixed-cost job; >1 here means PLAN-level change
-            sent_base = base.get("sentinel_sec")
-            if sent_base and env.get("sentinel_sec"):
-                drift = env["sentinel_sec"] / sent_base
-                out["env_drift"] = round(drift, 3)
-                out["vs_baseline_normalized"] = round(cur / ref / drift, 3)
-            out["per_query_ratio"] = {
-                q: round(timings[q] / baseline[q], 2) for q in matched
-            }
-            out["unmatched_new"] = sorted(q for q, t in timings.items() if t >= 0 and q not in baseline)
-        # sf1 sweep vs its own recorded baselines (first recording round
-        # seeds them; thereafter the 2x gate has a real sf1 evidence point)
-        for blk, bkey in (("sf1", "sf1_baseline"), ("sf1_dbgen", "sf1_dbgen_baseline")):
-            bb = base.get(bkey, {})
-            if blk in out and bb:
-                q1 = out[blk]["queries"]
-                m1 = [q for q, t in q1.items() if t >= 0 and q in bb]
-                if m1:
-                    r1 = sum(q1[q] for q in m1) / sum(bb[q] for q in m1)
-                    out[blk]["vs_baseline_matched"] = round(r1, 3)
-                    out[blk]["per_query_ratio"] = {
-                        q: round(q1[q] / bb[q], 2) for q in m1
-                    }
-                    # block-sentinel normalization (r14): divide out the
-                    # machine-speed drift between this block's env stamp and
-                    # the regime its baselines were recorded under
-                    sb = base.get(bkey.replace("_baseline", "_sentinel_sec"))
-                    snow = out[blk].get("env", {}).get("sentinel_sec")
-                    if sb and snow:
-                        out[blk]["block_env_drift"] = round(snow / sb, 3)
-                        out[blk]["vs_baseline_normalized"] = round(r1 / (snow / sb), 3)
-    except Exception as exc:
-        print(f"bench: baseline comparison skipped: {exc}", file=sys.stderr)
-
-    # Stdout hygiene (round-9 verdict item 3): the driver keeps only the TAIL
-    # of stdout (2000 chars observed) and parses it — the full document blew
-    # that budget, leaving BENCH_r*.json with `"parsed": null`. Ship the full
-    # record to BENCH_DETAIL.json and print ONE compact line that always fits.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    try:
-        with open(detail_path, "w") as fh:
+        with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as fh:
             json.dump(out, fh, indent=1)
     except OSError as exc:
         print(f"bench: detail write failed: {exc}", file=sys.stderr)
-
-    compact = {
-        k: out[k]
-        for k in (
-            "metric", "value", "unit", "queries", "sf", "runs_per_query",
-            "vs_baseline_matched", "matched_queries", "env_drift",
-            "vs_baseline_normalized", "throughput_rows_s", "stream_batches",
-            "guard_active", "contaminated", "contaminated_list",
-        )
-        if k in out
-    }
-    compact["sentinel_sec"] = env.get("sentinel_sec")
-    for blk in ("sf1", "sf1_dbgen"):
-        if blk in out:
-            compact[blk] = {
-                k: out[blk][k]
-                for k in ("sf", "vs_baseline_matched")
-                if k in out[blk]
-            }
-    compact["detail"] = "BENCH_DETAIL.json"
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # still too big (query set grew): coarsen, then trim
-        compact["queries"] = {q: round(t, 2) for q, t in compact["queries"].items()}
-        line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1900 and compact["queries"]:
-        # drop the fastest queries first — their timings matter least and the
-        # full set is in BENCH_DETAIL.json either way
-        drop = min(compact["queries"], key=lambda q: compact["queries"][q])
-        del compact["queries"][drop]
-        compact["queries_truncated"] = True
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(_compact_line(out))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

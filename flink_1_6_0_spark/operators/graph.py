@@ -116,7 +116,9 @@ def _checkpoint(df: DataFrame, mode: str, eager: bool = True) -> DataFrame:
                 )
             import tempfile
 
-            sc.setCheckpointDir(tempfile.mkdtemp(prefix="graph_ckpt_"))
+            from flink_1_6_0_spark.session import scratch_root
+
+            sc.setCheckpointDir(tempfile.mkdtemp(prefix="graph_ckpt_", dir=scratch_root()))
         ck = df.checkpoint(eager=eager)
         if not eager:
             # Dataset.checkpoint() wraps the marked-for-checkpoint RDD in a

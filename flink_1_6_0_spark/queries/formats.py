@@ -25,26 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.queries import T
 from flink_1_6_0_spark.registry import query
+from flink_1_6_0_spark.session import scratch_root
 from flink_1_6_0_spark.sources import batch as B
 
 
-_CLEANUP_REGISTERED = False
-
-
 def _path(name: str, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    global _CLEANUP_REGISTERED
     sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_fmt_{os.getpid()}")
-    if not _CLEANUP_REGISTERED:
-        # per-pid roots accumulate forever on long-lived CI hosts without
-        # this (round-8 advice) — remove the whole root at interpreter exit
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _CLEANUP_REGISTERED = True
-    return os.path.join(root, f"{name}_{sf_key}")
+    return os.path.join(scratch_root(), f"{name}_{sf_key}")
 
 
 @query(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.catalog import table_path
 from flink_1_6_0_spark.registry import query
+from flink_1_6_0_spark.session import scratch_root
 from flink_1_6_0_spark.sources.partitioned import (
     CEP_REPLAY_DISORDER_S,
     cep_funnel_stream,
@@ -576,7 +577,7 @@ def stream_multibatch_retract_chain(spark: SparkSession, sf_dir: str) -> DataFra
     from flink_1_6_0_spark.streaming.group_agg import chained_group_agg
 
     stream = partitioned_events_stream(spark, sf_dir).select("user_id")
-    work = tempfile.mkdtemp(prefix="retract_chain_")
+    work = tempfile.mkdtemp(prefix="retract_chain_", dir=scratch_root())
     final = {}
 
     def emit(df: DataFrame, epoch: int) -> None:

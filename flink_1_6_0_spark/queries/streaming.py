@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_1_6_0_spark.catalog import table_path
 from flink_1_6_0_spark.registry import query
+from flink_1_6_0_spark.session import scratch_root
 from flink_1_6_0_spark.sources.batch import read_parquet
 from flink_1_6_0_spark.sources.stream import (
     drain,
@@ -558,7 +559,7 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purch_stream = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"), "event_id", "value"
     )
-    state = tempfile.mkdtemp(prefix="asof_state_")
+    state = tempfile.mkdtemp(prefix="asof_state_", dir=scratch_root())
     # the per-epoch emissions are superseded by the final-state recompute
     # below; the drain only has to see at least one non-empty epoch
     drain(
@@ -707,7 +708,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs_path = os.path.join(sf_dir, "documents.parquet")
     corpus = read_parquet(spark, docs_path).filter(F.col("doc_id") % 5 != 0)
-    work = tempfile.mkdtemp(prefix="sid_")
+    work = tempfile.mkdtemp(prefix="sid_", dir=scratch_root())
     seed_dedup_state(corpus, "doc_id", "text", f"{work}/state")
     stream = read_parquet_stream(
         spark, docs_path, max_files_per_trigger=1_000_000

@@ -27,6 +27,28 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_root() -> str:
+    """This process's scratch directory under the system temp dir, created
+    on first use and removed at interpreter exit. Per-call state, checkpoint
+    and round-trip directories live under it: a query's lazy result may
+    still read them after the call returns, so they cannot be removed
+    earlier, and the pid keeps concurrent processes apart."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        root = os.path.join(tempfile.gettempdir(), f"spark_graft_{os.getpid()}")
+        os.makedirs(root, mode=0o700, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SCRATCH_ROOT = root
+    return _SCRATCH_ROOT
+
+
 def get_spark(
     app_name: str = "flink-1.6.0-spark",
     master: str | None = None,

@@ -742,3 +742,26 @@ def test_drain_raises_below_min_batches_and_stops_the_query(spark, sf_dir):
         drain_to_memory(_tumble_counts(spark, sf_dir), "complete", events, min_batches=2)
     assert {q.id for q in spark.streams.active} <= before
     assert spark.conf.get("spark.sql.shuffle.partitions") == before_conf
+
+
+def test_per_call_state_dirs_live_under_the_process_scratch_root(spark, sf_dir):
+    """The three streaming queries that make a state or checkpoint dir per
+    call put it under ``session.scratch_root()`` (removed at interpreter
+    exit), never directly under the system temp dir."""
+    import tempfile
+
+    from flink_1_6_0_spark import session
+    from flink_1_6_0_spark.registry import load_all
+
+    prefixes = ("asof_state_", "sid_", "retract_chain_")
+
+    def entries(d):
+        return {e for e in os.listdir(d) if e.startswith(prefixes)}
+
+    before = entries(tempfile.gettempdir())
+    specs = load_all()
+    for name in ("stream_asof_join", "stream_incremental_dedup", "stream_multibatch_retract_chain"):
+        specs[name].fn(spark, sf_dir).collect()
+    assert entries(tempfile.gettempdir()) - before == set()
+    made = entries(session.scratch_root())
+    assert all(any(e.startswith(p) for e in made) for p in prefixes), made
