@@ -3,11 +3,13 @@
 Usage: python bench.py [query ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_CPUS   (default: all cores)
-       SPARK_GRAFT_BENCH_RUNS (default 3 — timed rounds of the headline sweep)
-       SPARK_GRAFT_SF1    (default 1; 0 skips the two sf1 blocks)
 
 Query names, when given, restrict every block to those registered queries
 (an A/B is two checkouts each running ``python bench.py <query>``).
+
+This module is the one place that decides how a registered query is timed:
+the scale probes in ``scripts/`` time their directories through
+``time_queries`` too.
 
 Prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ..., "vs_baseline_matched": R, ...}; the
@@ -17,9 +19,10 @@ full record goes to BENCH_DETAIL.json. Every query runs to completion into a
 The rule, in order:
 
 - One wall-clock deadline, ``DEADLINE_S`` from process start; data
-  generation counts against it. The sf0.1 headline sweep runs first, then
-  the sf1 synth block and the sf1 dbgen block in the time that is left, then
-  the streaming rows/s figure.
+  generation counts against it. The sf0.1 headline sweep runs first (3
+  rounds), then, when the headline dir is sf0.1, the sf1 synth block and the
+  sf1 dbgen block (2 rounds each) in the time that is left, then the
+  streaming rows/s figure.
 - Every block goes through ``time_block``: one untimed warm-up pass at the
   block's own dir, then ``runs`` timed rounds interleaved round-robin (every
   query once per round, so drift hits every query alike), with one
@@ -44,9 +47,8 @@ import statistics
 import sys
 import time
 
-_START = time.monotonic()
-
 DEADLINE_S = 20 * 60
+_DEADLINE = time.monotonic() + DEADLINE_S  # from import, at process start
 DRIFT = 1.3
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -59,23 +61,30 @@ SF1_SET = (
 DBGEN_SET = ("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q21")
 
 
-def _consume(df) -> None:
+def consume(df) -> None:
+    """Run ``df``'s whole plan into the ``noop`` sink, collecting nothing."""
     df.write.format("noop").mode("overwrite").save()
 
 
 def _sentinel_sec(spark) -> float:
-    """Wall time of a fixed, data-independent 32-task SHUFFLE+AGG job — the
-    machine-speed proxy the normalized ratio divides by.
+    """Wall time of a fixed, data-independent SHUFFLE+AGG job sized to the
+    session — the machine-speed proxy the normalized ratio divides by.
 
-    It exercises the resources the queries contend for: 32 parallel map
-    tasks, a hash partial aggregate, one shuffle exchange and a final
-    aggregate — the dominant plan shape of the bench head. A single-stage
-    ``range().sum()`` gets a free core on a loaded machine and reads no
-    contention while every real query slows. BENCHBASE.json's
-    ``sentinel_sec`` was recorded for this job."""
+    It exercises the resources the queries contend for: one map task of
+    375 000 rows per session core (``_default_parallelism()``), a hash
+    partial aggregate, one shuffle exchange and a final aggregate — the
+    dominant plan shape of the bench head. One task per core keeps the work
+    per core fixed whatever the core count, so a run below 32 cores is not
+    read as a slow host. A single-stage ``range().sum()`` gets a free core on a loaded
+    machine and reads no contention while every real query slows.
+    BENCHBASE.json's ``sentinel_sec`` was recorded at 32 cores, where this
+    job is the same 12M rows in 32 tasks."""
+    from flink_1_6_0_spark.session import _default_parallelism
+
+    tasks = _default_parallelism()
     t0 = time.perf_counter()
     (
-        spark.range(0, 12_000_000, 1, 32)
+        spark.range(0, tasks * 375_000, 1, tasks)
         .selectExpr("id % 100000 AS k", "id AS v")
         .groupBy("k")
         .agg({"v": "sum"})
@@ -139,6 +148,48 @@ def time_block(run, stamp, d, names, runs, deadline, clock=time.monotonic) -> di
         "round_sentinels": stamps,
         "sentinel_sec": round(statistics.median(stamps), 3) if stamps else None,
         "cut_by_deadline": len(rounds) < runs,
+    }
+
+
+def time_queries(spark, d, names, runs) -> dict:
+    """``time_block`` over registered queries on ``spark`` under the process
+    deadline: a run writes the query's result to the noop sink, a stamp is
+    one ``_sentinel_sec``."""
+    from flink_1_6_0_spark.registry import load_all
+
+    specs = load_all()
+    return time_block(
+        lambda name, at: consume(specs[name].fn(spark, at)),
+        lambda: _sentinel_sec(spark),
+        d, names, runs, _DEADLINE,
+    )
+
+
+def ratio(t_base: float | None, t: float | None) -> float | None:
+    """``t / t_base`` to 2 places; None unless both are timings (a failed
+    query reads -1.0, an untimed one None)."""
+    if t_base is None or t is None or t_base <= 0 or t < 0:
+        return None
+    return round(t / t_base, 2)
+
+
+def streaming_throughput(spark, sf_dir: str) -> dict:
+    """End-to-end micro-batch throughput (BASELINE.md bench family 7): rows/s
+    over the full multi-batch replay of the date-partitioned lake through
+    stream_multibatch_tumble's plan and state partitions, measured from plan
+    build to last committed batch. Returns ``{rows, sec, rows_per_sec,
+    batches}``."""
+    from flink_1_6_0_spark.queries.lake import _drain_multibatch_tumble
+
+    t0 = time.perf_counter()
+    _, progress = _drain_multibatch_tumble(spark, sf_dir)
+    sec = time.perf_counter() - t0
+    rows = sum(p["numInputRows"] for p in progress)
+    return {
+        "rows": rows,
+        "sec": round(sec, 3),
+        "rows_per_sec": round(rows / sec, 1) if sec > 0 else -1.0,
+        "batches": len(progress),
     }
 
 
@@ -229,9 +280,7 @@ def main(argv: list[str]) -> None:
     from flink_1_6_0_spark.registry import load_all
     from flink_1_6_0_spark.session import get_spark
 
-    deadline = _START + DEADLINE_S
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
@@ -249,24 +298,18 @@ def main(argv: list[str]) -> None:
     spark = get_spark(app_name="flink-1.6.0-spark-bench")
     env = _env_block(spark)
 
-    def run(name: str, d: str) -> None:
-        _consume(specs[name].fn(spark, d))
-
-    def stamp() -> float:
-        return _sentinel_sec(spark)
-
-    stamp()  # compile the stamp job before its first recorded reading
-    head = time_block(run, stamp, sf_dir, names, runs, deadline)
+    _sentinel_sec(spark)  # compile the stamp job before its first recorded reading
+    head = time_queries(spark, sf_dir, names, 3)
     timings = head.pop("queries")
     blocks = {"headline": head}
 
-    scale = os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9
+    scale = abs(sf - 0.1) < 1e-9
     for key, subset, gen_key, note in (
         ("sf1", SF1_SET, "synth_or_cache_sec", "10x key-shifted scale-up of sf0.1 (scale_synth.py)"),
         ("sf1_dbgen", DBGEN_SET, "gen_or_cache_sec", "REAL TPC-H sf1 (DuckDB dbgen)"),
     ):
         block_names = tuple(n for n in subset if n in names)
-        if not (scale and block_names) or time.monotonic() >= deadline:
+        if not (scale and block_names) or time.monotonic() >= _DEADLINE:
             continue
         try:
             t0 = time.perf_counter()
@@ -280,16 +323,12 @@ def main(argv: list[str]) -> None:
                 d = tpch_dir(1.0)
             gen = round(time.perf_counter() - t0, 1)
             blocks[key] = {"sf": 1.0, "note": note, gen_key: gen,
-                           **time_block(run, stamp, d, block_names, 2, deadline)}
+                           **time_queries(spark, d, block_names, 2)}
         except Exception as exc:
             print(f"bench: {key} block skipped: {exc}", file=sys.stderr)
 
-    # End-to-end micro-batch throughput (BASELINE.md bench family 7): rows/s
-    # over a >=3-micro-batch replay of the date-partitioned lake.
     throughput: dict | None = None
     try:
-        from flink_1_6_0_spark.queries.lake import streaming_throughput
-
         throughput = streaming_throughput(spark, sf_dir)
     except Exception as exc:
         print(f"bench: streaming throughput skipped: {exc}", file=sys.stderr)
@@ -327,8 +366,8 @@ def main(argv: list[str]) -> None:
             blk = out[key] = blocks[key]
             if key == "sf1":  # t(sf1)/t(sf0.1) from one process: the per-decade scaling
                 blk["x10_ratio"] = {
-                    q: round(t / timings[q], 2)
-                    for q, t in blk["queries"].items() if t >= 0 and timings.get(q, -1) > 0
+                    q: r for q, t in blk["queries"].items()
+                    if (r := ratio(timings.get(q), t)) is not None
                 }
             blk.update(_vs_baseline(blk["queries"], base.get(f"{key}_baseline", {})))
             _normalize(blk, blk["sentinel_sec"], base.get(f"{key}_sentinel_sec"), "block_env_drift")

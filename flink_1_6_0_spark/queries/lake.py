@@ -12,8 +12,6 @@ hash match also certifies the materialization itself.
 
 from __future__ import annotations
 
-import time
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -87,9 +85,9 @@ def stream_multibatch_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drain_multibatch_tumble(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
-    """stream_multibatch_tumble's plan, drained: shared with bench.py's
-    streaming figure so the figure measures the registered query's plan at
-    its state-partition count."""
+    """stream_multibatch_tumble's plan, drained: shared with
+    ``bench.streaming_throughput`` so bench's rows/s figure measures the
+    registered query's plan at its state-partition count."""
     stream = partitioned_events_stream(spark, sf_dir)
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
@@ -532,24 +530,6 @@ def stream_cep_late_side(spark: SparkSession, sf_dir: str) -> DataFrame:
         disorder_seconds=CEP_REPLAY_DISORDER_S,
     )
     return drain_to_memory(out, "append", table_path(sf_dir, "events"), min_batches=2)[0]
-
-
-def streaming_throughput(spark: SparkSession, sf_dir: str) -> dict:
-    """End-to-end micro-batch throughput figure for bench.py (BASELINE.md
-    bench family 7): rows/s over the full multi-batch replay of the
-    partitioned lake through stream_multibatch_tumble's plan and state
-    partitions, measured from plan build to last committed batch. Returns
-    ``{rows, sec, rows_per_sec, batches}``."""
-    t0 = time.perf_counter()
-    _, progress = _drain_multibatch_tumble(spark, sf_dir)
-    sec = time.perf_counter() - t0
-    rows = sum(p["numInputRows"] for p in progress)
-    return {
-        "rows": rows,
-        "sec": round(sec, 3),
-        "rows_per_sec": round(rows / sec, 1) if sec > 0 else -1.0,
-        "batches": len(progress),
-    }
 
 
 @query(

@@ -10,9 +10,10 @@ preflight --dbgen gate.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -63,8 +64,6 @@ def main() -> int:
         print(f"skipping {len(skip)} declared: {sorted(skip)}", file=sys.stderr)
     spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
-    import os
-
     for t in TABLES:
         if os.path.isdir(f"{sf}/{t}.parquet"):
             # Spark-written table = a DIRECTORY of part files (the x10

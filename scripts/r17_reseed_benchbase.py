@@ -20,9 +20,7 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
-sys.path.insert(0, "/root/repo")
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 

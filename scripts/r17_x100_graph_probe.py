@@ -29,7 +29,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DECADES = [  # (edges, scale) — Graph500 convention: ~16 edges per vertex
     (100_000, 13),
@@ -57,6 +57,7 @@ def _edges_dir(spark, edges: int, scale: int) -> str:
 
 
 def run_one(op: str, edges: int, scale: int, eager: bool | None) -> None:
+    import bench
     from flink_1_6_0_spark.operators import graph as g
     from flink_1_6_0_spark.session import get_spark
 
@@ -81,7 +82,7 @@ def run_one(op: str, edges: int, scale: int, eager: bool | None) -> None:
     else:
         raise ValueError(op)
     t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
+    bench.consume(df)
     print(json.dumps({"sec": round(time.perf_counter() - t0, 2)}))
 
 

@@ -18,6 +18,11 @@ the realistic growth shape where dimension cardinality lags fact growth):
   lineitem/orders ×N: orderkeys shifted, same customers/suppliers/parts
   region/nation/customer/supplier/part: copied as-is
 
+Both directories are timed through ``bench.time_queries``: per directory a
+warm-up pass, then 3 round-robin rounds with one sentinel stamp each, under
+bench's deadline from process start. A failed query reads -1.0 and gets no
+ratio.
+
 Usage: python scripts/scale_probe.py [N] [out_dir] [probe_csv]
        (default N=8, out_dir=/tmp/spark_graft_scale, probe_csv=all; at high
        N skip the LSH probe — all N copies of a doc are TRUE mutual
@@ -31,14 +36,13 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flink_1_6_0_spark.registry import load_all
+import bench
 from flink_1_6_0_spark.session import get_spark
+from flink_1_6_0_spark.sources.scale_synth import synthesize
 
 BASE = "/root/testdata/sf0.1"
 # scan/agg/join/window/dedup/ann representatives — one per plan family
@@ -64,41 +68,19 @@ PROBES = [
 ]
 
 
-def synthesize(spark, n: int, out: str) -> None:
-    # shared with bench.py's sf1 block — one synthesis, two consumers
-    from flink_1_6_0_spark.sources.scale_synth import synthesize as _synth
-
-    _synth(spark, BASE, n, out)
-
-
-def _consume(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_scale"
     probes = sys.argv[3].split(",") if len(sys.argv) > 3 else PROBES
     spark = get_spark(app_name="scale-probe")
-    synthesize(spark, n, out)
-    specs = load_all()
+    synthesize(spark, BASE, n, out)  # shared with bench.py's sf1 block
+    t1 = bench.time_queries(spark, BASE, probes, 3)["queries"]
+    tn = bench.time_queries(spark, out, probes, 3)["queries"]
     results = {}
     for name in probes:
-        fn = specs[name].fn
-        _consume(fn(spark, BASE))  # warm plan/codegen
-        t1 = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _consume(fn(spark, BASE))
-            t1.append(time.perf_counter() - t0)
-        tn = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _consume(fn(spark, out))
-            tn.append(time.perf_counter() - t0)
-        a, b = statistics.median(t1), statistics.median(tn)
-        results[name] = {"t1": round(a, 3), "tn": round(b, 3), "ratio": round(b / a, 2)}
-        print(f"{name}: 1x={a:.3f}s {n}x={b:.3f}s ratio={b / a:.2f}", file=sys.stderr)
+        a, b = t1.get(name), tn.get(name)
+        results[name] = {"t1": a, "tn": b, "ratio": bench.ratio(a, b)}
+        print(f"{name}: 1x={a}s {n}x={b}s ratio={results[name]['ratio']}", file=sys.stderr)
     print(json.dumps({"n": n, "queries": results}))
 
 

@@ -24,6 +24,11 @@ block instead (the r12s2 treatment of the one-input family); the hot-key
 mitigation for them is the same as the reference's: key design, or the
 Spark-native stream-stream join path for equi-dominant workloads.
 
+Every directory is timed through ``bench.time_queries``: per directory a
+warm-up pass, then 2 round-robin rounds with one sentinel stamp each, under
+bench's deadline from process start. A failed query reads -1.0 and gets no
+ratio.
+
 Usage: python scripts/skew_probe.py [n] [skew_mod]
 Appends a block to SCALEPROBE.json (runs[]) and prints it.
 """
@@ -32,42 +37,25 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
 
-from flink_1_6_0_spark.registry import load_all
+import bench
 from flink_1_6_0_spark.session import get_spark
+from flink_1_6_0_spark.sources.scale_synth import synthesize
 
 BASE = "/root/testdata/sf0.1"
 SKEW_QUERIES = ["stream_group_agg_retention", "stream_over_proctime_rows", "stream_proctime_sort"]
 JOIN_QUERIES = ["stream_timebounded_join_kernel", "stream_nonwindow_join_retention"]
 
 
-def _consume(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _median_time(fn, spark, d, runs=2):
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        _consume(fn(spark, d))
-        samples.append(time.perf_counter() - t0)
-    return round(statistics.median(samples), 3)
-
-
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 64
     skew_mod = int(sys.argv[2]) if len(sys.argv) > 2 else 10  # 1/10th of rows -> user 0
     spark = get_spark(app_name="skew-probe")
-    specs = load_all()
-
-    from flink_1_6_0_spark.sources.scale_synth import synthesize
 
     uni = f"/tmp/spark_graft_skew_uni{n}"
     synthesize(spark, BASE, n, uni)
@@ -90,33 +78,33 @@ def main() -> None:
     except OSError:
         load = None
 
-    results = {}
-    for name in SKEW_QUERIES:
-        fn = specs[name].fn
-        _consume(fn(spark, BASE))  # warm
-        t1 = _median_time(fn, spark, BASE)
-        t_uni = _median_time(fn, spark, uni)
-        t_skew = _median_time(fn, spark, skew)
-        results[name] = {
-            "t1": t1,
-            "t_uniform": t_uni,
-            "t_skew": t_skew,
-            "uniform_ratio": round(t_uni / t1, 2),
-            "skew_vs_uniform": round(t_skew / t_uni, 2),
-        }
-        print(f"{name}: 1x={t1}s {n}x_uni={t_uni}s {n}x_skew={t_skew}s", file=sys.stderr)
-
-    join_results = {}
     join_n = 8
     juni = f"/tmp/spark_graft_skew_uni{join_n}"
     synthesize(spark, BASE, join_n, juni)
+
+    def timed(d, names):
+        return bench.time_queries(spark, d, names, 2)["queries"]
+
+    t1 = timed(BASE, SKEW_QUERIES + JOIN_QUERIES)
+    t_uni = timed(uni, SKEW_QUERIES)
+    t_skew = timed(skew, SKEW_QUERIES)
+    t_join = timed(juni, JOIN_QUERIES)
+    results = {}
+    for name in SKEW_QUERIES:
+        a, b, c = t1.get(name), t_uni.get(name), t_skew.get(name)
+        results[name] = {
+            "t1": a,
+            "t_uniform": b,
+            "t_skew": c,
+            "uniform_ratio": bench.ratio(a, b),
+            "skew_vs_uniform": bench.ratio(b, c),
+        }
+        print(f"{name}: 1x={a}s {n}x_uni={b}s {n}x_skew={c}s", file=sys.stderr)
+    join_results = {}
     for name in JOIN_QUERIES:
-        fn = specs[name].fn
-        _consume(fn(spark, BASE))
-        t1 = _median_time(fn, spark, BASE)
-        tn = _median_time(fn, spark, juni)
-        join_results[name] = {"t1": t1, "tn": tn, "ratio": round(tn / t1, 2)}
-        print(f"{name}: 1x={t1}s {join_n}x={tn}s ratio={tn / t1:.2f}", file=sys.stderr)
+        a, b = t1.get(name), t_join.get(name)
+        join_results[name] = {"t1": a, "tn": b, "ratio": bench.ratio(a, b)}
+        print(f"{name}: 1x={a}s {join_n}x={b}s ratio={join_results[name]['ratio']}", file=sys.stderr)
 
     block = {
         "round": "r13",

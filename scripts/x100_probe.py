@@ -28,7 +28,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 PROBE_QUERIES = (
     "tpch_q1",
@@ -110,12 +111,12 @@ def main() -> int:
     rc = subprocess.call(
         [
             sys.executable,
-            "scripts/oracle_check.py",
+            os.path.join(ROOT, "scripts", "oracle_check.py"),
             d,
             "--names",
             ",".join(PROBE_QUERIES),
         ],
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     return rc
 

@@ -1,5 +1,6 @@
 """bench.py's timing loop under a fake clock: deadline, round order, medians
-over completed rounds, failures and the contamination verdict (no Spark)."""
+over completed rounds, failures and the contamination verdict; and, on a
+real session, the sentinel stamp's size."""
 
 from __future__ import annotations
 
@@ -129,3 +130,21 @@ def test_env_block_records_the_session_parallelism(monkeypatch):
     jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(System=system)))
     spark = SimpleNamespace(version="4.1.2", sparkContext=SimpleNamespace(_jvm=jvm))
     assert bench._env_block(spark)["cpus"] == cpus
+
+
+def test_the_sentinel_runs_one_map_task_per_session_core(spark):
+    """The stamp scales with the session: ``_default_parallelism()`` map
+    tasks, one per core, whatever the core count."""
+    from flink_1_6_0_spark.session import _default_parallelism
+
+    sc = spark.sparkContext
+    group = "sentinel-stamp"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, "sentinel stamp")
+    try:
+        bench._sentinel_sec(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    assert tracker.getStageInfo(min(stages)).numTasks == _default_parallelism()

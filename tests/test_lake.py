@@ -76,7 +76,7 @@ def test_multibatch_dedup_state_survives_batch_boundaries(spark, sf_dir, duck):
 
 
 def test_streaming_throughput_figure(spark, sf_dir):
-    from flink_1_6_0_spark.queries.lake import streaming_throughput
+    from bench import streaming_throughput
 
     t = streaming_throughput(spark, sf_dir)
     assert t["batches"] >= 3

@@ -1,6 +1,7 @@
-"""One bounded-stream driver, one file-replay reader: a fast source scan
-that keeps a sixth driver or reader from creeping back into the engine, its
-scripts or the bench."""
+"""One bounded-stream driver, one file-replay reader, one query timer: a
+fast source scan that keeps a second driver, reader or timing loop from
+creeping back into the engine, its scripts or the bench, and keeps the
+scripts importing the checkout they live in."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import pathlib
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 ENGINE = REPO / "flink_1_6_0_spark"
+SCRIPTS = sorted((REPO / "scripts").glob("*.py"))
 
 # sources/stream.py owns the driver and the parquet replay reader;
 # streaming/iterate.py reads its feedback directory back as a stream and
@@ -28,9 +30,24 @@ def _uses(token: str, files) -> set[str]:
 
 
 def test_only_the_driver_drains_a_stream():
-    files = [*ENGINE.rglob("*.py"), *(REPO / "scripts").glob("*.py"), REPO / "bench.py"]
+    files = [*ENGINE.rglob("*.py"), *SCRIPTS, REPO / "bench.py"]
     assert _uses("processAllAvailable(", files) == {"flink_1_6_0_spark/sources/stream.py"}
 
 
 def test_only_the_sources_build_a_read_stream():
     assert _uses("readStream", ENGINE.rglob("*.py")) <= READ_STREAM_OWNERS
+
+
+def test_only_bench_times_a_query():
+    """bench.py owns the noop sink and every timing loop; the engine keeps
+    no timer of its own."""
+    files = [*ENGINE.rglob("*.py"), *SCRIPTS, REPO / "bench.py"]
+    assert _uses('format("noop")', files) == {"bench.py"}
+    assert _uses("perf_counter", ENGINE.rglob("*.py")) == set()
+
+
+def test_scripts_import_their_own_checkout():
+    """A script run from a second checkout imports and gates that checkout's
+    engine: no script names an absolute checkout path."""
+    assert _uses(f'"{REPO}"', SCRIPTS) == set()
+    assert _uses('sys.path.insert(0, "', SCRIPTS) == set()
