@@ -29,6 +29,9 @@ def _default_parallelism() -> int:
 
 _SCRATCH_ROOT: str | None = None
 
+# the checkout root: the directory that holds the flink_1_6_0_spark package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def scratch_root() -> str:
     """This process's scratch directory under the system temp dir, created
@@ -61,6 +64,12 @@ def get_spark(
     (StreamExecutionEnvironment.java:1588) — a process-wide environment the
     rest of the API hangs off.
     """
+    # Python workers import the engine through PYTHONPATH (the JVM passes its
+    # environment on), not through this process's sys.path: with the checkout
+    # root on it a script works from any working directory
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if _ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in [_ROOT, *paths] if p)
     cpus = _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

@@ -6,7 +6,7 @@ within:239) executed by an NFA (nfa/NFA.java:82).
 
 Spark has no CEP; this module provides:
 - the Pattern DSL (begin/next/followed_by/followed_by_any/within),
-- a batch executor: per-key ordered scan inside ``applyInPandas`` (Arrow
+- a batch executor: per-key ordered scan through ``keyed.per_key`` (Arrow
   batches; each key's sequence is processed independently, so the operator
   scales with key count like the reference's keyed NFA),
 - a streaming executor: ``applyInPandasWithState`` keeps a bounded buffer of
@@ -53,6 +53,8 @@ from typing import Any
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from flink_1_6_0_spark.streaming.keyed import per_key, schema_fields, schema_names
 
 NEXT = "next"
 FOLLOWED_BY = "followed_by"
@@ -907,44 +909,98 @@ def _validate_pattern(pattern: Pattern) -> None:
             )
 
 
-def _match_frame(
-    pdf: pd.DataFrame,
+def _cep_per_key(
+    df: DataFrame,
     pattern: Pattern,
     key_cols: list[str],
     ts_col: str,
-    id_col: str,
-    comparator_cols: list[str] | None = None,
-) -> pd.DataFrame:
-    sort_cols = [ts_col] + list(comparator_cols or ()) + [id_col]
-    pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-    events = pdf.to_dict("records")
-    for ev in events:
-        ev["__ts"] = pd.Timestamp(ev[ts_col]).value // 1000  # exact epoch-µs
-    out_cols = _stage_out_cols(pattern)
-    rows = []
-    for match in _scan(events, pattern):
-        row = {k: events[0][k] for k in key_cols}
-        for st, (col, _), idxs in zip(
-            _output_stages(pattern), out_cols, _output_match(pattern, match)
-        ):
+    order: list[str],
+    out_ddl: str,
+    emit,
+    with_timeouts: bool,
+) -> DataFrame:
+    """The batch executor behind the four ``cep_batch*`` entry points. Per
+    key (:func:`keyed.per_key`, rows sorted by ``order``) the events become
+    dicts carrying their exact epoch-µs ``__ts``; one :func:`_scan` finds
+    the matches and, only when ``with_timeouts``, the dead partials
+    (deduplicated, first seen first); ``emit(keyvals, events, matches,
+    dead)`` turns them into rows. Output: the key columns (long), then
+    ``out_ddl``."""
+    schema = ", ".join([f"{k} long" for k in key_cols] + [out_ddl])
+
+    def body(key, pdf: pd.DataFrame) -> list[dict]:
+        events = pdf.to_dict("records")
+        for ev in events:
+            ev["__ts"] = pd.Timestamp(ev[ts_col]).value // 1000  # exact epoch-µs
+        dead: list | None = [] if with_timeouts else None
+        matches = _scan(events, pattern, timeouts=dead)
+        return emit(dict(zip(key_cols, key)), events, matches, list(dict.fromkeys(dead or ())))
+
+    return per_key(df, key_cols, order, body, schema)
+
+
+def _id_emitter(pattern: Pattern, id_col: str):
+    """Rows of matched ids: one per match with ``<stage>_id`` (or the
+    ``<stage>_ids`` array), then one per dead partial with NULL ids for the
+    unreached stages, ``timed_out=true`` and ``pending_stage`` naming the
+    stage that never matched. The schema's names pick the columns, so
+    :func:`cep_batch` drops the two tags."""
+    stages = _output_stages(pattern)
+    cols = [c for c, _ in _stage_out_cols(pattern)]
+
+    def ids_row(keyvals: dict, events: list[dict], match: tuple, no_ids) -> dict:
+        row = dict(keyvals)
+        for st, col, idxs in zip(stages, cols, _output_match(pattern, match)):
             ids = [events[i][id_col] for i in idxs]
-            row[col] = ids if st.emits_array else (ids[0] if ids else None)
-        rows.append(row)
-    cols = key_cols + [c for c, _ in out_cols]
-    return pd.DataFrame(rows, columns=cols)
+            row[col] = (ids or no_ids) if st.emits_array else (ids[0] if ids else None)
+        return row
+
+    def emit(keyvals, events, matches, dead) -> list[dict]:
+        rows = [
+            {**ids_row(keyvals, events, m, []), "timed_out": False, "pending_stage": None}
+            for m in matches
+        ]
+        for acc, stage_i in dead:
+            padded = acc + ((),) * (len(pattern.stages) - len(acc))
+            row = ids_row(keyvals, events, padded, None)
+            row["timed_out"] = True
+            row["pending_stage"] = pattern.stages[stage_i].name
+            rows.append(row)
+        return rows
+
+    return emit
 
 
-def _keyed_wide(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Hash-partition on the keys at the CONFIGURED shuffle width before a
-    Python kernel stage. AQE coalesces post-shuffle partitions by BYTE size,
-    which is the wrong cost model for a CPU-bound per-key NFA scan — at
-    small-to-medium byte sizes it collapsed the CEP stage to 3 tasks on 32
-    cores. An explicit repartition(n, keys) is exempt from AQE coalescing
-    and Catalyst elides the groupBy's own exchange (same partitioning), so
-    this costs no extra shuffle at any scale."""
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return df.repartition(n, *key_cols)
+def _select_emitter(pattern: Pattern, names: list[str], select_fn, flat: bool, timeout_fn):
+    """Rows of the user functions: ``select_fn({stage: [events]})`` per
+    match, then ``timeout_fn(partial, timeout_ts)`` per dead partial, each
+    tagged ``timed_out`` and NULL-filled over ``names``. ``flat=True``
+    makes both return iterables of dicts."""
+    stages = _output_stages(pattern)
+    nulls = dict.fromkeys(names)
+
+    def emit(keyvals, events, matches, dead) -> list[dict]:
+        rows = []
+        for match in matches:
+            mm = {
+                st.name: [events[i] for i in idxs]
+                for st, idxs in zip(stages, _output_match(pattern, match))
+            }
+            for o in select_fn(mm) if flat else [select_fn(mm)]:
+                rows.append({**keyvals, "timed_out": False, **nulls, **o})
+        for acc, _stage_i in dead:
+            padded = acc + ((),) * (len(pattern.stages) - len(acc))
+            partial = {}
+            for st, idxs in zip(stages, _output_match(pattern, padded)):
+                if idxs:
+                    partial[st.name] = [events[i] for i in idxs]
+            start = min(events[i]["__ts"] for idxs in acc for i in idxs)
+            timeout_ts = int(start + pattern.within_micros)
+            for o in timeout_fn(partial, timeout_ts) if flat else [timeout_fn(partial, timeout_ts)]:
+                rows.append({**keyvals, "timed_out": True, **nulls, **o})
+        return rows
+
+    return emit
 
 
 def cep_batch(
@@ -968,38 +1024,11 @@ def cep_batch(
     keep the fixed (ts, id) default: every cross-batch oracle in the repo
     assumes that total order."""
     _validate_pattern(pattern)
-    schema = ", ".join(
-        [f"{k} long" for k in key_cols] + [f"{c} {t}" for c, t in _stage_out_cols(pattern)]
+    out_ddl = ", ".join(f"{c} {t}" for c, t in _stage_out_cols(pattern))
+    order = [ts_col, *(comparator_cols or ()), id_col]
+    return _cep_per_key(
+        df, pattern, key_cols, ts_col, order, out_ddl, _id_emitter(pattern, id_col), False
     )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _match_frame(pdf, pattern, key_cols, ts_col, id_col, comparator_cols)
-
-    return _keyed_wide(df, key_cols).groupBy(*key_cols).applyInPandas(fn, schema=schema)
-
-
-def _schema_fields(ddl: str) -> list[tuple[str, str]]:
-    """(name, type) pairs of a flat Spark DDL string ('a long, b double').
-    Splits on top-level commas only, so parameterized types
-    (``map<string,int>``, ``struct<a:int,b:int>``) don't shear."""
-    fields, depth, start = [], 0, 0
-    for i, ch in enumerate(ddl + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            part = ddl[start:i].strip()
-            if part:
-                name, _, typ = part.partition(" ")
-                fields.append((name, typ.strip()))
-            start = i + 1
-    return fields
-
-
-def _schema_field_names(ddl: str) -> list[str]:
-    """Field names of a flat Spark DDL string ('a long, b double, ...')."""
-    return [n for n, _ in _schema_fields(ddl)]
 
 
 def _merge_either_schema(select_schema: str, timeout_schema: str):
@@ -1009,8 +1038,8 @@ def _merge_either_schema(select_schema: str, timeout_schema: str):
     columns NULL-filled on the other side). A name in both schemas must
     agree on type (then the two sides share that column). Returns
     ``(union_ddl, select_names, timeout_names, all_names)``."""
-    sel = _schema_fields(select_schema)
-    tmo = _schema_fields(timeout_schema)
+    sel = schema_fields(select_schema)
+    tmo = schema_fields(timeout_schema)
     types: dict[str, str] = {}
     order: list[tuple[str, str]] = []
     for name, typ in sel + tmo:
@@ -1055,29 +1084,10 @@ def cep_batch_select(
     exchange, per-key Arrow batches, the user function runs inside the
     same worker pass that scanned the key."""
     _validate_pattern(pattern)
-    out_names = _schema_field_names(output_schema)
-    schema = ", ".join([f"{k} long" for k in key_cols] + [output_schema])
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort").reset_index(drop=True)
-        events = pdf.to_dict("records")
-        for ev in events:
-            ev["__ts"] = pd.Timestamp(ev[ts_col]).value // 1000
-        keyvals = {k: events[0][k] for k in key_cols}
-        rows = []
-        for match in _scan(events, pattern):
-            mm = {
-                st.name: [events[i] for i in idxs]
-                for st, idxs in zip(
-                    _output_stages(pattern), _output_match(pattern, match)
-                )
-            }
-            outs = select_fn(mm) if flat else [select_fn(mm)]
-            for o in outs:
-                rows.append({**keyvals, **o})
-        return pd.DataFrame(rows, columns=key_cols + out_names)
-
-    return _keyed_wide(df, key_cols).groupBy(*key_cols).applyInPandas(fn, schema=schema)
+    emit = _select_emitter(pattern, schema_names(output_schema), select_fn, flat, None)
+    return _cep_per_key(
+        df, pattern, key_cols, ts_col, [ts_col, id_col], output_schema, emit, False
+    )
 
 
 def cep_batch_with_timeouts(
@@ -1092,50 +1102,13 @@ def cep_batch_with_timeouts(
     matched. Partials that are prefixes of an emitted full match are not
     reported (they completed)."""
     _validate_pattern(pattern)
-    out_cols = _stage_out_cols(pattern)
-    schema = ", ".join(
-        [f"{k} long" for k in key_cols]
-        + [f"{c} {t}" for c, t in out_cols]
+    out_ddl = ", ".join(
+        [f"{c} {t}" for c, t in _stage_out_cols(pattern)]
         + ["timed_out boolean", "pending_stage string"]
     )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort").reset_index(drop=True)
-        events = pdf.to_dict("records")
-        for ev in events:
-            ev["__ts"] = pd.Timestamp(ev[ts_col]).value // 1000
-        dead: list = []
-        matches = _scan(events, pattern, timeouts=dead)
-        rows = []
-        for match in matches:
-            row = {k: events[0][k] for k in key_cols}
-            for st, (col, _), idxs in zip(
-                _output_stages(pattern), out_cols, _output_match(pattern, match)
-            ):
-                ids = [events[i][id_col] for i in idxs]
-                row[col] = ids if st.emits_array else (ids[0] if ids else None)
-            row["timed_out"], row["pending_stage"] = False, None
-            rows.append(row)
-        seen: set = set()
-        for acc, stage_i in dead:
-            key = (acc, stage_i)
-            if key in seen:
-                continue
-            seen.add(key)
-            row = {k: events[0][k] for k in key_cols}
-            padded = acc + ((),) * (len(pattern.stages) - len(acc))
-            for st, (col, _), idxs in zip(
-                _output_stages(pattern), out_cols, _output_match(pattern, padded)
-            ):
-                ids = [events[i][id_col] for i in idxs]
-                row[col] = (ids if ids else None) if st.emits_array else (ids[0] if ids else None)
-            row["timed_out"] = True
-            row["pending_stage"] = pattern.stages[stage_i].name
-            rows.append(row)
-        cols = key_cols + [c for c, _ in out_cols] + ["timed_out", "pending_stage"]
-        return pd.DataFrame(rows, columns=cols)
-
-    return _keyed_wide(df, key_cols).groupBy(*key_cols).applyInPandas(fn, schema=schema)
+    return _cep_per_key(
+        df, pattern, key_cols, ts_col, [ts_col, id_col], out_ddl, _id_emitter(pattern, id_col), True
+    )
 
 
 def cep_batch_select_with_timeouts(
@@ -1178,59 +1151,13 @@ def cep_batch_select_with_timeouts(
             "the timeout-handler select overload requires within(): a "
             "partial can only time out against a window"
         )
-    within_us = pattern.within_micros
     union_ddl, _sel_names, _tmo_names, all_names = _merge_either_schema(
         output_schema, timeout_schema
     )
-    schema = ", ".join(
-        [f"{k} long" for k in key_cols] + ["timed_out boolean", union_ddl]
+    emit = _select_emitter(pattern, all_names, select_fn, flat, timeout_fn)
+    return _cep_per_key(
+        df, pattern, key_cols, ts_col, [ts_col, id_col], f"timed_out boolean, {union_ddl}", emit, True
     )
-    cols = key_cols + ["timed_out"] + all_names
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort").reset_index(drop=True)
-        events = pdf.to_dict("records")
-        for ev in events:
-            ev["__ts"] = pd.Timestamp(ev[ts_col]).value // 1000
-        keyvals = {k: events[0][k] for k in key_cols}
-        nulls = {c: None for c in all_names}
-        dead: list = []
-        matches = _scan(events, pattern, timeouts=dead)
-        rows = []
-        for match in matches:
-            mm = {
-                st.name: [events[i] for i in idxs]
-                for st, idxs in zip(
-                    _output_stages(pattern), _output_match(pattern, match)
-                )
-            }
-            outs = select_fn(mm) if flat else [select_fn(mm)]
-            for o in outs:
-                rows.append({**keyvals, "timed_out": False, **nulls, **o})
-        seen: set = set()
-        for acc, stage_i in dead:
-            key = (acc, stage_i)
-            if key in seen:
-                continue
-            seen.add(key)
-            padded = acc + ((),) * (len(pattern.stages) - len(acc))
-            partial = {}
-            for st, idxs in zip(_output_stages(pattern), _output_match(pattern, padded)):
-                evs = [events[i] for i in idxs]
-                if evs:
-                    partial[st.name] = evs
-            start = min(events[i]["__ts"] for idxs in acc for i in idxs)
-            timeout_ts = int(start + within_us)
-            outs = (
-                timeout_fn(partial, timeout_ts)
-                if flat
-                else [timeout_fn(partial, timeout_ts)]
-            )
-            for o in outs:
-                rows.append({**keyvals, "timed_out": True, **nulls, **o})
-        return pd.DataFrame(rows, columns=cols)
-
-    return _keyed_wide(df, key_cols).groupBy(*key_cols).applyInPandas(fn, schema=schema)
 
 
 def _match_monotone(pattern: Pattern) -> bool:
@@ -1338,7 +1265,7 @@ def cep_stream(
     ``comparator_cols`` is the streaming EventComparator (CEP.java:51) —
     same-timestamp events are folded into the NFA in ``(ts,
     *comparator_cols, id)`` order, matching the batch executor's
-    ``_match_frame`` sort exactly (id stays the final tiebreak). The
+    :func:`cep_batch` sort exactly (id stays the final tiebreak). The
     comparator columns ride the state buffer like ``attr_cols`` opt-ins
     (they are auto-added to it), so the scan order is stable across
     micro-batch boundaries: the fold buffer is fully re-sorted on every
@@ -1575,7 +1502,7 @@ def _stream_kernel(
         _u, _sn, _tn, either_names = _merge_either_schema(output_schema, timeout_schema)
         out_cols = ["timed_out"] + either_names
     elif select_fn is not None:
-        out_cols = _schema_field_names(output_schema)
+        out_cols = schema_names(output_schema)
     else:
         out_cols = [c for c, _ in out_col_types] + (
             ["timed_out", "pending_stage"] if with_timeouts else []
@@ -1614,7 +1541,7 @@ def _stream_kernel(
             raw.append(e)
         if comparator_cols:
             # EventComparator order: (ts, *comparator_cols, id) — the exact
-            # batch _match_frame sort; None sorts last per column, matching
+            # batch cep_batch sort; None sorts last per column, matching
             # pandas sort_values' na_position='last'
             events = sorted(
                 raw,

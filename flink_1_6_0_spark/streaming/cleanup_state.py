@@ -21,7 +21,7 @@ time, so that mode runs here as explicit keyed kernels:
 
 - per key the kernel is a pure-Python state machine (exactly the reference's
   per-key ValueState/MapState layout),
-- batch / replay execution distributes BY KEY via ``applyInPandas`` (timers
+- batch / replay execution distributes BY KEY via ``keyed.per_key`` (timers
   are per-key, so per-key replay is semantics-preserving and embarrassingly
   parallel — no cross-key state exists in any of these functions),
 - live streams run via ``applyInPandasWithState`` with
@@ -34,8 +34,11 @@ shuffles once on the key and never collects.
 
 from __future__ import annotations
 
+import functools
 import heapq
 from dataclasses import dataclass, field
+
+from flink_1_6_0_spark.streaming.keyed import order_spec, per_key
 
 __all__ = [
     "StreamQueryConfig",
@@ -857,59 +860,29 @@ def replay_keyed_proctime(rows, proc_times, kernel: CleanupKernelBase):
     return h.output
 
 
-def harness_snapshot(h: KeyedProcessHarness) -> dict:
-    """Serializable snapshot of a harness: per-key state dicts, pending
-    timers, clock and watermark — everything a LATER harness (possibly in a
-    different task) needs to continue a key's replay exactly. This is the
-    hot-key chunked-replay primitive (SCALING.md): split a giant key's rows
-    into time-ordered chunks and carry the snapshot between them."""
-    return {
-        "states": h.states,
-        "timers": sorted(h._timer_set, key=lambda e: (e[1], e[2])),
-        "proc_time": h.proc_time,
-        "watermark": h.watermark,
-    }
-
-
-def harness_restore(kernel: CleanupKernelBase, key_fn, snap: dict) -> KeyedProcessHarness:
-    """Rebuild a harness from :func:`harness_snapshot` — pending timers
-    re-arm in timestamp order (registration-order ties cannot matter across
-    a snapshot boundary: Flink's InternalTimerService snapshots are
-    timestamp-ordered sets too)."""
-    h = KeyedProcessHarness(kernel, key_fn)
-    h.states = snap["states"]
-    h.proc_time = snap["proc_time"]
-    h.watermark = snap["watermark"]
-    for key, domain, t in snap["timers"]:
-        h._register(t, key, domain)
-    return h
-
-
-def chunked_replay_keyed_proctime(rows, proc_times, make_kernel, chunk_size: int):
-    """:func:`replay_keyed_proctime` in ts-ordered chunks with the harness
-    snapshot carried between chunks — the mitigation for a key too wide for
-    one task. EXACT for the cleanup-state kernels: their per-key state is a
-    small dict and timers are per-key, so chunk boundaries are invisible to
-    the state machine (pinned by test_chunked_replay_exactness)."""
-    out: list = []
-    snap = None
-    for i in range(0, len(rows), chunk_size):
-        kernel = make_kernel()
-        if snap is None:
-            h = KeyedProcessHarness(kernel, key_fn=lambda r: 0)
-        else:
-            h = harness_restore(kernel, lambda r: 0, snap)
-        for row, pt in zip(rows[i : i + chunk_size], proc_times[i : i + chunk_size]):
-            h.set_processing_time(pt)
-            h.process_element(row)
-        out.extend(h.output)
-        snap = harness_snapshot(h)
-    return out
-
-
 # ---------------------------------------------------------------------------
-# Distributed replay entrypoints (applyInPandas per key — no driver loop)
+# Distributed replay entrypoints (keyed.per_key — no driver loop)
 # ---------------------------------------------------------------------------
+
+
+def _row_comparator(columns: list[str], sort_cols):
+    """CollectionRowComparator over row tuples laid out as ``columns``:
+    ``sort_cols`` entries are column names or (name, ascending) pairs, and
+    any orderable field type works — descending is a field-by-field
+    comparator flip, not a value negation, so strings sort too. Returns the
+    cmp function (``functools.cmp_to_key`` wrappers do not pickle)."""
+    spec = [(columns.index(c), asc) for c, asc in order_spec(sort_cols)]
+
+    def compare(a, b):
+        for i, asc in spec:
+            av, bv = a[i], b[i]
+            if av == bv:
+                continue
+            lt = -1 if asc else 1
+            return lt if av < bv else -lt
+        return 0
+
+    return compare
 
 
 def group_agg_retention_df(
@@ -930,12 +903,9 @@ def group_agg_retention_df(
     Scale: one shuffle on ``key_col``; each key replays independently inside
     an Arrow batch (timers are per-key, so this is exact, not approximate).
     """
-    import pandas as pd
-
     qc = StreamQueryConfig(min_retention_ms, max_retention_ms)
 
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([proc_time_col, id_col], kind="mergesort")
+    def replay(key, pdf):
         kernel = GroupAggKernel(
             RowAggregator(arity=2, forwarded=[(0, 0)], aggs=[(1, 1, SumWithRetract())]),
             generate_retraction=False,
@@ -943,17 +913,15 @@ def group_agg_retention_df(
         )
         rows = list(zip(pdf[id_col], pdf[value_col]))
         out = replay_keyed_proctime(rows, list(pdf[proc_time_col]), kernel)
-        key = pdf[key_col].iloc[0]
-        return pd.DataFrame(
-            {
-                id_col: [r[0] for r, _ in out],
-                key_col: key,
-                "agg_sum": [r[1] for r, _ in out],
-            }
-        )
+        return {
+            id_col: [r[0] for r, _ in out],
+            key_col: key[0],
+            "agg_sum": [r[1] for r, _ in out],
+        }
 
     schema = out_schema or f"{id_col} long, {key_col} long, agg_sum long"
-    return df.select(key_col, proc_time_col, value_col, id_col).groupBy(key_col).applyInPandas(replay, schema)
+    cols = [key_col, proc_time_col, value_col, id_col]
+    return per_key(df, [key_col], [proc_time_col, id_col], replay, schema, cols)
 
 
 def group_agg_retention_stream(
@@ -1042,10 +1010,8 @@ def proctime_rows_over_df(
     window. Without retention the emission per row equals the SQL window
     ``ROWS BETWEEN offset-1 PRECEDING AND CURRENT ROW`` — which is the
     oracle. One shuffle on the key; per-key Arrow replay; no driver loop."""
-    import pandas as pd
 
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([proc_time_col, id_col], kind="mergesort")
+    def replay(key, pdf):
         kernel = ProcTimeBoundedRowsOverKernel(
             RowAggregator(
                 arity=3,
@@ -1057,18 +1023,25 @@ def proctime_rows_over_df(
         )
         rows = list(zip(pdf[id_col], pdf[value_col]))
         out = replay_keyed_proctime(rows, list(pdf[proc_time_col]), kernel)
-        key = pdf[key_col].iloc[0]
-        return pd.DataFrame(
-            {
-                id_col: [r[0] for r, _ in out],
-                key_col: key,
-                "min_v": [r[1] for r, _ in out],
-                "max_v": [r[2] for r, _ in out],
-            }
-        )
+        return {
+            id_col: [r[0] for r, _ in out],
+            key_col: key[0],
+            "min_v": [r[1] for r, _ in out],
+            "max_v": [r[2] for r, _ in out],
+        }
 
     schema = f"{id_col} long, {key_col} long, min_v long, max_v long"
-    return df.select(key_col, proc_time_col, value_col, id_col).groupBy(key_col).applyInPandas(replay, schema)
+    cols = [key_col, proc_time_col, value_col, id_col]
+    return per_key(df, [key_col], [proc_time_col, id_col], replay, schema, cols)
+
+
+def _emitted_columns(h: KeyedProcessHarness, col_idx: dict[str, int], out_cols: list[str]) -> dict:
+    """The harness's emitted rows as ``out_cols`` columns plus their
+    ``emit_seq`` (the total emission order)."""
+    out_rows = [r for r, _ in h.output]
+    data = {c: [r[col_idx[c]] for r in out_rows] for c in out_cols}
+    data["emit_seq"] = range(len(out_rows))
+    return data
 
 
 def proctime_sort_df(
@@ -1084,45 +1057,25 @@ def proctime_sort_df(
     (ProcTimeSortProcessFunction.scala:36 — the t+1 timer). ``sort_cols``
     entries are column names or (name, ascending) pairs — the reference's
     CollectionRowComparator takes per-field boolean orders and any orderable
-    field type (descending is a field-by-field comparator flip, not a value
-    negation, so strings sort too). ``out_schema`` overrides the default
-    all-``long`` output DDL when the forwarded columns aren't longs. Output
-    carries an ``emit_seq`` so the total emission order is checkable."""
-    import functools
+    field type (see :func:`_row_comparator`). ``out_schema`` overrides the
+    default all-``long`` output DDL when the forwarded columns aren't longs.
+    Output carries an ``emit_seq`` so the total emission order is
+    checkable."""
+    col_idx = {c: i for i, c in enumerate(df.columns)}
+    compare = _row_comparator(df.columns, sort_cols)
+    pt_i = col_idx[proc_time_col]
 
-    import pandas as pd
-
-    norm = [(c, True) if isinstance(c, str) else c for c in sort_cols]
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([proc_time_col], kind="mergesort")
-        col_idx = {c: i for i, c in enumerate(pdf.columns)}
-        spec = [(col_idx[c], asc) for c, asc in norm]
-
-        def cmp(a, b):
-            for i, asc in spec:
-                av, bv = a[i], b[i]
-                if av == bv:
-                    continue
-                lt = -1 if asc else 1
-                return lt if av < bv else -lt
-            return 0
-
-        sort_key = functools.cmp_to_key(cmp)
-
-        kernel = ProcTimeSortKernel(sort_key=sort_key)
+    def replay(_key, pdf):
+        kernel = ProcTimeSortKernel(sort_key=functools.cmp_to_key(compare))
         h = KeyedProcessHarness(kernel, key_fn=lambda r: 0)
         for row in pdf.itertuples(index=False, name=None):
-            h.set_processing_time(row[col_idx[proc_time_col]])
+            h.set_processing_time(row[pt_i])
             h.process_element(row)
         h.set_processing_time(2**62)  # job end: flush the final tick's buffer
-        out_rows = [r for r, _ in h.output]
-        data = {c: [r[col_idx[c]] for r in out_rows] for c in out_cols}
-        data["emit_seq"] = range(len(out_rows))
-        return pd.DataFrame(data)
+        return _emitted_columns(h, col_idx, out_cols)
 
     schema = out_schema or (", ".join(f"{c} long" for c in out_cols) + ", emit_seq long")
-    return df.groupBy(key_col).applyInPandas(replay, schema)
+    return per_key(df, [key_col], [proc_time_col], replay, schema)
 
 
 def rowtime_sort_df(
@@ -1146,37 +1099,16 @@ def rowtime_sort_df(
     SortProcessFunctionHarnessTest goldens; this replay proves distributed
     execution of the buffer/timer/sort machinery. One shuffle on the key;
     no driver loop."""
-    import functools
+    col_idx = {c: i for i, c in enumerate(df.columns)}
+    compare = _row_comparator(df.columns, sort_cols)
 
-    import pandas as pd
-
-    norm = [(c, True) if isinstance(c, str) else c for c in sort_cols]
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([arrival_col], kind="mergesort")
-        col_idx = {c: i for i, c in enumerate(pdf.columns)}
-        spec = [(col_idx[c], asc) for c, asc in norm]
-
-        def cmp(a, b):
-            for i, asc in spec:
-                av, bv = a[i], b[i]
-                if av == bv:
-                    continue
-                lt = -1 if asc else 1
-                return lt if av < bv else -lt
-            return 0
-
-        kernel = RowTimeSortKernel(
-            rowtime_idx=col_idx[rowtime_col], sort_key=functools.cmp_to_key(cmp)
-        )
+    def replay(_key, pdf):
+        kernel = RowTimeSortKernel(col_idx[rowtime_col], sort_key=functools.cmp_to_key(compare))
         h = KeyedProcessHarness(kernel, key_fn=lambda r: 0)
         for row in pdf.itertuples(index=False, name=None):
             h.process_element(row)
         h.process_watermark(2**62)  # end of input: fire every rowtime timer
-        out_rows = [r for r, _ in h.output]
-        data = {c: [r[col_idx[c]] for r in out_rows] for c in out_cols}
-        data["emit_seq"] = range(len(out_rows))
-        return pd.DataFrame(data)
+        return _emitted_columns(h, col_idx, out_cols)
 
     schema = out_schema or (", ".join(f"{c} long" for c in out_cols) + ", emit_seq long")
-    return df.groupBy(key_col).applyInPandas(replay, schema)
+    return per_key(df, [key_col], [arrival_col], replay, schema)

@@ -23,13 +23,14 @@ reference-exact semantics executors for the modes Spark cannot express —
 RETRACTION input streams (CRow change=false), processing-time interval
 joins, and idle-state retention on join state — and the substrate the
 JoinHarnessTest goldens replay against. Each is a per-key pure-Python state
-machine, distributable by key via applyInPandas exactly like the one-input
+machine, distributable by key via ``keyed.per_key`` exactly like the one-input
 kernels.
 """
 
 from __future__ import annotations
 
 from flink_1_6_0_spark.streaming.cleanup_state import KeyedProcessHarness, StreamQueryConfig
+from flink_1_6_0_spark.streaming.keyed import per_key, schema_names
 
 __all__ = [
     "NonWindowInnerJoinKernel",
@@ -662,7 +663,7 @@ class TwoInputKeyedProcessHarness(KeyedProcessHarness):
 
 
 # ---------------------------------------------------------------------------
-# Distributed replay entrypoints (applyInPandas per key — no driver loop)
+# Distributed replay entrypoints (keyed.per_key — no driver loop)
 #
 # The cleanup_state.py recipe applied to the two-input family: the union of
 # both sides shuffles ONCE on the join key, and each key's interleaved
@@ -674,8 +675,13 @@ class TwoInputKeyedProcessHarness(KeyedProcessHarness):
 # ---------------------------------------------------------------------------
 
 
-def _schema_col_names(out_schema: str) -> list[str]:
-    return [f.strip().split()[0] for f in out_schema.split(",")]
+def _nullable_longs(rows: list[tuple], names: list[str]) -> dict:
+    """Output rows as nullable-long (``Int64``) columns: outer-join padding
+    needs a null-capable integer dtype, built per column so longs past 2**53
+    stay exact."""
+    import pandas as pd
+
+    return {name: pd.array([r[i] for r in rows], dtype="Int64") for i, name in enumerate(names)}
 
 
 def nonwindow_join_retention_df(
@@ -706,10 +712,8 @@ def nonwindow_join_retention_df(
     """
     from collections import Counter
 
-    import pandas as pd
-
     arity = len(payload_cols)
-    out_names = _schema_col_names(out_schema)
+    names = schema_names(out_schema)
 
     def join_fn(left_row, right_row):
         if join_predicate(left_row, right_row):
@@ -725,10 +729,7 @@ def nonwindow_join_retention_df(
             )
         raise ValueError(f"unsupported join_type: {join_type}")
 
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        # inserts before retractions on a pt tie — a retraction can only
-        # follow the insert it cancels
-        pdf = pdf.sort_values([pt_col, change_col], ascending=[True, False], kind="mergesort")
+    def replay(key, pdf):
         h = TwoInputKeyedProcessHarness(make_kernel(), key1_fn=lambda r: 0, key2_fn=lambda r: 0)
         payload_series = [pdf[c] for c in payload_cols]
         for side, pt, change, *payload in zip(
@@ -743,17 +744,15 @@ def nonwindow_join_retention_df(
         net: Counter = Counter()
         for row, change in h.output:
             net[row] += 1 if change else -1
-        key = int(pdf[key_col].iloc[0])
-        out_rows = [(key,) + row for row, n in net.items() if n > 0 for _ in range(n)]
-        return pd.DataFrame(
-            {
-                name: pd.array([r[i] for r in out_rows], dtype="Int64")
-                for i, name in enumerate(out_names)
-            }
+        return _nullable_longs(
+            [key + row for row, n in net.items() if n > 0 for _ in range(n)], names
         )
 
     cols = list(dict.fromkeys([key_col, side_col, pt_col, change_col, *payload_cols]))
-    return df.select(*cols).groupBy(key_col).applyInPandas(replay, out_schema)
+    # inserts before retractions on a pt tie — a retraction can only follow
+    # the insert it cancels
+    order = [(pt_col, True), (change_col, False)]
+    return per_key(df, [key_col], order, replay, out_schema, cols)
 
 
 def timebounded_join_df(
@@ -776,16 +775,13 @@ def timebounded_join_df(
     end-of-job: expired cache entries flush, and outer variants pad rows
     whose emitted-flag never flipped. Output rows are ``(key,
     left_payload…, right_payload…)`` nullable longs."""
-    import pandas as pd
-
     arity = len(payload_cols)
-    out_names = _schema_col_names(out_schema)
+    names = schema_names(out_schema)
 
     def join_fn(left_row, right_row):
         return tuple(left_row) + tuple(right_row)
 
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([pt_col], kind="mergesort")
+    def replay(key, pdf):
         kernel = TimeBoundedJoinKernel(
             join_type,
             left_lower_bound,
@@ -806,17 +802,10 @@ def timebounded_join_df(
             else:
                 h.process_element2(row)
         h.set_processing_time(2**62)  # job end: cleanup timers fire, pads flush
-        key = int(pdf[key_col].iloc[0])
-        out_rows = [(key,) + row for row, _ in h.output]
-        return pd.DataFrame(
-            {
-                name: pd.array([r[i] for r in out_rows], dtype="Int64")
-                for i, name in enumerate(out_names)
-            }
-        )
+        return _nullable_longs([key + row for row, _ in h.output], names)
 
     cols = list(dict.fromkeys([key_col, side_col, pt_col, *payload_cols]))
-    return df.select(*cols).groupBy(key_col).applyInPandas(replay, out_schema)
+    return per_key(df, [key_col], [pt_col], replay, out_schema, cols)
 
 
 def rowtime_timebounded_join_df(
@@ -840,17 +829,14 @@ def rowtime_timebounded_join_df(
     end-of-input, firing every cleanup timer so outer pads flush exactly
     once. ``rt_col`` must be one of ``payload_cols`` (the kernel reads row
     time from the row itself, left/right_time_idx)."""
-    import pandas as pd
-
     arity = len(payload_cols)
     time_idx = payload_cols.index(rt_col)
-    out_names = _schema_col_names(out_schema)
+    names = schema_names(out_schema)
 
     def join_fn(left_row, right_row):
         return tuple(left_row) + tuple(right_row)
 
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([rt_col, side_col], kind="mergesort")
+    def replay(key, pdf):
         kernel = TimeBoundedJoinKernel(
             join_type,
             left_lower_bound,
@@ -875,14 +861,7 @@ def rowtime_timebounded_join_df(
             h.process_watermark2(int(rt))
         h.process_watermark1(2**62)
         h.process_watermark2(2**62)
-        key = int(pdf[key_col].iloc[0])
-        out_rows = [(key,) + row for row, _ in h.output]
-        return pd.DataFrame(
-            {
-                name: pd.array([r[i] for r in out_rows], dtype="Int64")
-                for i, name in enumerate(out_names)
-            }
-        )
+        return _nullable_longs([key + row for row, _ in h.output], names)
 
     cols = list(dict.fromkeys([key_col, side_col, rt_col, *payload_cols]))
-    return df.select(*cols).groupBy(key_col).applyInPandas(replay, out_schema)
+    return per_key(df, [key_col], [rt_col, side_col], replay, out_schema, cols)

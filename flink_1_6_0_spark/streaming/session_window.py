@@ -21,7 +21,7 @@ at admission and never re-fires an emitted window; Flink's allowedLateness
 keeps the window state alive for `lateness` past the on-time firing and
 re-emits the grown (accumulating) or fresh (purging) window per late
 element. That re-fire protocol is this kernel, runnable per key on the
-deterministic harness (tests) or distributed by key via applyInPandas (same
+deterministic harness (tests) or distributed by key via ``keyed.per_key`` (same
 argument as streaming/cleanup_state.py — all state is per key).
 
 At scale the state bound is Flink's: open windows × contents, plus fired
@@ -30,7 +30,8 @@ windows retained for `lateness` — the cleanup timer is what reclaims them.
 
 from __future__ import annotations
 
-from flink_1_6_0_spark.streaming.cleanup_state import CleanupKernelBase
+from flink_1_6_0_spark.streaming.cleanup_state import CleanupKernelBase, KeyedProcessHarness
+from flink_1_6_0_spark.streaming.keyed import per_key
 
 __all__ = [
     "EventTimeWindowKernel",
@@ -394,7 +395,7 @@ def delta_evictor(threshold, delta_fn, evict_after: bool = False):
 
 
 # ---------------------------------------------------------------------------
-# Distributed replay entrypoint (applyInPandas per key — no driver loop)
+# Distributed replay entrypoint (keyed.per_key — no driver loop)
 # ---------------------------------------------------------------------------
 
 
@@ -447,48 +448,37 @@ def event_time_window_df(
     window) — the oracle can only match if the lateness/merge/re-fire/
     cleanup protocol runs.
     """
-    import pandas as pd
-
-    from flink_1_6_0_spark.streaming.cleanup_state import KeyedProcessHarness
-
     if (window_size is None) == (session_gap is None):
         raise ValueError("exactly one of window_size / session_gap required")
     cols = [key_col, rowtime_col, late_col, order_col, payload_col]
+    rt_i, late_i, payload_i = (cols.index(c) for c in (rowtime_col, late_col, payload_col))
 
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([rowtime_col, order_col], kind="mergesort")
-        col_idx = {c: i for i, c in enumerate(pdf.columns)}
-        rt_i = col_idx[rowtime_col]
+    def replay(key, pdf):
         kernel = EventTimeWindowKernel(
             session_windows(session_gap) if session_gap else tumbling_windows(window_size),
             allowed_lateness,
             ts_idx=rt_i,
-            payload_idx=col_idx[payload_col],
+            payload_idx=payload_i,
             merging=session_gap is not None,
         )
         h = KeyedProcessHarness(kernel, key_fn=lambda r: 0)
-        late_mask = pdf[late_col].to_numpy()
         rows = list(pdf.itertuples(index=False, name=None))
-        for row, is_late in zip(rows, late_mask):
-            if not is_late:
+        for row in rows:
+            if not row[late_i]:
                 h.process_element(row)
                 h.process_watermark(row[rt_i])
-        for row, is_late in zip(rows, late_mask):
-            if is_late:
+        for row in rows:
+            if row[late_i]:
                 h.process_element(row)
         h.process_watermark(2**62)  # end of input: deferred fires + cleanups
 
-        key_val = pdf[key_col].iloc[0] if len(pdf) else None
         seqs: dict = {}
         out = []
         for (ws, we, contents), _ in h.output:
             seq = seqs.get((ws, we), 0)
             seqs[(ws, we)] = seq + 1
-            out.append((key_val, ws, we, seq, len(contents), sum(contents)))
-        return pd.DataFrame(
-            out,
-            columns=[key_col, "w_start", "w_end", "fire_seq", "cnt", "sum_payload"],
-        )
+            out.append(key + (ws, we, seq, len(contents), sum(contents)))
+        return out
 
     # Key field keeps the INPUT's type (r14 ADVICE: a hardcoded `long` here
     # broke any caller whose key column isn't long — current callers all key
@@ -498,4 +488,4 @@ def event_time_window_df(
         f"{key_col} {key_type}, w_start long, w_end long, fire_seq long, "
         "cnt long, sum_payload long"
     )
-    return df.select(*cols).groupBy(key_col).applyInPandas(replay, schema)
+    return per_key(df, [key_col], [rowtime_col, order_col], replay, schema, cols)

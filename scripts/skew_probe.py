@@ -38,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -107,7 +108,7 @@ def main() -> None:
         print(f"{name}: 1x={a}s {join_n}x={b}s ratio={join_results[name]['ratio']}", file=sys.stderr)
 
     block = {
-        "round": "r13",
+        "recorded_utc": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
         "n": n,
         "skew": f"event_id % {skew_mod} == 0 -> user 0 (~{100 // skew_mod}% of rows on one key)",
         "loadavg": load,
@@ -117,11 +118,10 @@ def main() -> None:
             "64x skewed-key closure of the r12s2 8x block: per-key replay cost is "
             "linear in rows-per-key, so the skew penalty (t_skew/t_uniform) bounds "
             "the wall by the widest key's sequential replay — the reference's own "
-            "bound for a keyed process function. Mitigation when a single key must "
-            "exceed this: chunked replay (split the key's rows into ts-ordered "
-            "chunks and carry the kernel state dict between chunks — exact for the "
-            "cleanup-state kernels, whose state is a small dict independent of "
-            "chunk boundaries). Join kernels probed at uniform 8x only: a hot "
+            "bound for a keyed process function. No mitigation for a single key "
+            "that must exceed this is implemented (chunked replay, carrying the "
+            "kernel state between ts-ordered chunks of one key, is not built). "
+            "Join kernels probed at uniform 8x only: a hot "
             "key's join OUTPUT is quadratic by semantics (each element scans the "
             "other side's live state, as in the reference CoProcessFunction)."
         ),

@@ -878,36 +878,3 @@ def test_proc_time_bounded_rows_over_offset_one():
         (0, "k", 7, 7, 7),
         (0, "k", 3, 3, 3),
     ]
-
-
-def test_chunked_replay_exactness():
-    """SCALING.md's hot-key mitigation, pinned: replaying a key's rows in
-    ts-ordered chunks with the harness snapshot (state + pending timers +
-    clock) carried between chunks is EXACT — the cleanup-timer chain fires
-    identically across chunk boundaries, including resets landing inside a
-    later chunk."""
-    import random
-
-    from flink_1_6_0_spark.streaming.cleanup_state import (
-        chunked_replay_keyed_proctime,
-        replay_keyed_proctime,
-    )
-
-    random.seed(7)
-    rows, pts = [], []
-    t = 0
-    for i in range(200):
-        t += random.choice([1, 5, 900, 2500])  # gaps straddle the 2000/3000 retention
-        rows.append((i, random.randint(-5, 9)))
-        pts.append(t)
-
-    def mk():
-        return GroupAggKernel(
-            RowAggregator(arity=2, forwarded=[(0, 0)], aggs=[(1, 1, SumWithRetract())]),
-            generate_retraction=False,
-            query_config=StreamQueryConfig(2000, 3000),
-        )
-
-    single = replay_keyed_proctime(rows, pts, mk())
-    for chunk_size in (1, 7, 64, 199):
-        assert chunked_replay_keyed_proctime(rows, pts, mk, chunk_size) == single

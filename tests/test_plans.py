@@ -421,14 +421,17 @@ def test_cep_batch_keeps_full_shuffle_width(spark, sf_dir):
     a REPARTITION_BY_NUM at the configured shuffle width — exempt from
     AQE's byte-based coalescing, which had collapsed the stage to 3 tasks
     on 32 cores (round-9; 3.6 s -> 0.9 s at sf0.1). Exactly ONE exchange
-    feeds the FlatMapGroupsInPandas (the groupBy's own is elided)."""
-    plan = _plan(get("cep_funnel").fn(spark, sf_dir))
+    feeds the FlatMapGroupsInPandas (the groupBy's own is elided). Every
+    batch per-key kernel runs through the same runner (streaming/keyed.py),
+    so a cleanup-state kernel query gets the same exchange."""
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert f"hashpartitioning(user_id#" in plan
-    assert "REPARTITION_BY_NUM" in plan
-    assert f", {n}), REPARTITION_BY_NUM" in plan
-    assert plan.count("Exchange") == 1, plan
-    assert "FlatMapGroupsInPandas" in plan
+    for q in ("cep_funnel", "stream_group_agg_retention"):
+        plan = _plan(get(q).fn(spark, sf_dir))
+        assert f"hashpartitioning(user_id#" in plan, q
+        assert "REPARTITION_BY_NUM" in plan, q
+        assert f", {n}), REPARTITION_BY_NUM" in plan, q
+        assert plan.count("Exchange") == 1, plan
+        assert "FlatMapGroupsInPandas" in plan, q
 
 
 def test_kernel_join_replay_shuffle_budget(spark, sf_dir):

@@ -1193,7 +1193,7 @@ def test_combine_group_then_reduce_equals_direct_group_by(spark, rows):
 
 def _batch_matches_with_comparator(pattern, events):
     """Batch executor spec with comparator: _scan over events sorted by
-    (ts, prio, id) — cep_batch's _match_frame sort with comparator_cols."""
+    (ts, prio, id) — cep_batch's per-key sort with comparator_cols."""
     evs = sorted(
         (
             {"__ts": int(ts * 1_000_000), "eid": i, "etype": ty, "prio": pr}

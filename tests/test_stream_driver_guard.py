@@ -1,10 +1,12 @@
-"""One bounded-stream driver, one file-replay reader, one query timer: a
-fast source scan that keeps a second driver, reader or timing loop from
-creeping back into the engine, its scripts or the bench, and keeps the
-scripts importing the checkout they live in."""
+"""One bounded-stream driver, one file-replay reader, one query timer, one
+batch per-key runner: a fast source scan that keeps a second driver,
+reader, timing loop or per-key replay from creeping back into the engine,
+its scripts or the bench, and keeps the scripts (and their Python workers)
+importing the checkout they live in."""
 
 from __future__ import annotations
 
+import os
 import pathlib
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
@@ -51,3 +53,16 @@ def test_scripts_import_their_own_checkout():
     engine: no script names an absolute checkout path."""
     assert _uses(f'"{REPO}"', SCRIPTS) == set()
     assert _uses('sys.path.insert(0, "', SCRIPTS) == set()
+
+
+def test_get_spark_puts_the_checkout_on_pythonpath(spark):
+    """Python workers import the engine through PYTHONPATH, so a script run
+    from another working directory still finds this checkout."""
+    assert str(REPO) in os.environ["PYTHONPATH"].split(os.pathsep)
+
+
+def test_only_the_runner_replays_a_batch_key():
+    """streaming/keyed.py::per_key is the one batch per-key replay; the
+    stream kernels use applyInPandasWithState, which this token skips."""
+    files = (ENGINE / "streaming").rglob("*.py")
+    assert _uses("applyInPandas(", files) == {"flink_1_6_0_spark/streaming/keyed.py"}
