@@ -9,9 +9,10 @@ Spark has no CEP; this module provides:
 - a batch executor: per-key ordered scan through ``keyed.per_key`` (Arrow
   batches; each key's sequence is processed independently, so the operator
   scales with key count like the reference's keyed NFA),
-- a streaming executor: ``applyInPandasWithState`` keeps a bounded buffer of
-  events per key (the `within` horizon is the state bound — NFA state +
-  timers analog) and re-scans on each micro-batch.
+- a streaming executor: the live keyed runner ``keyed.per_key_state``
+  keeps a bounded buffer of events per key (the `within` horizon is the
+  state bound — NFA state + timers analog) and re-scans on each
+  micro-batch.
 
 Contiguity semantics implemented (Pattern.java):
 - ``next``            — strict: the immediately following event
@@ -54,7 +55,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from flink_1_6_0_spark.streaming.keyed import per_key, schema_fields, schema_names
+from flink_1_6_0_spark.streaming.keyed import per_key, per_key_state, schema_fields, schema_names
 
 NEXT = "next"
 FOLLOWED_BY = "followed_by"
@@ -1260,7 +1261,7 @@ def cep_stream(
     timeout_schema: str | None = None,
     comparator_cols: list[str] | None = None,
 ):
-    """Streaming CEP via applyInPandasWithState (PatternStream analog).
+    """Streaming CEP via keyed.per_key_state (PatternStream analog).
 
     ``comparator_cols`` is the streaming EventComparator (CEP.java:51) —
     same-timestamp events are folded into the NFA in ``(ts,
@@ -1457,9 +1458,8 @@ def cep_stream(
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout if use_cleanup_timer else GroupStateTimeout.NoTimeout
     )
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
-    )
+    cols = [*key_cols, ts_col, id_col, type_col, *(attr_cols or [])]
+    return per_key_state(stream, key_cols, fn, out_schema, state_schema, timeout, cols)
 
 
 def _stream_kernel(
@@ -1688,7 +1688,8 @@ def _stream_kernel(
             if not len(pdf):
                 continue
             arr_ids += [int(x) for x in pdf[id_col]]
-            arr_ts += [float(pd.Timestamp(t).value // 1000) for t in pdf[ts_col]]  # µs, exact in double
+            ts_us = pdf[ts_col].to_numpy("datetime64[ns]").view("int64") // 1000
+            arr_ts += ts_us.astype(float).tolist()  # µs, exact in double
             arr_types += [str(x) for x in pdf[type_col]]
             if attr_cols:
                 import json
@@ -1876,8 +1877,9 @@ def cep_stream_late_side(
         if rows:
             yield pd.DataFrame(rows, columns=out_cols)
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, "hwm double", "append", GroupStateTimeout.NoTimeout
+    return per_key_state(
+        stream, key_cols, fn, out_schema, "hwm double", GroupStateTimeout.NoTimeout,
+        [*key_cols, id_col, ts_col, type_col],
     )
 
 

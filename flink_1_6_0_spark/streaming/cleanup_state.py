@@ -38,7 +38,7 @@ import functools
 import heapq
 from dataclasses import dataclass, field
 
-from flink_1_6_0_spark.streaming.keyed import order_spec, per_key
+from flink_1_6_0_spark.streaming.keyed import order_spec, per_key, per_key_state
 
 __all__ = [
     "StreamQueryConfig",
@@ -932,9 +932,10 @@ def group_agg_retention_stream(
     query_config: StreamQueryConfig,
     output_schema: str | None = None,
 ):
-    """LIVE Structured-Streaming execution of the retention group-agg:
-    ``applyInPandasWithState`` with ``GroupStateTimeout.ProcessingTimeTimeout``
-    — the wall clock plays the processing time the batch replay injects.
+    """LIVE Structured-Streaming execution of the retention group-agg: the
+    live keyed runner ``keyed.per_key_state`` with
+    ``GroupStateTimeout.ProcessingTimeTimeout`` — the wall clock plays the
+    processing time the batch replay injects.
 
     The state carries (sum, cnt, cleanup_time); each micro-batch applies the
     reference's coalescing rule against real time (a new timeout is set only
@@ -983,16 +984,15 @@ def group_agg_retention_stream(
         yield pd.DataFrame({id_col: out_ids, key_col: key[0], "agg_sum": out_sums})
 
     schema = output_schema or f"{id_col} long, {key_col} long, agg_sum long"
-    return (
-        stream.select(key_col, value_col, id_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            schema,
-            "acc_sum long, cnt long, cleanup_time long",
-            "update",
-            GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return per_key_state(
+        stream,
+        [key_col],
+        fn,
+        schema,
+        "acc_sum long, cnt long, cleanup_time long",
+        GroupStateTimeout.ProcessingTimeTimeout,
+        [key_col, value_col, id_col],
+        mode="update",
     )
 
 

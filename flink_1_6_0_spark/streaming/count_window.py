@@ -5,10 +5,11 @@ Reference: DataStream.countWindow → GlobalWindows + CountTrigger
 fire an aggregate every ``size`` elements; the window state is the running
 element count + partial accumulators.
 
-Spark has no count trigger, so the operator is ``applyInPandasWithState``:
-keyed state carries (next window index, leftover count, leftover sum) across
-micro-batches; rows are consumed in (ts, id) order and every completed
-window of exactly ``size`` rows emits one result row. Incomplete tail
+Spark has no count trigger, so the operator runs on the live keyed runner
+``keyed.per_key_state``: keyed state carries (next window index, leftover
+count, leftover sum) across micro-batches; rows are consumed in (ts, id)
+order and every completed window of exactly ``size`` rows emits one result
+row. Incomplete tail
 windows stay buffered in state (the reference's CountTrigger also never
 fires a partial window).
 
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from flink_1_6_0_spark.streaming.keyed import per_key_state
 
 
 def stream_delta_window(
@@ -75,8 +78,9 @@ def stream_delta_window(
                 out[k] = v
             yield out[key_cols + ["fire_id", "win_n", "win_sum"]]
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return per_key_state(
+        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.NoTimeout,
+        [*key_cols, ts_col, id_col, value_col],
     )
 
 
@@ -126,6 +130,7 @@ def stream_count_window(
                 out[k] = v
             yield out[key_cols + ["count_window", "win_n", "win_sum"]]
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return per_key_state(
+        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.NoTimeout,
+        [*key_cols, ts_col, id_col, value_col],
     )

@@ -9,7 +9,8 @@ BEFORE the window function via WindowedStream.evictor
 (WindowedStream.java:267), which forces the window into buffering
 (EvictingWindowOperator) state.
 
-Spark form: ``applyInPandasWithState`` with an event-time timer:
+Spark form: the live keyed runner ``keyed.per_key_state`` with an
+event-time timer:
 
 - keyed state buffers (window_start, ts, id, value) for every OPEN tumbling
   window — the same per-(key, window) element list the reference's
@@ -29,6 +30,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from flink_1_6_0_spark.streaming.keyed import per_key_state
 
 
 def evict_and_aggregate(
@@ -133,6 +136,7 @@ def stream_evicted_window(
                 out[k] = v
             yield out[key_cols + ["w_start", "n_kept", "sum_kept"]]
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+    return per_key_state(
+        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.EventTimeTimeout,
+        [*key_cols, ts_col, id_col, value_col],
     )

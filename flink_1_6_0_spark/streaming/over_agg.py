@@ -6,17 +6,20 @@ live in keyed state, rows emit with the aggregate of everything up to the
 row's position in time order.
 
 Spark disallows window functions on streaming frames, so the operator runs
-as ``applyInPandasWithState``: per key, state carries the running
-accumulators (sum, count) across micro-batches; within a batch the rows are
-processed in (ts, id) order — exactly RowTimeUnboundedOver's semantics under
-in-order delivery (out-of-order rows across batches take the state as-of
-arrival, the proc-time variant's behavior; document the difference).
+on the live keyed runner ``keyed.per_key_state``: per key, state carries the
+running accumulators (sum, count) across micro-batches; within a batch the
+rows are processed in (ts, id) order — exactly RowTimeUnboundedOver's
+semantics under in-order delivery (out-of-order rows across batches take the
+state as-of arrival, the proc-time variant's behavior; document the
+difference).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from flink_1_6_0_spark.streaming.keyed import per_key_state
 
 
 def stream_running_agg(
@@ -56,6 +59,7 @@ def stream_running_agg(
         state.update((float(acc_sum + pdf[value_col].sum()), int(acc_n + len(pdf))))
         yield out[key_cols + [id_col, "running_sum", "running_n"]]
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return per_key_state(
+        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.NoTimeout,
+        [*key_cols, ts_col, id_col, value_col],
     )

@@ -10,8 +10,8 @@ each boundary. PurgingTrigger (PurgingTrigger.java:33) wraps any trigger and
 turns FIRE into FIRE_AND_PURGE: each emission clears the pane, so the next
 fire covers only elements that arrived since.
 
-Spark form: ``applyInPandasWithState`` + event-time timer (the same
-EventTimeTrigger machinery as streaming.evictors):
+Spark form: the live keyed runner ``keyed.per_key_state`` + event-time
+timer (the same EventTimeTrigger machinery as streaming.evictors):
 
 - keyed state buffers each open tumbling window's (ts, value) pairs plus the
   window's last-fired boundary;
@@ -41,6 +41,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from flink_1_6_0_spark.streaming.keyed import per_key_state
 
 
 def fire_continuous_panes(
@@ -203,6 +205,7 @@ def stream_continuous_window(
                 out[k] = v
             yield out[key_cols + ["w_start", "fire_ts", "n", "sum_v"]]
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+    return per_key_state(
+        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.EventTimeTimeout,
+        [*key_cols, ts_col, value_col],
     )

@@ -905,6 +905,109 @@ def test_cep_stream_kernel_not_followed_by_across_batches(data):
     assert got == want
 
 
+@st.composite
+def _multi_key_deliveries(draw):
+    """3–6 keys of unique-id events, the whole delivery permuted (out of
+    order within and across keys) and split into >= 3 micro-batches,
+    possibly empty ones."""
+    events = []
+    for k in range(draw(st.integers(3, 6))):
+        for _ in range(draw(st.integers(1, 6))):
+            events.append(
+                (k, len(events), draw(st.integers(0, 150)), draw(st.sampled_from(["a", "b", "x"])))
+            )
+    delivery = [events[i] for i in draw(st.permutations(list(range(len(events)))))]
+    k = draw(st.integers(3, 5))
+    cuts = sorted(draw(st.lists(st.integers(0, len(delivery)), min_size=k - 1, max_size=k - 1)))
+    batches, prev = [], 0
+    for c in cuts + [len(delivery)]:
+        batches.append(delivery[prev:c])
+        prev = c
+    return batches
+
+
+@given(_multi_key_deliveries())
+@settings(max_examples=80, deadline=None)
+def test_bucket_runner_equals_the_per_key_kernel(batches):
+    """streaming/keyed.py's bucket function holds 3–6 keys of the watermark-
+    mode CEP kernel (timeout side output and processing-time cleanup timer
+    on) in ONE bucket. Driven over multi-batch out-of-order deliveries, it
+    must give the rows, per key and in per-key order, and the final per-key
+    state that the kernel gives driven one key at a time; the closing timer
+    flush included."""
+    import pandas as pd
+    from pyspark.sql import Row
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from flink_1_6_0_spark.streaming.cep import _stream_kernel
+    from flink_1_6_0_spark.streaming.keyed import BUCKET, bucket_kernel
+
+    p = Pattern.begin("a", lambda e: e["etype"] == "a").followed_by(
+        "b", lambda e: e["etype"] == "b"
+    ).within(100)
+    fn = _stream_kernel(
+        p, ["k"], "ts", "eid", "etype",
+        horizon=200_000_000, horizon_s=200.0, use_cleanup_timer=True,
+        disorder=30_000_000, timer_ms=1000, with_timeouts=True,
+    )
+
+    def frame(batch):
+        return pd.DataFrame(
+            {
+                "k": [e[0] for e in batch],
+                "eid": [e[1] for e in batch],
+                "ts": [pd.Timestamp(e[2] * 1_000_000, unit="us") for e in batch],
+                "etype": [e[3] for e in batch],
+            }
+        ).astype({"k": "int64", "eid": "int64"})
+
+    def collect(rows, outs):
+        for out in outs:
+            for r in out.astype(object).where(out.notna(), None).to_dict("records"):
+                rows.setdefault(r["k"], []).append(r)
+
+    # one key at a time, the way one Spark group per key runs it
+    states: dict[int, _FakeGroupState] = {}
+    want: dict[int, list] = {}
+    for batch in batches:
+        pdf = frame(batch)
+        for key in sorted(set(pdf["k"])):
+            state = states.setdefault(key, _FakeGroupState())
+            collect(want, fn((key,), [pdf[pdf["k"] == key].reset_index(drop=True)], state))
+    want_state = {key: s.get for key, s in states.items() if s.exists}
+    for key, state in states.items():
+        state.hasTimedOut = True
+        collect(want, fn((key,), [frame([])], state))
+
+    # one bucket, its state carried between calls as the state store does
+    run = bucket_kernel(fn, ["k"])
+    bucket = None
+
+    def call(batch, now, timed_out=False):
+        nonlocal bucket
+        value = Row(*bucket.get) if bucket is not None and bucket.exists else None
+        bucket = GroupState(
+            optionalValue=value, batchProcessingTimeMs=now,
+            eventTimeWatermarkMs=GroupState.NO_TIMESTAMP,
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout, hasTimedOut=timed_out,
+            watermarkPresent=False, defined=value is not None, updated=False,
+            removed=False, timeoutTimestamp=GroupState.NO_TIMESTAMP,
+            keyAsUnsafe=None, valueSchema=None,
+        )
+        collect(got, run((0,), [frame(batch).assign(**{BUCKET: 0})], bucket))
+
+    got: dict[int, list] = {}
+    for i, batch in enumerate(batches):
+        if batch:  # Spark calls a bucket only with rows or when its timer is due
+            call(batch, now=10 * i)
+    got_state = {v[-2]: tuple(v[:-2]) for v in zip(*bucket.get)} if bucket and bucket.exists else {}
+    if bucket is not None and bucket.exists:
+        call([], now=10_000, timed_out=True)
+        assert not bucket.exists  # every key flushed and removed
+    assert got == want
+    assert got_state == want_state
+
+
 def _assert_stream_equals_batch_generic(pattern_fn, events, batches, horizon_s=200.0, disorder_s=30.0):
     """Generic bounded-disorder equivalence: drive the kernel across the
     batches (+flush) and compare FULL output rows (every output stage

@@ -1,8 +1,9 @@
 """One bounded-stream driver, one file-replay reader, one query timer, one
-batch per-key runner: a fast source scan that keeps a second driver,
-reader, timing loop or per-key replay from creeping back into the engine,
-its scripts or the bench, and keeps the scripts (and their Python workers)
-importing the checkout they live in."""
+batch per-key runner, one live keyed-state runner: a fast source scan that
+keeps a second driver, reader, timing loop, per-key replay or per-key
+state operator from creeping back into the engine, its scripts or the
+bench, and keeps the scripts (and their Python workers) importing the
+checkout they live in."""
 
 from __future__ import annotations
 
@@ -62,7 +63,15 @@ def test_get_spark_puts_the_checkout_on_pythonpath(spark):
 
 
 def test_only_the_runner_replays_a_batch_key():
-    """streaming/keyed.py::per_key is the one batch per-key replay; the
-    stream kernels use applyInPandasWithState, which this token skips."""
+    """streaming/keyed.py::per_key is the one batch per-key replay (this
+    token does not match ``applyInPandasWithState``)."""
     files = (ENGINE / "streaming").rglob("*.py")
     assert _uses("applyInPandas(", files) == {"flink_1_6_0_spark/streaming/keyed.py"}
+
+
+def test_only_the_runner_keeps_live_key_state():
+    """streaming/keyed.py::per_key_state is the one live per-key state
+    operator: every stream kernel runs one group per hash bucket through it,
+    never one Spark group per key."""
+    files = (ENGINE / "streaming").rglob("*.py")
+    assert _uses("applyInPandasWithState(", files) == {"flink_1_6_0_spark/streaming/keyed.py"}
