@@ -1275,7 +1275,8 @@ def cep_stream(
     The keyed state IS the NFA buffer: (id, ts, type) triples trimmed to the
     ``within`` horizon behind the persisted per-key high-water mark, plus the
     set of already emitted match signatures (so re-scans across micro-batches
-    never re-emit). ``setTimeoutDuration`` plays the cleanup-timer role
+    never re-emit). The processing-time deadline the step returns, the
+    batch time plus ``cleanup_timer_ms``, plays the cleanup-timer role
     (IntervalJoin/NFA timers); a timer wake-up now FLUSHES the buffer (final
     scan with negations closable — the stream has been quiet for a full
     horizon, the event-time analog of the job-end watermark) before dropping
@@ -1447,8 +1448,8 @@ def cep_stream(
     # force a 24 h wall-clock wait for the quiescence flush)
     timer_ms = int(horizon_s * 1000) if cleanup_timer_ms is None else int(cleanup_timer_ms)
 
-    fn = _stream_kernel(
-        pattern, key_cols, ts_col, id_col, type_col, horizon, horizon_s,
+    step = _stream_kernel(
+        pattern, ts_col, id_col, type_col, horizon, horizon_s,
         use_cleanup_timer, disorder, timer_ms, with_timeouts, attr_cols,
         select_fn=select_fn, output_schema=output_schema, flat_select=flat_select,
         timeout_fn=timeout_fn, timeout_schema=timeout_schema,
@@ -1459,12 +1460,11 @@ def cep_stream(
         GroupStateTimeout.ProcessingTimeTimeout if use_cleanup_timer else GroupStateTimeout.NoTimeout
     )
     cols = [*key_cols, ts_col, id_col, type_col, *(attr_cols or [])]
-    return per_key_state(stream, key_cols, fn, out_schema, state_schema, timeout, cols)
+    return per_key_state(stream, key_cols, [], step, out_schema, state_schema, timeout, cols)
 
 
 def _stream_kernel(
     pattern: Pattern,
-    key_cols: list[str],
     ts_col: str,
     id_col: str,
     type_col: str,
@@ -1482,14 +1482,16 @@ def _stream_kernel(
     timeout_schema: str | None = None,
     comparator_cols: list[str] | None = None,
 ):
-    """The per-key micro-batch NFA state-transition function, factored out of
+    """The per-key micro-batch NFA step ``step(key, pdf, value, clock) ->
+    (rows, value, deadline_ms)`` of keyed.per_key_state, factored out of
     :func:`cep_stream` so tests can drive it DIRECTLY across simulated
-    micro-batch boundaries (tests/test_properties.py interleaves late/
-    duplicate/out-of-order deliveries and asserts batch-executor
-    equivalence — NFA.java:82's order-robustness contract — without paying a
-    Structured Streaming query per hypothesis example).
+    micro-batch boundaries, carrying ``value`` themselves
+    (tests/test_properties.py interleaves late/duplicate/out-of-order
+    deliveries and asserts batch-executor equivalence — NFA.java:82's
+    order-robustness contract — without paying a Structured Streaming query
+    per hypothesis example). ``rows`` are dicts without the key columns.
 
-    State layout: (buf_ids, buf_ts, buf_types, emitted_sigs, hwm). ``hwm`` is
+    Value layout: (buf_ids, buf_ts, buf_types, emitted_sigs, hwm). ``hwm`` is
     the per-key event-time high-water mark over EVERY event ever seen — the
     watermark analog — persisted so a batch of ancient events cannot reset
     the clock and match inside its own arrival batch (that was round-8 bug B:
@@ -1500,13 +1502,8 @@ def _stream_kernel(
     either_names: list[str] = []
     if select_fn is not None and with_timeouts:
         _u, _sn, _tn, either_names = _merge_either_schema(output_schema, timeout_schema)
-        out_cols = ["timed_out"] + either_names
-    elif select_fn is not None:
-        out_cols = schema_names(output_schema)
-    else:
-        out_cols = [c for c, _ in out_col_types] + (
-            ["timed_out", "pending_stage"] if with_timeouts else []
-        )
+    if timer_ms is None:
+        timer_ms = int(horizon_s * 1000)
     within_us = pattern.within_micros
     extendable = _pattern_extendable(pattern)
 
@@ -1516,14 +1513,14 @@ def _stream_kernel(
         body = sig[2:].rsplit("|", 1)[0] if sig.startswith("t|") else sig
         return [int(x) for part in body.split(";") for x in part.split(",") if x]
 
-    def load(state):
-        if state.exists:
-            if attr_cols:
-                bi, bt, bty, em, hwm, ba = state.get
-                return list(bi), list(bt), list(bty), set(em), float(hwm), list(ba)
-            bi, bt, bty, em, hwm = state.get
-            return list(bi), list(bt), list(bty), set(em), float(hwm), []
-        return [], [], [], set(), float("-inf"), []
+    def load(value):
+        if value is None:
+            return [], [], [], set(), float("-inf"), []
+        if attr_cols:
+            bi, bt, bty, em, hwm, ba = value
+            return list(bi), list(bt), list(bty), set(em), float(hwm), list(ba)
+        bi, bt, bty, em, hwm = value
+        return list(bi), list(bt), list(bty), set(em), float(hwm), []
 
     def to_events(buf_ids, buf_ts, buf_types, buf_attrs):
         import json
@@ -1557,7 +1554,7 @@ def _stream_kernel(
         seen: set[int] = set()
         return [e for e in events if not (e[id_col] in seen or seen.add(e[id_col]))]
 
-    def emit_new(events, emitted, rows, key, fold_pt, closed_only, want_partials=False):
+    def emit_new(events, emitted, rows, fold_pt, closed_only, want_partials=False):
         """Scan `events`, append matches (and, when enabled, timed-out
         partials) whose signature is new to `rows`. ``fold_pt`` is None on
         flush: nothing is withheld and every dead partial times out.
@@ -1591,14 +1588,14 @@ def _stream_kernel(
                     )
                 }
                 outs = select_fn(mm) if flat_select else [select_fn(mm)]
-                base = dict(zip(key_cols, key))
+                base = {}
                 if with_timeouts:  # Either<L,R> overload: tag + NULL-fill
                     base["timed_out"] = False
                     base.update({c: None for c in either_names})
                 for o in outs:
                     rows.append({**base, **o})
                 continue
-            row = dict(zip(key_cols, key))
+            row = {}
             for st, (col, _), idxs in zip(
                 _output_stages(pattern), out_col_types, _output_match(pattern, match)
             ):
@@ -1643,13 +1640,12 @@ def _stream_kernel(
                     if flat_select
                     else [timeout_fn(partial, timeout_ts)]
                 )
-                base = dict(zip(key_cols, key))
-                base["timed_out"] = True
+                base = {"timed_out": True}
                 base.update({c: None for c in either_names})
                 for o in outs:
                     rows.append({**base, **o})
                 continue
-            row = dict(zip(key_cols, key))
+            row = {}
             for st, (col, _), idxs in zip(
                 _output_stages(pattern), out_col_types, _output_match(pattern, padded)
             ):
@@ -1662,49 +1658,38 @@ def _stream_kernel(
 
     compactable = _prunable_to_live_partials(pattern)
 
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:
+    def step(key, pdf, value, clock):
+        buf_ids, buf_ts, buf_types, emitted, hwm, buf_attrs = load(value)
+        rows: list[dict] = []
+        if clock.timed_out:
             # a full horizon of processing-time silence: the NFA cleanup
             # timer fires. FLUSH — the event-time analog of the job-end
             # watermark (AbstractKeyedCEPPatternOperator advances the NFA to
             # the final watermark): scan everything still buffered with
             # negations closable and nothing withheld, then drop the state
             # (re-arming here would busy-loop the query).
-            buf_ids, buf_ts, buf_types, emitted, _hwm, buf_attrs = load(state)
-            rows: list[dict] = []
             if buf_ids:
                 events = to_events(buf_ids, buf_ts, buf_types, buf_attrs)
-                emit_new(events, emitted, rows, key, None, closed_only=False)
-            state.remove()
-            if rows:
-                yield pd.DataFrame(rows, columns=key_cols + out_cols)
-            return
-        buf_ids, buf_ts, buf_types, emitted, hwm, buf_attrs = load(state)
-        arr_ids: list[int] = []
-        arr_ts: list[float] = []
-        arr_types: list[str] = []
+                emit_new(events, emitted, rows, None, closed_only=False)
+            return rows, None, None
+        arr_ids = [int(x) for x in pdf[id_col]]
+        ts_us = pdf[ts_col].to_numpy("datetime64[ns]").view("int64") // 1000
+        arr_ts = ts_us.astype(float).tolist()  # µs, exact in double
+        arr_types = [str(x) for x in pdf[type_col]]
         arr_attrs: list[str] = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            arr_ids += [int(x) for x in pdf[id_col]]
-            ts_us = pdf[ts_col].to_numpy("datetime64[ns]").view("int64") // 1000
-            arr_ts += ts_us.astype(float).tolist()  # µs, exact in double
-            arr_types += [str(x) for x in pdf[type_col]]
-            if attr_cols:
-                import json
+        if attr_cols:
+            import json
 
-                recs = pdf[attr_cols].to_dict("records")
-                arr_attrs += [
-                    json.dumps(
-                        {k: (v.item() if hasattr(v, "item") else v) for k, v in r.items()},
-                        default=str,
-                        sort_keys=True,
-                    )
-                    for r in recs
-                ]
+            arr_attrs = [
+                json.dumps(
+                    {k: (v.item() if hasattr(v, "item") else v) for k, v in r.items()},
+                    default=str,
+                    sort_keys=True,
+                )
+                for r in pdf[attr_cols].to_dict("records")
+            ]
         if not (arr_ids or buf_ids):
-            return
+            return rows, value, None
         # late-arrival drop BEFORE the scan (round-8 bug B fix): lateness is
         # judged against the PRE-batch high-water mark / fold point — an
         # element is late relative to what the scan has already committed,
@@ -1726,12 +1711,11 @@ def _stream_kernel(
             hwm = max(hwm, max(arr_ts))
         fold_pt = hwm - disorder if disorder is not None else hwm
         events = to_events(buf_ids, buf_ts, buf_types, buf_attrs)
-        rows: list[dict] = []
         if disorder is None:
             # ascending-time mode: fold the whole buffer (scan FIRST, trim
             # after — trimming first would evict in-batch events that still
             # complete matches with the batch's newest arrivals)
-            emit_new(events, emitted, rows, key, None, closed_only=True)
+            emit_new(events, emitted, rows, None, closed_only=True)
         else:
             # watermark mode: fold only the committed prefix (STRICTLY below
             # the fold point, so a later arrival tying the boundary can never
@@ -1743,7 +1727,7 @@ def _stream_kernel(
             partials = None
             if prefix:
                 partials = emit_new(
-                    prefix, emitted, rows, key, fold_pt,
+                    prefix, emitted, rows, fold_pt,
                     closed_only=True, want_partials=compactable,
                 )
         keep = [e for e in events if e["__ts"] >= hwm - horizon]
@@ -1784,13 +1768,9 @@ def _stream_kernel(
         ]
         if attr_cols:
             new_state.append([e["__attrs_json"] for e in keep])
-        state.update(tuple(new_state))
-        if use_cleanup_timer:
-            state.setTimeoutDuration(int(horizon_s * 1000) if timer_ms is None else timer_ms)
-        if rows:
-            yield pd.DataFrame(rows, columns=key_cols + out_cols)
+        return rows, tuple(new_state), clock.batch_ms + timer_ms if use_cleanup_timer else None
 
-    return fn
+    return step
 
 
 def cep_stream_late_side(
@@ -1848,37 +1828,25 @@ def cep_stream_late_side(
         [f"{k} long" for k in key_cols]
         + [f"{id_col} long", f"{ts_col} timestamp", f"{type_col} string"]
     )
-    out_cols = key_cols + [id_col, ts_col, type_col]
 
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-            state.remove()
-            return
-        hwm = float(state.get[0]) if state.exists else float("-inf")
-        # drain every Arrow chunk first: the iterator is ONE micro-batch and
-        # the kernel judges all its arrivals against the PRE-batch
+    def step(key, pdf, value, clock):
+        hwm = float(value[0]) if value else float("-inf")
+        # every arrival of the micro-batch is judged against the PRE-batch
         # high-water mark, never against a same-batch neighbor
-        arrivals = []
-        for pdf in pdfs:
-            for i, t, y in zip(pdf[id_col], pdf[ts_col], pdf[type_col]):
-                arrivals.append((int(i), pd.Timestamp(t), str(y)))
-        if not arrivals:
-            return
         admit_floor = (
             max(hwm - horizon, hwm - disorder) if disorder is not None else hwm - horizon
         )
         rows = []
-        for i, t, y in arrivals:
+        for i, t, y in zip(pdf[id_col], pdf[ts_col], pdf[type_col]):
+            t = pd.Timestamp(t)
             ts_us = float(t.value // 1000)
             if ts_us < admit_floor:
-                rows.append(dict(zip(key_cols, key)) | {id_col: i, ts_col: t, type_col: y})
+                rows.append({id_col: int(i), ts_col: t, type_col: str(y)})
             hwm = max(hwm, ts_us)
-        state.update((hwm,))
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
+        return rows, (hwm,), None
 
     return per_key_state(
-        stream, key_cols, fn, out_schema, "hwm double", GroupStateTimeout.NoTimeout,
+        stream, key_cols, [], step, out_schema, "hwm double", GroupStateTimeout.NoTimeout,
         [*key_cols, id_col, ts_col, type_col],
     )
 

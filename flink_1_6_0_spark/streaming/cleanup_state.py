@@ -932,16 +932,16 @@ def group_agg_retention_stream(
     query_config: StreamQueryConfig,
     output_schema: str | None = None,
 ):
-    """LIVE Structured-Streaming execution of the retention group-agg: the
-    live keyed runner ``keyed.per_key_state`` with
+    """LIVE Structured-Streaming execution of the retention group-agg: a
+    pure step on the live keyed runner ``keyed.per_key_state`` with
     ``GroupStateTimeout.ProcessingTimeTimeout`` — the wall clock plays the
     processing time the batch replay injects.
 
-    The state carries (sum, cnt, cleanup_time); each micro-batch applies the
-    reference's coalescing rule against real time (a new timeout is set only
-    when now + min outruns the standing cleanup time,
-    ProcessFunctionWithCleanupState.scala:46) and a timed-out invocation
-    drops the state, so a key idle past the retention window restarts from
+    The value carries (sum, cnt, cleanup_time); each micro-batch applies the
+    reference's coalescing rule against real time (a new deadline is set
+    only when now + min outruns the standing cleanup time,
+    ProcessFunctionWithCleanupState.scala:46) and a timed-out call drops
+    the value, so a key idle past the retention window restarts from
     zero — GroupAggProcessFunction.scala semantics on a live stream. Returns
     the transformed streaming DataFrame (pair with an update-mode sink).
 
@@ -950,27 +950,16 @@ def group_agg_retention_stream(
     """
     import time
 
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     qc = query_config
 
-    def fn(key, pdf_iter, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def step(key, pdf, value, clock):
+        if clock.timed_out:
+            return [], None, None
         now = int(time.time() * 1000)
-        acc_sum, cnt, cleanup = state.get if state.exists else (0, 0, None)
+        acc_sum, cnt, cleanup = value or (0, 0, None)
         out_ids, out_sums = [], []
-        # concat before sorting: a batch larger than one Arrow chunk must
-        # still apply in GLOBAL id order or the live path's intermediate
-        # sums diverge from the deterministic replay's
-        chunks = [c for c in pdf_iter if len(c)]
-        pdf = (
-            pd.concat(chunks, ignore_index=True).sort_values(id_col, kind="mergesort")
-            if chunks
-            else pd.DataFrame({id_col: [], value_col: []})
-        )
         for rid, v in zip(pdf[id_col], pdf[value_col]):
             acc_sum += int(v)
             cnt += 1
@@ -978,16 +967,19 @@ def group_agg_retention_stream(
             out_sums.append(acc_sum)
         if qc.state_cleaning_enabled and (cleanup is None or now + qc.min_idle_state_retention_ms > cleanup):
             cleanup = now + qc.max_idle_state_retention_ms
-        state.update((acc_sum, cnt, cleanup if cleanup is not None else 0))
-        if qc.state_cleaning_enabled:
-            state.setTimeoutDuration(max(1, cleanup - now))
-        yield pd.DataFrame({id_col: out_ids, key_col: key[0], "agg_sum": out_sums})
+        deadline = clock.batch_ms + max(1, cleanup - now) if qc.state_cleaning_enabled else None
+        value = (acc_sum, cnt, cleanup if cleanup is not None else 0)
+        return {id_col: out_ids, "agg_sum": out_sums}, value, deadline
 
     schema = output_schema or f"{id_col} long, {key_col} long, agg_sum long"
+    # the runner hands each key's rows over in id order across every Arrow
+    # chunk of the batch, or the live path's intermediate sums diverge from
+    # the deterministic replay's
     return per_key_state(
         stream,
         [key_col],
-        fn,
+        [id_col],
+        step,
         schema,
         "acc_sum long, cnt long, cleanup_time long",
         GroupStateTimeout.ProcessingTimeTimeout,

@@ -5,11 +5,11 @@ Reference: DataStream.countWindow → GlobalWindows + CountTrigger
 fire an aggregate every ``size`` elements; the window state is the running
 element count + partial accumulators.
 
-Spark has no count trigger, so the operator runs on the live keyed runner
-``keyed.per_key_state``: keyed state carries (next window index, leftover
-count, leftover sum) across micro-batches; rows are consumed in (ts, id)
-order and every completed window of exactly ``size`` rows emits one result
-row. Incomplete tail
+Spark has no count trigger, so the operator is a pure step on the live keyed
+runner ``keyed.per_key_state``: the value the runner stores per key carries
+(next window index, leftover count, leftover sum) across micro-batches; the
+runner hands each key's rows over in (ts, id) order and every completed
+window of exactly ``size`` rows emits one result row. Incomplete tail
 windows stay buffered in state (the reference's CountTrigger also never
 fires a partial window).
 
@@ -20,7 +20,6 @@ windows. The batch-form oracle shape is operators/windows.count_window.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from flink_1_6_0_spark.streaming.keyed import per_key_state
@@ -52,12 +51,8 @@ def stream_delta_window(
     )
     state_schema = "anchor double, acc_n long, acc_sum double"
 
-    def fn(key, pdfs, state):
-        anchor, acc_n, acc_sum = state.get if state.exists else (None, 0, 0.0)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([ts_col, id_col], kind="mergesort")
+    def step(key, pdf, value, clock):
+        anchor, acc_n, acc_sum = value or (None, 0, 0.0)
         rows = []
         # data-dependent resets → row loop (per-key-per-batch cardinality is
         # the micro-batch slice, not the stream)
@@ -66,21 +61,18 @@ def stream_delta_window(
                 anchor = float(v)
                 continue
             if abs(float(v) - anchor) > threshold:
-                rows.append((int(rid), int(acc_n), round(float(acc_sum), 2)))
+                rows.append(
+                    {"fire_id": int(rid), "win_n": int(acc_n), "win_sum": round(float(acc_sum), 2)}
+                )
                 anchor, acc_n, acc_sum = float(v), 0, 0.0
             else:
                 acc_n += 1
                 acc_sum += float(v)
-        state.update((anchor, int(acc_n), float(acc_sum)))
-        if rows:
-            out = pd.DataFrame(rows, columns=["fire_id", "win_n", "win_sum"])
-            for k, v in zip(key_cols, key):
-                out[k] = v
-            yield out[key_cols + ["fire_id", "win_n", "win_sum"]]
+        return rows, (anchor, int(acc_n), float(acc_sum)), None
 
     return per_key_state(
-        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.NoTimeout,
-        [*key_cols, ts_col, id_col, value_col],
+        stream, key_cols, [ts_col, id_col], step, out_schema, state_schema,
+        GroupStateTimeout.NoTimeout, [*key_cols, ts_col, id_col, value_col],
     )
 
 
@@ -103,12 +95,8 @@ def stream_count_window(
     )
     state_schema = "next_idx long, carry_n long, carry_sum double"
 
-    def fn(key, pdfs, state):
-        next_idx, carry_n, carry_sum = state.get if state.exists else (0, 0, 0.0)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([ts_col, id_col], kind="mergesort")
+    def step(key, pdf, value, clock):
+        next_idx, carry_n, carry_sum = value or (0, 0, 0.0)
         vals = pdf[value_col].to_numpy(dtype="float64")
         total = carry_n + len(vals)
         rows = []
@@ -118,19 +106,14 @@ def stream_count_window(
             lo = max(0, w * size - carry_n)
             hi = (w + 1) * size - carry_n
             s = (carry_sum if w == 0 else 0.0) + float(vals[lo:hi].sum())
-            rows.append((next_idx + w, size, round(s, 2)))
+            rows.append({"count_window": next_idx + w, "win_n": size, "win_sum": round(s, 2)})
             w += 1
         tail_lo = max(0, w * size - carry_n)
         new_carry_n = total - w * size
         new_carry_sum = (carry_sum if w == 0 else 0.0) + float(vals[tail_lo:].sum()) if new_carry_n else 0.0
-        state.update((int(next_idx + w), int(new_carry_n), float(new_carry_sum)))
-        if rows:
-            out = pd.DataFrame(rows, columns=["count_window", "win_n", "win_sum"])
-            for k, v in zip(key_cols, key):
-                out[k] = v
-            yield out[key_cols + ["count_window", "win_n", "win_sum"]]
+        return rows, (int(next_idx + w), int(new_carry_n), float(new_carry_sum)), None
 
     return per_key_state(
-        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.NoTimeout,
-        [*key_cols, ts_col, id_col, value_col],
+        stream, key_cols, [ts_col, id_col], step, out_schema, state_schema,
+        GroupStateTimeout.NoTimeout, [*key_cols, ts_col, id_col, value_col],
     )

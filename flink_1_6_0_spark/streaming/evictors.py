@@ -9,16 +9,18 @@ BEFORE the window function via WindowedStream.evictor
 (WindowedStream.java:267), which forces the window into buffering
 (EvictingWindowOperator) state.
 
-Spark form: the live keyed runner ``keyed.per_key_state`` with an
-event-time timer:
+Spark form: a pure step on the live keyed runner ``keyed.per_key_state``,
+which stores each key's value and event-time deadline:
 
-- keyed state buffers (window_start, ts, id, value) for every OPEN tumbling
+- the value buffers (window_start, ts, id, value) for every OPEN tumbling
   window — the same per-(key, window) element list the reference's
   EvictingWindowOperator keeps;
-- the timer armed at the earliest open window's end plays EventTimeTrigger:
-  when the watermark passes it, the window fires, the evictor trims the
-  sorted element list, and the aggregate (count + sum) runs over survivors;
-- fired windows leave state; an empty buffer removes the key's state.
+- the deadline returned at the earliest open window's end plays
+  EventTimeTrigger: when the watermark passes it, the window fires, the
+  evictor trims the sorted element list, and the aggregate (count + sum)
+  runs over survivors;
+- fired windows leave the value; an empty buffer returns None, which drops
+  the key.
 
 Scale: state is bounded by (open windows per key) × (elements per window) —
 identical to the reference's evicting-window state; keys shard across
@@ -84,25 +86,16 @@ def stream_evicted_window(
     state_schema = "wins array<long>, tss array<double>, ids array<long>, vals array<double>"
     size_us = size_seconds * 1_000_000
 
-    def fn(key, pdfs, state):
-        wins: list[int] = []
-        tss: list[float] = []
-        ids: list[int] = []
-        vals: list[float] = []
-        if state.exists:
-            w0, t0, i0, v0 = state.get
-            wins, tss, ids, vals = list(w0), list(t0), list(i0), list(v0)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = pdf[ts_col].astype("int64") // 1000  # ns → µs, exact
-            for t, i, v in zip(ts_us, pdf[id_col], pdf[value_col]):
-                t = int(t)
-                wins.append(t // size_us * size_us)
-                tss.append(float(t))
-                ids.append(int(i))
-                vals.append(float(v))
-        wm_ms = state.getCurrentWatermarkMs()
+    def step(key, pdf, value, clock):
+        wins, tss, ids, vals = map(list, value) if value else ([], [], [], [])
+        ts_us = pdf[ts_col].astype("int64") // 1000  # ns → µs, exact
+        for t, i, v in zip(ts_us, pdf[id_col], pdf[value_col]):
+            t = int(t)
+            wins.append(t // size_us * size_us)
+            tss.append(float(t))
+            ids.append(int(i))
+            vals.append(float(v))
+        wm_ms = clock.watermark_ms
         ripe = sorted({w for w in wins if (w + size_us) // 1000 <= wm_ms})
         rows = []
         for w in ripe:
@@ -110,7 +103,9 @@ def stream_evicted_window(
                 (t, i, v) for wi, t, i, v in zip(wins, tss, ids, vals) if wi == w
             )
             n_kept, sum_kept = evict_and_aggregate(elems, keep_last_n, keep_last_seconds)
-            rows.append((w, n_kept, sum_kept))
+            rows.append(
+                {"w_start": pd.Timestamp(w, unit="us"), "n_kept": n_kept, "sum_kept": sum_kept}
+            )
         if ripe:
             fired = set(ripe)
             live = [
@@ -122,21 +117,13 @@ def stream_evicted_window(
             tss = [x[1] for x in live]
             ids = [x[2] for x in live]
             vals = [x[3] for x in live]
-        if wins:
-            state.update((wins, tss, ids, vals))
-            # EventTimeTrigger: wake when the watermark passes the earliest
-            # open window's end (must arm strictly past the current watermark)
-            state.setTimeoutTimestamp(max((min(wins) + size_us) // 1000, wm_ms + 1))
-        elif state.exists:
-            state.remove()
-        if rows:
-            out = pd.DataFrame(rows, columns=["__w", "n_kept", "sum_kept"])
-            out["w_start"] = pd.to_datetime(out["__w"], unit="us")
-            for k, v in zip(key_cols, key):
-                out[k] = v
-            yield out[key_cols + ["w_start", "n_kept", "sum_kept"]]
+        if not wins:
+            return rows, None, None
+        # EventTimeTrigger: wake when the watermark passes the earliest
+        # open window's end (must arm strictly past the current watermark)
+        return rows, (wins, tss, ids, vals), max((min(wins) + size_us) // 1000, wm_ms + 1)
 
     return per_key_state(
-        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.EventTimeTimeout,
-        [*key_cols, ts_col, id_col, value_col],
+        stream, key_cols, [], step, out_schema, state_schema,
+        GroupStateTimeout.EventTimeTimeout, [*key_cols, ts_col, id_col, value_col],
     )

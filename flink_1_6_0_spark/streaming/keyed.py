@@ -11,20 +11,24 @@ The engine does the same for both of its inputs:
   cleanup_state.py, join_kernels.py, session_window.py).
 - :func:`per_key_state` runs a LIVE stream: one ``applyInPandasWithState``
   group per hash bucket of the keys (the key-group analog), whose state
-  holds every key of the bucket. Inside it the unchanged per-key
-  ``fn(key, pdfs, state)`` runs once per key with Spark's own
-  ``GroupState`` for that key, so state, timers and the data-then-timeouts
-  order are per key exactly as ``applyInPandasWithState`` would run them,
-  without paying one Python group round trip per key.
+  holds every key of the bucket. The runner owns each key's state and
+  timer, the way Flink's state backend does: the operator is a pure step
+  ``step(key, pdf, value, clock) -> (rows, value, deadline_ms)`` run once
+  per key, and the runner stores the value, arms and fires the deadline in
+  Spark's data-then-timeouts order and checks it as Spark's per-key
+  ``GroupState`` would, without paying one Python group round trip per key.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 __all__ = [
-    "per_key", "per_key_state", "bucket_kernel", "schema_fields", "schema_names", "order_spec",
+    "per_key", "per_key_state", "bucket_kernel", "Clock", "schema_fields", "schema_names",
+    "order_spec",
 ]
 
 #: the hash-bucket column per_key_state groups a live stream by
@@ -101,29 +105,31 @@ def per_key(df: DataFrame, key_cols: list[str], order, fn, schema: str, cols=Non
 def per_key_state(
     stream: DataFrame,
     key_cols: list[str],
-    fn,
+    order,
+    step,
     out_schema: str,
     state_schema: str,
     timeout: str,
     cols=None,
     mode: str = "append",
 ) -> DataFrame:
-    """Run the per-key ``applyInPandasWithState`` function ``fn(key, pdfs,
-    state)`` over a live ``stream``, one Spark group per hash bucket.
+    """Run the pure per-key ``step(key, pdf, value, clock) -> (rows, value,
+    deadline_ms)`` over a live ``stream``, one Spark group per hash bucket.
 
     ``cols`` (when given) is selected first, duplicates dropped: the columns
-    ``fn`` reads, keys included. Each row gets ``__bucket =
+    ``step`` reads, keys included. Each row gets ``__bucket =
     pmod(hash(keys), n)`` with ``n`` the ``spark.sql.shuffle.partitions``
     set when the query is built — one bucket per task slot (a bounded
     replay's state partitions are never wider, see sources.stream.drain)
-    — and the stream is grouped by it.
-    ``out_schema``, ``timeout`` (a ``GroupStateTimeout``) and ``mode`` (the
-    operator's output mode) are what ``fn`` would get per key.
+    — and the stream is grouped by it. ``order`` stable-sorts each key's
+    rows of a micro-batch, as in :func:`per_key`; an empty ``order`` keeps
+    arrival order. ``timeout`` (a ``GroupStateTimeout``) picks the clock the
+    deadlines count in and ``mode`` is the operator's output mode.
 
     The bucket's state wraps each field of ``state_schema`` in ``array<>``
     (one element per key), plus one array per key column and one array of
-    per-key timeout deadlines in ms. :func:`bucket_kernel` calls ``fn`` per
-    key inside the bucket."""
+    per-key deadlines in ms. :func:`bucket_kernel` calls ``step`` per key
+    inside the bucket."""
     n = int(stream.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if cols is not None:
         stream = stream.select(*dict.fromkeys(cols))
@@ -133,104 +139,120 @@ def per_key_state(
         + [f"__key_{k} array<{t}>" for k, t in zip(key_cols, key_types)]
         + ["__deadline_ms array<long>"]
     )
+    run = bucket_kernel(step, key_cols, order, schema_names(out_schema), timeout)
     return (
         stream.withColumn(BUCKET, F.pmod(F.hash(*key_cols), F.lit(n)))
         .groupBy(BUCKET)
-        .applyInPandasWithState(
-            bucket_kernel(fn, key_cols), out_schema, bucket_schema, mode, timeout
-        )
+        .applyInPandasWithState(run, out_schema, bucket_schema, mode, timeout)
     )
 
 
-def bucket_kernel(fn, key_cols: list[str]):
+class Clock(NamedTuple):
+    """What a step knows of time on one call. ``watermark_ms`` is read only
+    under an event-time timeout and is None otherwise."""
+
+    timed_out: bool
+    batch_ms: int
+    watermark_ms: int | None
+
+
+def bucket_kernel(step, key_cols: list[str], order, names: list[str], timeout: str):
     """The function :func:`per_key_state` runs per bucket: ``run(bucket_key,
     pdfs, bucket_state)``, factored out so tests can drive it with a
     ``GroupState`` of their own.
 
-    The bucket's rows are split by key once (arrival order kept within a
-    key) and ``fn`` runs on each key with rows, in key order, with
-    ``hasTimedOut`` false. Then ``fn`` runs on each stored key whose
-    deadline has passed, with ``hasTimedOut`` true and an empty frame of the
-    input columns: Spark's data-then-timeouts order. A key that just got
-    rows has cleared or re-armed its timer past the threshold, so it never
-    times out in the same call, as in Spark.
+    The bucket's Arrow chunks are joined, stable-sorted once on the keys and
+    ``order``, and split by key. ``step`` runs on each key with rows, in key
+    order, then on each stored key whose deadline has passed with
+    ``clock.timed_out`` and an empty frame of the input columns: Spark's
+    data-then-timeouts order. ``value`` is the key's stored state tuple or
+    None. The step returns ``rows`` (what ``pandas.DataFrame(rows,
+    columns=names)`` accepts; the key columns are filled in), the new value
+    (None drops the key) and its deadline in ms (None arms no timer), so a
+    key's timer is cleared on every call unless the step sets it again.
 
-    Each call gets Spark's own ``GroupState`` for the key, so
-    ``update``/``remove``/``setTimeout*`` validate exactly as per key. Its
-    timeout starts unset: a key's timer is cleared on every call unless the
-    call sets it again. A key fires when ``deadline < threshold``, the
-    threshold being the batch time (processing time) or the watermark
-    (event time), the comparison of Spark's FlatMapGroupsWithStateExec. A
-    key lives in the bucket while its state exists; a timer on a key
-    without state raises, since the bucket cannot hold it.
+    A key fires when ``deadline < threshold``, the threshold being the batch
+    time (processing time) or the watermark (event time), the comparison of
+    Spark's FlatMapGroupsWithStateExec. A key that just got rows has
+    cleared or re-armed its timer, so it never times out in the same call.
+    A deadline Spark's per-key ``GroupState`` would refuse raises
+    ``ValueError``: one without a value, any under ``NoTimeout``, a
+    processing-time one at or before the batch time, an event-time one
+    below the watermark.
 
     The bucket's own timer is its earliest key deadline; the bucket state
-    is removed with its last key."""
+    is removed with its last key. All rows of a call leave as one frame."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
     nk = len(key_cols)
+    spec = order_spec(order)
+    by = [*key_cols, *(c for c, _ in spec)]
+    ascending = [True] * nk + [asc for _, asc in spec]
+    processing = timeout == GroupStateTimeout.ProcessingTimeTimeout
+    event = timeout == GroupStateTimeout.EventTimeTimeout
 
     def run(_bucket, pdfs, bucket):
-        import json
+        import warnings
 
         import pandas as pd
-        from pyspark.sql import Row
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-        props = json.loads(bucket.json())
-        clock = {
-            k: props[k]
-            for k in (
-                "batchProcessingTimeMs", "eventTimeWatermarkMs", "timeoutConf", "watermarkPresent",
-            )
-        }
-        threshold = {
-            GroupStateTimeout.ProcessingTimeTimeout: clock["batchProcessingTimeMs"],
-            GroupStateTimeout.EventTimeTimeout: clock["eventTimeWatermarkMs"],
-        }.get(clock["timeoutConf"])
-        unset = GroupState.NO_TIMESTAMP
-        # key -> (state value, deadline ms)
-        keys: dict[tuple, tuple[tuple, int]] = {}
+        batch_ms = bucket.getCurrentProcessingTimeMs()
+        watermark_ms = bucket.getCurrentWatermarkMs() if event else None
+        threshold = batch_ms if processing else watermark_ms
+        # key -> (state value, deadline ms or None)
+        keys: dict[tuple, tuple[tuple, int | None]] = {}
         if bucket.exists:
             for *vals, deadline in zip(*bucket.get):
                 keys[tuple(vals[-nk:])] = (tuple(vals[:-nk]), deadline)
         pdf = pd.concat(list(pdfs), ignore_index=True).drop(columns=BUCKET)
+        pdf = pdf.sort_values(by, ascending=ascending, kind="mergesort", ignore_index=True)
+        frames, out_keys = [], []
 
-        def call(key, rows, timed_out):
-            value, _ = keys.pop(key, (None, unset))
-            state = GroupState(
-                optionalValue=None if value is None else Row(*value),
-                hasTimedOut=timed_out,
-                defined=value is not None,
-                updated=False,
-                removed=False,
-                timeoutTimestamp=unset,
-                keyAsUnsafe=None,
-                valueSchema=None,
-                **clock,
-            )
-            yield from fn(key, iter([rows]), state)
-            deadline = json.loads(state.json())["timeoutTimestamp"]
-            if state.exists:
-                keys[key] = (state.get, deadline)
-            elif deadline != unset:
-                raise ValueError(f"key {key} set a timer without state; a bucket keeps none")
+        def call(key, rows, clock):
+            value, _ = keys.pop(key, (None, None))
+            out, value, deadline = step(key, rows, value, clock)
+            if deadline is not None:
+                if value is None:
+                    raise ValueError(f"key {key} set a timer without state")
+                if not (processing or event):
+                    raise ValueError(f"key {key} set a timer under NoTimeout")
+                if processing and deadline <= batch_ms:
+                    raise ValueError(f"key {key}: timer {deadline} not after batch time {batch_ms}")
+                if event and deadline < watermark_ms:
+                    raise ValueError(f"key {key}: timer {deadline} behind watermark {watermark_ms}")
+            if value is not None:
+                keys[key] = (value, deadline)
+            if len(out):
+                frames.append(pd.DataFrame(out, columns=names))
+                out_keys.extend([key] * len(frames[-1]))
 
-        for key, rows in pdf.groupby(key_cols, sort=True, dropna=False):
-            yield from call(key, rows.reset_index(drop=True), False)
+        clock = Clock(False, batch_ms, watermark_ms)
+        for key, rows in pdf.groupby(key_cols, sort=False, dropna=False):
+            call(key, rows.reset_index(drop=True), clock)
         if threshold is not None:
-            due = [k for k, (_, d) in keys.items() if d != unset and d < threshold]
+            due = [k for k, (_, d) in keys.items() if d is not None and d < threshold]
             for key in due:
-                yield from call(key, pdf.iloc[:0], True)
+                call(key, pdf.iloc[:0], clock._replace(timed_out=True))
+        if frames:
+            with warnings.catch_warnings():
+                # columns a key leaves all null (the key columns, filled
+                # below; a timeout row's match ids) may widen the joined
+                # dtype: Arrow casts each column to ``out_schema`` anyway
+                warnings.simplefilter("ignore", FutureWarning)
+                out = pd.concat(frames, ignore_index=True)
+            out[key_cols] = pd.DataFrame(out_keys, columns=key_cols)
+            yield out
 
         if not keys:
             bucket.remove()
             return
         bucket.update(tuple(
-            list(col) for col in zip(*(v + k + (d,) for k, (v, d) in keys.items()))
+            list(col) for col in zip(*((*v, *k, d) for k, (v, d) in keys.items()))
         ))
-        deadlines = [d for _, d in keys.values() if d != unset]
+        deadlines = [d for _, d in keys.values() if d is not None]
         if not deadlines:
             return
-        if clock["timeoutConf"] == GroupStateTimeout.ProcessingTimeTimeout:
+        if processing:
             # a duration must be positive: a key due exactly now fires 1 ms late
             bucket.setTimeoutDuration(max(1, min(deadlines) - threshold))
         else:

@@ -5,18 +5,18 @@ functions (ProcTimeUnboundedOver, RowTimeBoundedRowsOver, ...) — accumulators
 live in keyed state, rows emit with the aggregate of everything up to the
 row's position in time order.
 
-Spark disallows window functions on streaming frames, so the operator runs
-on the live keyed runner ``keyed.per_key_state``: per key, state carries the
-running accumulators (sum, count) across micro-batches; within a batch the
-rows are processed in (ts, id) order — exactly RowTimeUnboundedOver's
-semantics under in-order delivery (out-of-order rows across batches take the
-state as-of arrival, the proc-time variant's behavior; document the
-difference).
+Spark disallows window functions on streaming frames, so the operator is a
+pure step on the live keyed runner ``keyed.per_key_state``: per key, the
+value the runner stores carries the running accumulators (sum, count)
+across micro-batches; within a batch the runner hands the rows over in
+(ts, id) order — exactly RowTimeUnboundedOver's semantics under in-order
+delivery (out-of-order rows across batches take the state as-of arrival,
+the proc-time variant's behavior; document the difference).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 
 from flink_1_6_0_spark.streaming.keyed import per_key_state
@@ -39,27 +39,16 @@ def stream_running_agg(
     )
     state_schema = "acc_sum double, acc_n long"
 
-    def fn(key, pdfs, state):
-        acc_sum, acc_n = (state.get if state.exists else (0.0, 0))
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        import numpy as np
-
-        pdf = pd.concat(frames).sort_values([ts_col, id_col], kind="mergesort")
-        out = pd.DataFrame(
-            {
-                id_col: pdf[id_col].values,
-                "running_sum": (acc_sum + pdf[value_col].cumsum()).round(2).values,
-                "running_n": acc_n + np.arange(1, len(pdf) + 1),
-            }
-        )
-        for k, v in zip(key_cols, key):
-            out[k] = v
-        state.update((float(acc_sum + pdf[value_col].sum()), int(acc_n + len(pdf))))
-        yield out[key_cols + [id_col, "running_sum", "running_n"]]
+    def step(key, pdf, value, clock):
+        acc_sum, acc_n = value or (0.0, 0)
+        out = {
+            id_col: pdf[id_col].values,
+            "running_sum": (acc_sum + pdf[value_col].cumsum()).round(2).values,
+            "running_n": acc_n + np.arange(1, len(pdf) + 1),
+        }
+        return out, (float(acc_sum + pdf[value_col].sum()), int(acc_n + len(pdf))), None
 
     return per_key_state(
-        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.NoTimeout,
-        [*key_cols, ts_col, id_col, value_col],
+        stream, key_cols, [ts_col, id_col], step, out_schema, state_schema,
+        GroupStateTimeout.NoTimeout, [*key_cols, ts_col, id_col, value_col],
     )

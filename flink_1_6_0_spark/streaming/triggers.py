@@ -10,11 +10,13 @@ each boundary. PurgingTrigger (PurgingTrigger.java:33) wraps any trigger and
 turns FIRE into FIRE_AND_PURGE: each emission clears the pane, so the next
 fire covers only elements that arrived since.
 
-Spark form: the live keyed runner ``keyed.per_key_state`` + event-time
-timer (the same EventTimeTrigger machinery as streaming.evictors):
+Spark form: a pure step on the live keyed runner ``keyed.per_key_state``,
+which stores each key's value and event-time deadline (the same
+EventTimeTrigger machinery as streaming.evictors):
 
-- keyed state buffers each open tumbling window's (ts, value) pairs plus the
-  window's last-fired boundary;
+- the value buffers each open tumbling window's (ts, value) pairs plus the
+  window's last-fired boundary; the deadline is the earliest unfired
+  boundary;
 - when the watermark passes an unfired boundary ``b``, the window fires:
   * continuous (purging=False): aggregate over buffered elements with
     ``ts < b`` — the running "as of b" pane, nondecreasing per window;
@@ -125,25 +127,22 @@ def stream_continuous_window(
     size_us = size_seconds * 1_000_000
     iv_us = interval_seconds * 1_000_000
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, value, clock):
         wins: list[int] = []
         tss: list[float] = []
         vals: list[float] = []
         lastb: dict[int, int] = {}
-        if state.exists:
-            w0, t0, v0, fw, fl = state.get
+        if value:
+            w0, t0, v0, fw, fl = value
             wins, tss, vals = list(w0), list(t0), list(v0)
             lastb = {int(w): int(b) for w, b in zip(fw, fl)}
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, v in zip(ts_us, pdf[value_col]):
-                t = int(t)
-                wins.append(t // size_us * size_us)
-                tss.append(float(t))
-                vals.append(float(v))
-        wm_ms = state.getCurrentWatermarkMs()
+        ts_us = pdf[ts_col].astype("int64") // 1000
+        for t, v in zip(ts_us, pdf[value_col]):
+            t = int(t)
+            wins.append(t // size_us * size_us)
+            tss.append(float(t))
+            vals.append(float(v))
+        wm_ms = clock.watermark_ms
         rows = []
         closed: set[int] = set()
         purged: list[tuple[int, float, float]] = []
@@ -187,25 +186,29 @@ def stream_continuous_window(
         wins = [x[0] for x in live]
         tss = [x[1] for x in live]
         vals = [x[2] for x in live]
-        if wins or lastb:
-            fw = sorted(lastb)
-            state.update((wins, tss, vals, fw, [lastb[w] for w in fw]))
-            pending = [
-                (lastb.get(w, min((int(t) for wi, t in zip(wins, tss) if wi == w), default=0) // iv_us * iv_us) + iv_us)
-                for w in set(wins) | set(lastb)
-            ]
-            state.setTimeoutTimestamp(max(min(pending) // 1000, wm_ms + 1))
-        elif state.exists:
-            state.remove()
-        if rows:
-            out = pd.DataFrame(rows, columns=["__w", "__b", "n", "sum_v"])
-            out["w_start"] = pd.to_datetime(out["__w"], unit="us")
-            out["fire_ts"] = pd.to_datetime(out["__b"], unit="us")
-            for k, v in zip(key_cols, key):
-                out[k] = v
-            yield out[key_cols + ["w_start", "fire_ts", "n", "sum_v"]]
+        rows = [
+            {
+                "w_start": pd.Timestamp(w, unit="us"),
+                "fire_ts": pd.Timestamp(b, unit="us"),
+                "n": n,
+                "sum_v": sum_v,
+            }
+            for w, b, n, sum_v in rows
+        ]
+        if not (wins or lastb):
+            return rows, None, None
+        fw = sorted(lastb)
+        pending = [
+            (lastb.get(w, min((int(t) for wi, t in zip(wins, tss) if wi == w), default=0) // iv_us * iv_us) + iv_us)
+            for w in set(wins) | set(lastb)
+        ]
+        return (
+            rows,
+            (wins, tss, vals, fw, [lastb[w] for w in fw]),
+            max(min(pending) // 1000, wm_ms + 1),
+        )
 
     return per_key_state(
-        stream, key_cols, fn, out_schema, state_schema, GroupStateTimeout.EventTimeTimeout,
-        [*key_cols, ts_col, value_col],
+        stream, key_cols, [], step, out_schema, state_schema,
+        GroupStateTimeout.EventTimeTimeout, [*key_cols, ts_col, value_col],
     )

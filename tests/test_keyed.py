@@ -1,8 +1,9 @@
 """streaming/keyed.py on hand-made rows. per_key, the batch per-key
 runner: the per-key sort, one body call per key and the empty frame a key
 that emits nothing returns. bucket_kernel, the bucket function of the live
-runner per_key_state: per-key timers inside one bucket, driven with Spark's
-own GroupState as the bucket's state and no streaming query."""
+runner per_key_state: per-key values and timers of pure steps inside one
+bucket, driven with Spark's own GroupState as the bucket's state and no
+streaming query."""
 
 from __future__ import annotations
 
@@ -50,6 +51,7 @@ def test_per_key_empty_result_takes_the_schema_names(spark):
 
 PROC = GroupStateTimeout.ProcessingTimeTimeout
 EVENT = GroupStateTimeout.EventTimeTimeout
+NONE = GroupStateTimeout.NoTimeout
 
 
 def _bucket_state(
@@ -83,29 +85,27 @@ def _bucket_timeout(bucket):
     return json.loads(bucket.json())["timeoutTimestamp"]
 
 
-def _timer_fn(calls, durations):
-    """Counts each key's rows in its state and arms ``durations[key]``; a
-    timed-out key is removed."""
+def _timer_step(calls, durations):
+    """Counts each key's rows in its value and arms ``durations[key]`` past
+    the batch time; a timed-out key is dropped. Its rows leave the key
+    column to the runner."""
 
-    def fn(key, pdfs, state):
-        (pdf,) = list(pdfs)
-        calls.append((key[0], state.hasTimedOut, list(pdf.columns), pdf["v"].tolist()))
-        if state.hasTimedOut:
-            state.remove()
-            return
-        state.update((len(pdf),))
-        state.setTimeoutDuration(durations[key[0]])
-        yield pd.DataFrame({"k": [key[0]]})
+    def step(key, pdf, value, clock):
+        calls.append((key[0], clock.timed_out, list(pdf.columns), pdf["v"].tolist()))
+        if clock.timed_out:
+            return [], None, None
+        return [{"n": len(pdf)}], (len(pdf),), clock.batch_ms + durations[key[0]]
 
-    return fn
+    return step
 
 
 def test_quiet_key_times_out_after_the_keys_with_rows():
     calls = []
-    run = bucket_kernel(_timer_fn(calls, {"A": 500, "B": 500}), ["k"])
+    run = bucket_kernel(_timer_step(calls, {"A": 500, "B": 500}), ["k"], [], ["k", "n"], PROC)
     b1 = _bucket_state(now=1000)
-    out = [f["k"].tolist() for f in run((0,), [_rows(["B", "A", "B"])], b1)]
-    assert out == [["A"], ["B"]]  # key order
+    (out,) = run((0,), [_rows(["B", "A", "B"])], b1)
+    # key order, one frame per call, the key column filled in
+    assert out.values.tolist() == [["A", 1], ["B", 2]]
     # each key's rows in arrival order
     assert calls == [("A", False, ["k", "v"], [1]), ("B", False, ["k", "v"], [0, 2])]
     # A is quiet past its deadline (1500 < 1600) while B gets rows
@@ -119,7 +119,8 @@ def test_quiet_key_times_out_after_the_keys_with_rows():
 
 def test_bucket_timeout_is_the_smallest_remaining_key_deadline():
     calls = []
-    run = bucket_kernel(_timer_fn(calls, {"A": 300, "B": 700, "C": 900}), ["k"])
+    step = _timer_step(calls, {"A": 300, "B": 700, "C": 900})
+    run = bucket_kernel(step, ["k"], [], ["k", "n"], PROC)
     b1 = _bucket_state(now=1000)
     list(run((0,), [_rows(["A", "B", "C"])], b1))
     assert _bucket_timeout(b1) == 1300
@@ -137,42 +138,72 @@ def test_bucket_timeout_is_the_smallest_remaining_key_deadline():
     assert calls == []
 
 
-def test_event_time_timer_behind_the_watermark_raises():
-    def fn(key, pdfs, state):
-        state.update((1,))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() - 1)
-        yield pd.DataFrame({"k": [key[0]]})
+@pytest.mark.parametrize(
+    "timeout, value, deadline, why",
+    [
+        pytest.param(PROC, None, 1001, "without state", id="deadline-without-value"),
+        pytest.param(NONE, (1,), 1001, "under NoTimeout", id="deadline-under-no-timeout"),
+        pytest.param(PROC, (1,), 1000, "not after batch", id="processing-time-at-the-batch-time"),
+        pytest.param(EVENT, (1,), 4999, "behind watermark", id="event-time-behind-the-watermark"),
+    ],
+)
+def test_event_time_timer_behind_the_watermark_raises(timeout, value, deadline, why):
+    """The runner refuses each deadline Spark's per-key GroupState refused."""
 
-    run = bucket_kernel(fn, ["k"])
-    with pytest.raises(ValueError):
-        list(run((0,), [_rows(["A"])], _bucket_state(now=1, watermark=5000, timeout=EVENT)))
+    def step(key, pdf, _value, clock):
+        return [], value, deadline
 
-    def at_watermark(key, pdfs, state):
-        state.update((1,))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs())
-        yield from ()
+    run = bucket_kernel(step, ["k"], [], ["k"], timeout)
+    with pytest.raises(ValueError, match=why):
+        list(run((0,), [_rows(["A"])], _bucket_state(now=1000, watermark=5000, timeout=timeout)))
+
+    def at_watermark(key, pdf, _value, clock):
+        return [], (1,), clock.watermark_ms
 
     # a timer at the watermark is allowed, and the bucket arms there too
     b = _bucket_state(now=1, watermark=5000, timeout=EVENT)
-    list(bucket_kernel(at_watermark, ["k"])((0,), [_rows(["A"])], b))
+    list(bucket_kernel(at_watermark, ["k"], [], ["k"], EVENT)((0,), [_rows(["A"])], b))
     assert _bucket_timeout(b) == 5000
 
 
 def test_bucket_state_is_removed_with_its_last_key():
-    def fn(key, pdfs, state):
-        if state.exists:
-            state.remove()
-        else:
-            state.update((1,))
-        yield from ()
+    def step(key, pdf, value, clock):
+        return [], None if value else (1,), None
 
-    run = bucket_kernel(fn, ["k"])
-    b1 = _bucket_state(timeout=GroupStateTimeout.NoTimeout)
+    run = bucket_kernel(step, ["k"], [], ["k"], NONE)
+    b1 = _bucket_state(timeout=NONE)
     list(run((0,), [_rows(["A", "B"])], b1))
     assert b1.get[1] == ["A", "B"]
-    b2 = _bucket_state(b1, timeout=GroupStateTimeout.NoTimeout)
+    b2 = _bucket_state(b1, timeout=NONE)
     list(run((0,), [_rows(["A"])], b2))
     assert b2.exists and b2.get[1] == ["B"]
-    b3 = _bucket_state(b2, timeout=GroupStateTimeout.NoTimeout)
+    b3 = _bucket_state(b2, timeout=NONE)
     list(run((0,), [_rows(["B"])], b3))
     assert not b3.exists and json.loads(b3.json())["removed"]
+
+
+@pytest.mark.parametrize(
+    "order, want",
+    [
+        pytest.param(["id"], [("A", [2, 3, 5]), ("B", [1, 4])], id="id-order"),
+        pytest.param([], [("A", [5, 3, 2]), ("B", [4, 1])], id="arrival-order"),
+    ],
+)
+def test_a_key_split_across_arrow_chunks_reaches_its_step_as_one_frame(order, want):
+    """Spark may hand a bucket several Arrow chunks. A key whose ids arrive
+    out of order across two chunks reaches its step once, as one frame in
+    ``order`` (the retention agg's GLOBAL id order), or in arrival order
+    when ``order`` is empty."""
+    calls = []
+
+    def step(key, pdf, value, clock):
+        calls.append((key[0], pdf["id"].tolist()))
+        return [], None, None
+
+    chunks = [
+        pd.DataFrame({"k": ["A", "B", "A"], "id": [5, 4, 3], BUCKET: 0}),
+        pd.DataFrame({"k": ["B", "A"], "id": [1, 2], BUCKET: 0}),
+    ]
+    run = bucket_kernel(step, ["k"], order, ["k"], NONE)
+    list(run((0,), chunks, _bucket_state(timeout=NONE)))
+    assert calls == want

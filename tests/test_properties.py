@@ -501,29 +501,34 @@ def test_continuous_trigger_straggler_folds_into_next_fire():
 # ---------------------------------------------------------------------------
 
 
-class _FakeGroupState:
-    """Minimal GroupState double for driving _stream_kernel directly."""
+def _frame(batch):
+    """One micro-batch of (eid, ts seconds, etype) events as the frame the
+    live runner hands a key's step."""
+    import pandas as pd
 
-    def __init__(self):
-        self._val = None
-        self.hasTimedOut = False
+    return pd.DataFrame(
+        {
+            "eid": [e[0] for e in batch],
+            "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
+            "etype": [e[2] for e in batch],
+        }
+    )
 
-    @property
-    def exists(self):
-        return self._val is not None
 
-    @property
-    def get(self):
-        return self._val
+def _carry(step, frames, flush=False):
+    """Run a streaming CEP step over one key's micro-batch frames, carrying
+    its value between calls as keyed.per_key_state does; ``flush=True`` ends
+    with the timer call a quiet key gets. Returns (rows, value before the
+    flush)."""
+    from flink_1_6_0_spark.streaming.keyed import Clock
 
-    def update(self, v):
-        self._val = v
-
-    def remove(self):
-        self._val = None
-
-    def setTimeoutDuration(self, ms):
-        pass
+    rows, value = [], None
+    for pdf in frames:
+        out, value, _ = step((1,), pdf, value, Clock(False, 0, None))
+        rows += out
+    if flush:
+        rows += step((1,), frames[0].iloc[:0], value, Clock(True, 0, None))[0]
+    return rows, value
 
 
 def _drive_kernel(pattern, batches, horizon_s, disorder_s=None, flush=False):
@@ -532,33 +537,16 @@ def _drive_kernel(pattern, batches, horizon_s, disorder_s=None, flush=False):
     ``disorder_s`` selects the watermark (fold-point) mode; ``flush=True``
     fires the cleanup-timer path at the end — the quiescence flush a real
     query gets after a horizon of silence."""
-    import pandas as pd
-
     from flink_1_6_0_spark.streaming.cep import _stream_kernel
 
-    fn = _stream_kernel(
-        pattern, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        pattern, "ts", "eid", "etype",
         horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=None if disorder_s is None else int(disorder_s * 1_000_000),
     )
-    state = _FakeGroupState()
-    got = set()
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "eid": [e[0] for e in batch],
-                "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
-                "etype": [e[2] for e in batch],
-            }
-        )
-        for out in fn((1,), [pdf], state) or ():
-            got.update(zip(out["a_id"], out["b_id"]))
-    if flush:
-        state.hasTimedOut = True
-        for out in fn((1,), [], state) or ():
-            got.update(zip(out["a_id"], out["b_id"]))
-    return got
+    rows, _ = _carry(step, [_frame(b) for b in batches], flush)
+    return {(r["a_id"], r["b_id"]) for r in rows}
 
 
 def _batch_matches(pattern, events):
@@ -720,37 +708,18 @@ def test_cep_stream_kernel_drops_beyond_horizon_lateness():
 def _drive_kernel_with_timeouts(pattern, batches, horizon_s, disorder_s):
     """Like _drive_kernel but with the timeout side output enabled; returns
     (matches, timeouts) where timeouts are (a_id, pending_stage)."""
-    import pandas as pd
-
     from flink_1_6_0_spark.streaming.cep import _stream_kernel
 
-    fn = _stream_kernel(
-        pattern, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        pattern, "ts", "eid", "etype",
         horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=int(disorder_s * 1_000_000),
         with_timeouts=True,
     )
-    state = _FakeGroupState()
-    matches, touts = set(), set()
-    def drain(out_iter):
-        for out in out_iter or ():
-            for r in out.to_dict("records"):
-                if r["timed_out"]:
-                    touts.add((r["a_id"], r["pending_stage"]))
-                else:
-                    matches.add((r["a_id"], r["b_id"]))
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "eid": [e[0] for e in batch],
-                "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
-                "etype": [e[2] for e in batch],
-            }
-        )
-        drain(fn((1,), [pdf], state))
-    state.hasTimedOut = True
-    drain(fn((1,), [], state))
+    rows, _ = _carry(step, [_frame(b) for b in batches], flush=True)
+    matches = {(r["a_id"], r["b_id"]) for r in rows if not r["timed_out"]}
+    touts = {(r["a_id"], r["pending_stage"]) for r in rows if r["timed_out"]}
     return matches, touts
 
 
@@ -816,34 +785,16 @@ def test_cep_stream_kernel_skip_past_last_event_across_batches(data):
 
 def _drive_kernel_quant(pattern, batches, horizon_s, disorder_s):
     """Drive the kernel for an a+ -> b pattern; returns {(a_ids tuple, b_id)}."""
-    import pandas as pd
-
     from flink_1_6_0_spark.streaming.cep import _stream_kernel
 
-    fn = _stream_kernel(
-        pattern, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        pattern, "ts", "eid", "etype",
         horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=int(disorder_s * 1_000_000),
     )
-    state = _FakeGroupState()
-    got = set()
-    def drain(out_iter):
-        for out in out_iter or ():
-            for r in out.to_dict("records"):
-                got.add((tuple(r["a_ids"]), r["b_id"]))
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "eid": [e[0] for e in batch],
-                "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
-                "etype": [e[2] for e in batch],
-            }
-        )
-        drain(fn((1,), [pdf], state))
-    state.hasTimedOut = True
-    drain(fn((1,), [], state))
-    return got
+    rows, _ = _carry(step, [_frame(b) for b in batches], flush=True)
+    return {(tuple(r["a_ids"]), r["b_id"]) for r in rows}
 
 
 @given(_bounded_disorder_deliveries())
@@ -940,16 +891,17 @@ def test_bucket_runner_equals_the_per_key_kernel(batches):
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from flink_1_6_0_spark.streaming.cep import _stream_kernel
-    from flink_1_6_0_spark.streaming.keyed import BUCKET, bucket_kernel
+    from flink_1_6_0_spark.streaming.keyed import BUCKET, Clock, bucket_kernel
 
     p = Pattern.begin("a", lambda e: e["etype"] == "a").followed_by(
         "b", lambda e: e["etype"] == "b"
     ).within(100)
-    fn = _stream_kernel(
-        p, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        p, "ts", "eid", "etype",
         horizon=200_000_000, horizon_s=200.0, use_cleanup_timer=True,
         disorder=30_000_000, timer_ms=1000, with_timeouts=True,
     )
+    names = ["k", "a_id", "b_id", "timed_out", "pending_stage"]
 
     def frame(batch):
         return pd.DataFrame(
@@ -966,21 +918,24 @@ def test_bucket_runner_equals_the_per_key_kernel(batches):
             for r in out.astype(object).where(out.notna(), None).to_dict("records"):
                 rows.setdefault(r["k"], []).append(r)
 
-    # one key at a time, the way one Spark group per key runs it
-    states: dict[int, _FakeGroupState] = {}
+    # one key at a time, the step's value carried per key
+    values: dict[int, tuple] = {}
     want: dict[int, list] = {}
-    for batch in batches:
+
+    def call_step(key, pdf, clock):
+        out, values[key], _ = step((key,), pdf, values.get(key), clock)
+        collect(want, [pd.DataFrame(out, columns=names).assign(k=key)])
+
+    for i, batch in enumerate(batches):
         pdf = frame(batch)
         for key in sorted(set(pdf["k"])):
-            state = states.setdefault(key, _FakeGroupState())
-            collect(want, fn((key,), [pdf[pdf["k"] == key].reset_index(drop=True)], state))
-    want_state = {key: s.get for key, s in states.items() if s.exists}
-    for key, state in states.items():
-        state.hasTimedOut = True
-        collect(want, fn((key,), [frame([])], state))
+            call_step(key, pdf[pdf["k"] == key].reset_index(drop=True), Clock(False, 10 * i, None))
+    want_state = {key: v for key, v in values.items() if v is not None}
+    for key in want_state:
+        call_step(key, frame([]), Clock(True, 10_000, None))
 
     # one bucket, its state carried between calls as the state store does
-    run = bucket_kernel(fn, ["k"])
+    run = bucket_kernel(step, ["k"], [], names, GroupStateTimeout.ProcessingTimeTimeout)
     bucket = None
 
     def call(batch, now, timed_out=False):
@@ -1012,8 +967,6 @@ def _assert_stream_equals_batch_generic(pattern_fn, events, batches, horizon_s=2
     """Generic bounded-disorder equivalence: drive the kernel across the
     batches (+flush) and compare FULL output rows (every output stage
     column) against the batch executor's matches, id-resolved."""
-    import pandas as pd
-
     from flink_1_6_0_spark.streaming.cep import (
         _output_match,
         _output_stages,
@@ -1023,35 +976,19 @@ def _assert_stream_equals_batch_generic(pattern_fn, events, batches, horizon_s=2
     )
 
     p = pattern_fn()
-    fn = _stream_kernel(
-        p, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        p, "ts", "eid", "etype",
         horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=int(disorder_s * 1_000_000),
     )
     out_cols = [c for c, _ in _stage_out_cols(p)]
-    state = _FakeGroupState()
-    got = set()
 
     def freeze(v):
         return tuple(v) if isinstance(v, (list, tuple)) else v
 
-    def drain(out_iter):
-        for out in out_iter or ():
-            for r in out.to_dict("records"):
-                got.add(tuple(freeze(r[c]) for c in out_cols))
-
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "eid": [e[0] for e in batch],
-                "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
-                "etype": [e[2] for e in batch],
-            }
-        )
-        drain(fn((1,), [pdf], state))
-    state.hasTimedOut = True
-    drain(fn((1,), [], state))
+    rows, _ = _carry(step, [_frame(b) for b in batches], flush=True)
+    got = {tuple(freeze(r[c]) for c in out_cols) for r in rows}
 
     p2 = pattern_fn()
     evs = sorted(
@@ -1314,35 +1251,18 @@ def _batch_matches_with_comparator(pattern, events):
 def _drive_kernel_with_comparator(pattern, batches, horizon_s, disorder_s, flush=True):
     """_drive_kernel variant carrying a 'prio' attr column and the
     comparator over it through the streaming kernel."""
-    import pandas as pd
-
     from flink_1_6_0_spark.streaming.cep import _stream_kernel
 
-    fn = _stream_kernel(
-        pattern, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        pattern, "ts", "eid", "etype",
         horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=None if disorder_s is None else int(disorder_s * 1_000_000),
         attr_cols=["prio"], comparator_cols=["prio"],
     )
-    state = _FakeGroupState()
-    got = set()
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "eid": [e[0] for e in batch],
-                "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
-                "etype": [e[2] for e in batch],
-                "prio": [e[3] for e in batch],
-            }
-        )
-        for out in fn((1,), [pdf], state) or ():
-            got.update(zip(out["a_id"], out["b_id"]))
-    if flush:
-        state.hasTimedOut = True
-        for out in fn((1,), [], state) or ():
-            got.update(zip(out["a_id"], out["b_id"]))
-    return got
+    frames = [_frame(b).assign(prio=[e[3] for e in b]) for b in batches]
+    rows, _ = _carry(step, frames, flush)
+    return {(r["a_id"], r["b_id"]) for r in rows}
 
 
 @st.composite
@@ -1391,36 +1311,20 @@ def test_cep_stream_kernel_comparator_matches_batch(data):
 
 def _kernel_state_after(pattern, batches, horizon_s, disorder_s):
     """Drive the kernel like _drive_kernel but return (emitted_pairs,
-    final_state_buffer_len, final_state) for state-size assertions."""
-    import pandas as pd
-
+    final_state_buffer_len) for state-size assertions."""
     from flink_1_6_0_spark.streaming.cep import _stream_kernel
 
-    fn = _stream_kernel(
-        pattern, ["k"], "ts", "eid", "etype",
+    step = _stream_kernel(
+        pattern, "ts", "eid", "etype",
         horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=None if disorder_s is None else int(disorder_s * 1_000_000),
     )
-    state = _FakeGroupState()
-    got = set()
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "eid": [e[0] for e in batch],
-                "ts": [pd.Timestamp(e[1] * 1_000_000, unit="us") for e in batch],
-                "etype": [e[2] for e in batch],
-            }
-        )
-        for out in fn((1,), [pdf], state) or ():
-            got.update(zip(out["a_id"], out["b_id"]))
-    buf_len = len(state._val[0]) if state._val is not None else 0
     # quiescence flush (cleanup-timer path) — emits the withheld tail; the
     # buffer length is pinned BEFORE it, on the steady-state state write
-    state.hasTimedOut = True
-    for out in fn((1,), [], state) or ():
-        got.update(zip(out["a_id"], out["b_id"]))
-    return got, buf_len, state
+    rows, value = _carry(step, [_frame(b) for b in batches], flush=True)
+    buf_len = len(value[0]) if value is not None else 0
+    return {(r["a_id"], r["b_id"]) for r in rows}, buf_len
 
 
 def test_cep_stream_kernel_compacts_matched_prefix_state():
@@ -1446,7 +1350,7 @@ def test_cep_stream_kernel_compacts_matched_prefix_state():
         events.append((eid, t, "a")); eid += 1
         events.append((eid, t + 1, "b")); eid += 1
     batches = [events[i : i + 50] for i in range(0, len(events), 50)]
-    got, buf_len, _ = _kernel_state_after(p, batches, horizon_s=110.0, disorder_s=10.0)
+    got, buf_len = _kernel_state_after(p, batches, horizon_s=110.0, disorder_s=10.0)
     assert got == _batch_matches(p, events)
     # suffix = events within disorder (10s) of the high-water mark = ~10
     # rows; the pre-compaction kernel kept everything within 110s (~110
@@ -1457,7 +1361,7 @@ def test_cep_stream_kernel_compacts_matched_prefix_state():
     # their window open) and complete when the late 'b' commits.
     ev2 = [(0, 0, "a"), (1, 50, "x"), (2, 98, "b"), (3, 140, "x"), (4, 170, "x")]
     b2 = [[ev2[0]], [ev2[1]], [ev2[2]], [ev2[3]], [ev2[4]]]
-    got2, _, _ = _kernel_state_after(p, b2, horizon_s=110.0, disorder_s=10.0)
+    got2, _ = _kernel_state_after(p, b2, horizon_s=110.0, disorder_s=10.0)
     assert got2 == _batch_matches(p, ev2) == {(0, 2)}
 
 

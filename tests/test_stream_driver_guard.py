@@ -71,7 +71,15 @@ def test_only_the_runner_replays_a_batch_key():
 
 def test_only_the_runner_keeps_live_key_state():
     """streaming/keyed.py::per_key_state is the one live per-key state
-    operator: every stream kernel runs one group per hash bucket through it,
-    never one Spark group per key."""
-    files = (ENGINE / "streaming").rglob("*.py")
-    assert _uses("applyInPandasWithState(", files) == {"flink_1_6_0_spark/streaming/keyed.py"}
+    operator: every stream kernel is a pure step it runs per key inside one
+    group per hash bucket, never one Spark group per key, and only the
+    runner builds, reads or arms a ``GroupState`` under streaming/. The
+    one other caller is ``DataStream.process``, whose user function keeps
+    the Flink KeyedProcessFunction contract of its own ``GroupState``."""
+    assert _uses("applyInPandasWithState(", ENGINE.rglob("*.py")) == {
+        "flink_1_6_0_spark/streaming/keyed.py",
+        "flink_1_6_0_spark/datastream_api.py",
+    }
+    streaming = list((ENGINE / "streaming").rglob("*.py"))
+    for token in ("setTimeoutTimestamp(", "setTimeoutDuration(", "hasTimedOut", "GroupState("):
+        assert _uses(token, streaming) <= {"flink_1_6_0_spark/streaming/keyed.py"}, token
