@@ -16,9 +16,13 @@ Layout:
 - ``sources``    — batch & streaming sources/sinks (SURVEY.md §2.1)
 - ``streaming``  — streaming-specific operators (SURVEY.md §2.5, §2.11, §2.12)
 - ``pipeline``   — large-scale training-data ops (dedup, ANN, text, multimodal)
+- ``zipcache``   — Python workers re-read a zip archive only when it changed
 """
 
+from flink_1_6_0_spark import zipcache
 from flink_1_6_0_spark.session import TableEnvironment, get_spark
+
+zipcache.install()
 
 __all__ = ["TableEnvironment", "get_spark"]
 

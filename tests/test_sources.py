@@ -765,3 +765,19 @@ def test_per_call_state_dirs_live_under_the_process_scratch_root(spark, sf_dir):
     assert entries(tempfile.gettempdir()) - before == set()
     made = entries(session.scratch_root())
     assert all(any(e.startswith(p) for e in made) for p in prefixes), made
+
+
+def test_local_checkpoints_use_the_filesystem_checkpoint_manager(spark, tmp_path):
+    """Under ``get_spark``'s local master every checkpoint write (offset
+    WAL, commit log, state-store files) goes through Spark's FileSystem-API
+    checkpoint manager, whose local rename forks no ``readlink``. The
+    manager is resolved the way Spark's streaming code resolves it: from a
+    path and the session's Hadoop conf."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    )
