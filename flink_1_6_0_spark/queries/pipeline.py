@@ -11,12 +11,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_1_6_0_spark.catalog import table_path
 from flink_1_6_0_spark.pipeline import dedup as dd
 from flink_1_6_0_spark.pipeline import multimodal as mm
 from flink_1_6_0_spark.pipeline import similarity as sim
 from flink_1_6_0_spark.pipeline import text as tx
 from flink_1_6_0_spark.queries import T
 from flink_1_6_0_spark.registry import query
+from flink_1_6_0_spark.sources.batch import file_identity
 
 # -- shared oracle SQL fragments --------------------------------------------
 
@@ -398,9 +400,21 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# vec_id 0's embedding by the embeddings file's identity: fetching it is an
+# eager Spark job (about a third of a warm ann_cosine_topk call), and it
+# stays a literal in every plan, so plans and LSH signatures do not change
+_QUERY_VECS: dict[tuple, tuple[float, ...]] = {}
+
+
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    row = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0).select("embedding").first()
-    return [float(x) for x in row["embedding"]]
+    key = file_identity(table_path(sf_dir, "embeddings"))
+    vec = _QUERY_VECS.get(key)
+    if vec is None:
+        row = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0).select("embedding").first()
+        vec = tuple(float(x) for x in row["embedding"])
+        if key is not None:
+            _QUERY_VECS[key] = vec
+    return list(vec)
 
 
 @query(

@@ -19,11 +19,23 @@ Scale notes (100 TB design intent):
   fork no `readlink` (Hadoop's FileContext local rename shells out without
   the native library). A cluster master keeps Spark's FileContext default,
   whose rename is atomic on HDFS.
+- Local master only: the JVM's file:// filesystem is the engine's
+  ``jvm/NioLocalFileSystem`` (compiled once per checkout), which sets a
+  created file's or directory's mode with one chmod(2) instead of forking
+  /bin/chmod, and still writes and checks every ``.crc``. Checkpoints,
+  state files and every local parquet/CSV/JSON write go through it. A
+  cluster master, or a host without ``javac``, keeps Hadoop's default.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +48,71 @@ _SCRATCH_ROOT: str | None = None
 
 # the checkout root: the directory that holds the flink_1_6_0_spark package
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+# The engine's local filesystem shim: its Java source and the gitignored
+# directory it is compiled into, one subdirectory per source and Hadoop jar.
+NIO_LOCAL_FS = "flink_1_6_0_spark.jvm.NioLocalFileSystem"
+_NIO_LOCAL_FS_SRC = os.path.join(_ROOT, "flink_1_6_0_spark", "jvm", "NioLocalFileSystem.java")
+_JVM_BUILD = os.path.join(_ROOT, "flink_1_6_0_spark", "jvm", "build")
+
+
+def nio_local_fs_classes() -> str | None:
+    """The class directory of :data:`NIO_LOCAL_FS`, compiled on first use
+    against Spark's Hadoop client jar; None (with a warning) when it cannot
+    be built, e.g. on a host with a JRE and no ``javac``. The directory is
+    keyed by a hash of the source and the jar's name and moved into place
+    with one rename, so concurrent first calls are safe."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    with open(_NIO_LOCAL_FS_SRC, "rb") as f:
+        digest = hashlib.sha256(f.read() + "".join(map(os.path.basename, jars)).encode())
+    out = os.path.join(_JVM_BUILD, digest.hexdigest()[:16])
+    if os.path.isdir(out):
+        return out
+    javac = shutil.which("javac")
+    if javac is None or not jars:
+        warnings.warn("no javac or Hadoop client jar: the local filesystem forks chmod per file")
+        return None
+    try:
+        os.makedirs(_JVM_BUILD, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".tmp-", dir=_JVM_BUILD)
+        run = subprocess.run(
+            [javac, "--release", "17", "-cp", jars[-1], "-d", tmp, _NIO_LOCAL_FS_SRC],
+            capture_output=True,
+            text=True,
+        )
+        if run.returncode != 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            warnings.warn(f"compiling {NIO_LOCAL_FS} failed, keeping Hadoop's: {run.stderr[-500:]}")
+            return None
+        try:
+            os.replace(tmp, out)
+        except OSError:  # a concurrent first call moved its build in first
+            shutil.rmtree(tmp, ignore_errors=True)
+    except OSError as e:
+        warnings.warn(f"cannot build {NIO_LOCAL_FS}, keeping Hadoop's: {e}")
+        return None
+    return out
+
+
+def _nio_local_fs_conf() -> dict[str, str]:
+    """The confs that make :data:`NIO_LOCAL_FS` the file:// filesystem:
+    empty when it did not build, or when this process's JVM already runs
+    without it on its classpath (the classpath is fixed at JVM start, and a
+    filesystem class the JVM cannot load breaks every local read)."""
+    from pyspark import SparkContext
+
+    classes = nio_local_fs_classes()
+    if classes is None:
+        return {}
+    if SparkContext._jvm is not None:
+        cp = SparkContext._jvm.java.lang.System.getProperty("java.class.path")
+        # the launcher lists a class directory with a trailing separator
+        if classes not in map(os.path.normpath, cp.split(os.pathsep)):
+            return {}
+    return {"spark.driver.extraClassPath": classes, "spark.hadoop.fs.file.impl": NIO_LOCAL_FS}
 
 
 def scratch_root() -> str:
@@ -112,6 +189,12 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Without the native Hadoop library every local create and mkdirs
+        # forks /bin/chmod (about 5 ms each, ~25 per stream query: metadata,
+        # offset WAL, commit log, state files and each one's .crc). The shim
+        # sets the same mode bits through java.nio. The local driver JVM is
+        # also the executor, so one driver classpath entry covers both.
+        builder = builder.config(map=_nio_local_fs_conf())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

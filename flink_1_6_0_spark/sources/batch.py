@@ -87,7 +87,7 @@ class _InputMeta:
 _INPUT_META: dict[tuple, _InputMeta] = {}
 
 
-def _file_identity(path: str) -> tuple[str, int, int] | None:
+def file_identity(path: str) -> tuple[str, int, int] | None:
     """``(realpath, mtime_ns, size)`` of an immutable input; a directory
     stamped ``_TIME_ORDERED`` is identified by its marker, which every
     publish re-stamps. None for a path the local FS cannot stat (hdfs://,
@@ -101,7 +101,7 @@ def _file_identity(path: str) -> tuple[str, int, int] | None:
 
 
 def _input_meta(spark: SparkSession, path: str) -> _InputMeta | None:
-    ident = _file_identity(path)
+    ident = file_identity(path)
     if ident is None:
         return None
     key = ident + tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)

@@ -91,11 +91,11 @@ def test_events_read_schema_follows_a_rewrite_at_the_same_path(spark, sf_dir, tm
 
 @pytest.mark.parametrize(
     "name,jobs",
-    [("text_stats", 0), ("text_pii_redact", 0), ("tpch_q5", 0), ("ann_cosine_topk", 1)],
+    [("text_stats", 0), ("text_pii_redact", 0), ("tpch_q5", 0), ("ann_cosine_topk", 0), ("ann_lsh_topk", 0)],
 )
 def test_query_build_launches_no_schema_job(spark, sf_dir, name, jobs):
-    """Building a registered query on a warm memo launches no Spark job:
-    ann_cosine_topk's one job is its query-vector ``.first()``."""
+    """Building a registered query on a warm memo launches no Spark job: the
+    similarity queries' query vector is memoized with the input metadata."""
     fn = get(name).fn
     fn(spark, sf_dir)
     with jobs_launched(spark) as launched:

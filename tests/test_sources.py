@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from flink_1_6_0_spark.operators.joins import windowed_join
 from flink_1_6_0_spark.sources import batch as src
@@ -781,3 +783,77 @@ def test_local_checkpoints_use_the_filesystem_checkpoint_manager(spark, tmp_path
     assert manager.getClass().getName() == (
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
     )
+
+
+def test_local_filesystem_is_the_nio_shim_and_keeps_checksums(spark, tmp_path):
+    """Under ``get_spark``'s local master the file:// filesystem is the
+    engine's shim: Hadoop's checksummed LocalFileSystem whose raw layer
+    sets modes through java.nio instead of forking ``chmod``. Created files
+    and directories get Hadoop's modes, every file keeps its ``.crc``
+    sibling, and a flipped byte still fails the read."""
+    from flink_1_6_0_spark.session import NIO_LOCAL_FS
+
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs = Path(f"file://{tmp_path}").getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    assert fs.getClass().getName() == NIO_LOCAL_FS
+    assert fs.getRawFileSystem().getClass().getName() == NIO_LOCAL_FS + "$Raw"
+
+    data = bytes(range(256)) * 8
+    out = fs.create(Path(f"file://{tmp_path}/a/data.bin"))
+    out.write(bytearray(data))
+    out.close()
+    assert fs.mkdirs(Path(f"file://{tmp_path}/d"))
+
+    def mode(p):
+        return oct(os.stat(tmp_path / p).st_mode & 0o7777)
+
+    assert (mode("a/data.bin"), mode("a/.data.bin.crc")) == ("0o644", "0o644")
+    assert (mode("a"), mode("d")) == ("0o755", "0o755")
+
+    def read():
+        stream = fs.open(Path(f"file://{tmp_path}/a/data.bin"))
+        try:
+            return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        finally:
+            stream.close()
+
+    assert read() == data
+    with open(tmp_path / "a" / "data.bin", "r+b") as f:
+        f.seek(100)
+        f.write(bytes([data[100] ^ 0xFF]))
+    with pytest.raises(Exception, match="Checksum"):
+        read()
+
+
+def test_nio_shim_builds_once_and_falls_back_without_javac(spark, tmp_path, monkeypatch):
+    """The shim is compiled once per checkout: with its build directory in
+    place no ``javac`` runs. With no ``javac`` and no build the helper
+    returns nothing and ``get_spark`` keeps Hadoop's filesystem; so does a
+    build the running JVM was not started with."""
+    from flink_1_6_0_spark import session
+
+    built = session.nio_local_fs_classes()
+    assert built is not None and os.path.isdir(built)
+
+    def no_run(*args, **kwargs):
+        raise AssertionError("javac ran again")
+
+    monkeypatch.setattr(session.subprocess, "run", no_run)
+    assert session.nio_local_fs_classes() == built
+    assert session._nio_local_fs_conf() == {
+        "spark.driver.extraClassPath": built,
+        "spark.hadoop.fs.file.impl": session.NIO_LOCAL_FS,
+    }
+
+    # a build the running JVM does not have on its classpath is not used
+    monkeypatch.setattr(session, "_JVM_BUILD", str(tmp_path / "copy"))
+    shutil.copytree(built, tmp_path / "copy" / os.path.basename(built))
+    assert session._nio_local_fs_conf() == {}
+
+    monkeypatch.setattr(session, "_JVM_BUILD", str(tmp_path / "empty"))
+    monkeypatch.setattr(session.shutil, "which", lambda name: None)
+    with pytest.warns(UserWarning, match="javac"):
+        assert session.nio_local_fs_classes() is None
+    with pytest.warns(UserWarning, match="javac"):
+        assert session._nio_local_fs_conf() == {}
