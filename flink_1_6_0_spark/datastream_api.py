@@ -75,11 +75,9 @@ def _process_with_state(df: DataFrame, keys: list[str], fn, out_schema: str,
 
     import pandas as pd
 
-    from pyspark.sql.types import StructType
+    from flink_1_6_0_spark.streaming.keyed import schema_names
 
-    # real DDL parse — a naive comma split breaks on nested types
-    # (struct<lat:double,lon:double> would split mid-type)
-    out_cols = StructType.fromDDL(out_schema).fieldNames()
+    out_cols = schema_names(out_schema)
 
     def run(key, pdf):
         frames = [f for f in fn(key, iter([pdf]), _BatchGroupState()) if len(f)]

@@ -23,6 +23,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from flink_1_6_0_spark.streaming.keyed import schema_names
+
 
 def register_scalar_function(spark: SparkSession, name: str, fn: Callable, return_type: str, vectorized: bool = True):
     """registerFunction for a ScalarFunction. ``vectorized=True`` wraps fn
@@ -48,7 +50,7 @@ def table_function(
     UDF — the emitted array<struct> stays on the Arrow path end to end;
     row-at-a-time ``F.udf`` remains as the opt-out for functions that can't
     batch (multi-arg table functions use it automatically)."""
-    names = [f.strip().split()[0] for f in row_schema.split(",")]
+    names = schema_names(row_schema)
 
     if vectorized:
 

@@ -234,17 +234,15 @@ def cep_select_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     events inside the same worker pass that scanned the key, no join-back.
     First-match view→purchase funnel; the oracle computes the identical
     derivation with a LATERAL first-row join."""
-    from flink_1_6_0_spark.streaming.cep import cep_batch_select
-
     pattern = (
         Pattern.begin("view", lambda e: e["event_type"] == "view")
         .followed_by("purchase", lambda e: e["event_type"] == "purchase")
         .within(24 * 3600)
     )
-    return cep_batch_select(
+    return cep_batch(
         T(spark, sf_dir, "events"), pattern, ["user_id"], "ts", "event_id",
-        _funnel_select_fn,
-        "view_id long, purchase_id long, value_delta double, dwell_sec long",
+        select_fn=_funnel_select_fn,
+        output_schema="view_id long, purchase_id long, value_delta double, dwell_sec long",
     )
 
 
@@ -290,19 +288,18 @@ def cep_select_timeout_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns. The oracle derives both sides from one LEFT LATERAL first-row
     join, so the hash match certifies payload AND timeout-instant
     semantics."""
-    from flink_1_6_0_spark.streaming.cep import cep_batch_select_with_timeouts
-
     pattern = (
         Pattern.begin("view", lambda e: e["event_type"] == "view")
         .followed_by("purchase", lambda e: e["event_type"] == "purchase")
         .within(24 * 3600)
     )
-    return cep_batch_select_with_timeouts(
+    return cep_batch(
         T(spark, sf_dir, "events"), pattern, ["user_id"], "ts", "event_id",
-        _funnel_select_fn,
-        "view_id long, purchase_id long, value_delta double, dwell_sec long",
-        _funnel_timeout_fn,
-        "view_id long, deadline_sec long",
+        select_fn=_funnel_select_fn,
+        output_schema="view_id long, purchase_id long, value_delta double, dwell_sec long",
+        with_timeouts=True,
+        timeout_fn=_funnel_timeout_fn,
+        timeout_schema="view_id long, deadline_sec long",
     )
 
 

@@ -208,7 +208,7 @@ def stream_multibatch_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_multibatch_cep_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's CEP TIMEOUT side output on a STREAM
     (PatternStream.flatSelect timeout handler, CEP.java; batch analog
-    cep_batch_with_timeouts): same scrambled >= 4-micro-batch replay as
+    cep_batch(with_timeouts=True)): same scrambled >= 4-micro-batch replay as
     stream_multibatch_cep, but every view whose funnel dies is reported the
     moment the fold point passes its 24 h window — ``timed_out=true`` with
     the stage it was stuck on — alongside the completed matches

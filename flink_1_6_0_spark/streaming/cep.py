@@ -910,128 +910,6 @@ def _validate_pattern(pattern: Pattern) -> None:
             )
 
 
-def _cep_per_key(
-    df: DataFrame,
-    pattern: Pattern,
-    key_cols: list[str],
-    ts_col: str,
-    order: list[str],
-    out_ddl: str,
-    emit,
-    with_timeouts: bool,
-) -> DataFrame:
-    """The batch executor behind the four ``cep_batch*`` entry points. Per
-    key (:func:`keyed.per_key`, rows sorted by ``order``) the events become
-    dicts carrying their exact epoch-µs ``__ts``; one :func:`_scan` finds
-    the matches and, only when ``with_timeouts``, the dead partials
-    (deduplicated, first seen first); ``emit(keyvals, events, matches,
-    dead)`` turns them into rows. Output: the key columns (long), then
-    ``out_ddl``."""
-    schema = ", ".join([f"{k} long" for k in key_cols] + [out_ddl])
-
-    def body(key, pdf: pd.DataFrame) -> list[dict]:
-        events = pdf.to_dict("records")
-        for ev in events:
-            ev["__ts"] = pd.Timestamp(ev[ts_col]).value // 1000  # exact epoch-µs
-        dead: list | None = [] if with_timeouts else None
-        matches = _scan(events, pattern, timeouts=dead)
-        return emit(dict(zip(key_cols, key)), events, matches, list(dict.fromkeys(dead or ())))
-
-    return per_key(df, key_cols, order, body, schema)
-
-
-def _id_emitter(pattern: Pattern, id_col: str):
-    """Rows of matched ids: one per match with ``<stage>_id`` (or the
-    ``<stage>_ids`` array), then one per dead partial with NULL ids for the
-    unreached stages, ``timed_out=true`` and ``pending_stage`` naming the
-    stage that never matched. The schema's names pick the columns, so
-    :func:`cep_batch` drops the two tags."""
-    stages = _output_stages(pattern)
-    cols = [c for c, _ in _stage_out_cols(pattern)]
-
-    def ids_row(keyvals: dict, events: list[dict], match: tuple, no_ids) -> dict:
-        row = dict(keyvals)
-        for st, col, idxs in zip(stages, cols, _output_match(pattern, match)):
-            ids = [events[i][id_col] for i in idxs]
-            row[col] = (ids or no_ids) if st.emits_array else (ids[0] if ids else None)
-        return row
-
-    def emit(keyvals, events, matches, dead) -> list[dict]:
-        rows = [
-            {**ids_row(keyvals, events, m, []), "timed_out": False, "pending_stage": None}
-            for m in matches
-        ]
-        for acc, stage_i in dead:
-            padded = acc + ((),) * (len(pattern.stages) - len(acc))
-            row = ids_row(keyvals, events, padded, None)
-            row["timed_out"] = True
-            row["pending_stage"] = pattern.stages[stage_i].name
-            rows.append(row)
-        return rows
-
-    return emit
-
-
-def _select_emitter(pattern: Pattern, names: list[str], select_fn, flat: bool, timeout_fn):
-    """Rows of the user functions: ``select_fn({stage: [events]})`` per
-    match, then ``timeout_fn(partial, timeout_ts)`` per dead partial, each
-    tagged ``timed_out`` and NULL-filled over ``names``. ``flat=True``
-    makes both return iterables of dicts."""
-    stages = _output_stages(pattern)
-    nulls = dict.fromkeys(names)
-
-    def emit(keyvals, events, matches, dead) -> list[dict]:
-        rows = []
-        for match in matches:
-            mm = {
-                st.name: [events[i] for i in idxs]
-                for st, idxs in zip(stages, _output_match(pattern, match))
-            }
-            for o in select_fn(mm) if flat else [select_fn(mm)]:
-                rows.append({**keyvals, "timed_out": False, **nulls, **o})
-        for acc, _stage_i in dead:
-            padded = acc + ((),) * (len(pattern.stages) - len(acc))
-            partial = {}
-            for st, idxs in zip(stages, _output_match(pattern, padded)):
-                if idxs:
-                    partial[st.name] = [events[i] for i in idxs]
-            start = min(events[i]["__ts"] for idxs in acc for i in idxs)
-            timeout_ts = int(start + pattern.within_micros)
-            for o in timeout_fn(partial, timeout_ts) if flat else [timeout_fn(partial, timeout_ts)]:
-                rows.append({**keyvals, "timed_out": True, **nulls, **o})
-        return rows
-
-    return emit
-
-
-def cep_batch(
-    df: DataFrame,
-    pattern: Pattern,
-    key_cols: list[str],
-    ts_col: str,
-    id_col: str,
-    comparator_cols: list[str] | None = None,
-) -> DataFrame:
-    """Batch CEP: per-key ordered pattern scan (CEP.pattern + select analog).
-    Output: key columns + ``<stage>_id`` (or ``<stage>_ids`` array for
-    quantified stages), one row per match.
-
-    ``comparator_cols`` is the ``EventComparator`` analog (CEP.java:51,
-    ``CEP.pattern(input, pattern, comparator)``): extra columns that order
-    SAME-TIMESTAMP events before the scan, exactly where the reference's
-    comparator sorts the elements it pops for one timestamp. The sort key
-    becomes ``(ts, *comparator_cols, id)`` — id stays the final tiebreak so
-    the scan remains deterministic when the comparator itself ties. Streams
-    keep the fixed (ts, id) default: every cross-batch oracle in the repo
-    assumes that total order."""
-    _validate_pattern(pattern)
-    out_ddl = ", ".join(f"{c} {t}" for c, t in _stage_out_cols(pattern))
-    order = [ts_col, *(comparator_cols or ()), id_col]
-    return _cep_per_key(
-        df, pattern, key_cols, ts_col, order, out_ddl, _id_emitter(pattern, id_col), False
-    )
-
-
 def _merge_either_schema(select_schema: str, timeout_schema: str):
     """Column layout of the Either<L,R>-style union output of the
     timeout-handler select overload (PatternStream.java:182 returns
@@ -1061,104 +939,199 @@ def _merge_either_schema(select_schema: str, timeout_schema: str):
     return union_ddl, [n for n, _ in sel], [n for n, _ in tmo], [n for n, _ in order]
 
 
-def cep_batch_select(
-    df: DataFrame,
+def _output_form(
     pattern: Pattern,
-    key_cols: list[str],
-    ts_col: str,
     id_col: str,
     select_fn,
-    output_schema: str,
-    flat: bool = False,
-) -> DataFrame:
-    """PatternSelectFunction / PatternFlatSelectFunction parity
-    (PatternStream.java:98 select, :305 flatSelect): ``select_fn`` receives
-    the reference's ``Map<String, List<IN>>`` — here a dict
-    ``{stage_name: [matched event dicts]}`` with the FULL input row per
-    event (quantified stages contribute every accepted repeat, optional
-    stages an empty list) — and returns one output dict (``flat=False``)
-    or an iterable of output dicts (``flat=True``; zero outputs drops the
-    match, the flatSelect contract). ``output_schema`` is the Spark DDL of
-    the function's output; the key columns are prepended automatically.
-
-    Scale shape: identical to :func:`cep_batch` — one full-width hash
-    exchange, per-key Arrow batches, the user function runs inside the
-    same worker pass that scanned the key."""
-    _validate_pattern(pattern)
-    emit = _select_emitter(pattern, schema_names(output_schema), select_fn, flat, None)
-    return _cep_per_key(
-        df, pattern, key_cols, ts_col, [ts_col, id_col], output_schema, emit, False
-    )
-
-
-def cep_batch_with_timeouts(
-    df: DataFrame, pattern: Pattern, key_cols: list[str], ts_col: str, id_col: str
-) -> DataFrame:
-    """Batch CEP with the timeout side-channel (PatternStream.flatSelect with
-    a timeout handler, CEP.java/PatternStream.java): full matches carry
-    ``timed_out=false``; dead partial matches — partials whose next stage has
-    no in-horizon continuation, which the reference reports once the
-    watermark passes start+within — carry ``timed_out=true``, NULL ids for
-    the unreached stages, and ``pending_stage`` naming the stage that never
-    matched. Partials that are prefixes of an emitted full match are not
-    reported (they completed)."""
-    _validate_pattern(pattern)
-    out_ddl = ", ".join(
-        [f"{c} {t}" for c, t in _stage_out_cols(pattern)]
-        + ["timed_out boolean", "pending_stage string"]
-    )
-    return _cep_per_key(
-        df, pattern, key_cols, ts_col, [ts_col, id_col], out_ddl, _id_emitter(pattern, id_col), True
-    )
-
-
-def cep_batch_select_with_timeouts(
-    df: DataFrame,
-    pattern: Pattern,
-    key_cols: list[str],
-    ts_col: str,
-    id_col: str,
-    select_fn,
-    output_schema: str,
+    output_schema: str | None,
+    flat: bool,
+    with_timeouts: bool,
     timeout_fn,
-    timeout_schema: str,
-    flat: bool = False,
-) -> DataFrame:
-    """``PatternStream.select(timeoutFn, selectFn)`` / the flatSelect
-    twin (PatternStream.java:182, :365): the reference returns an
-    ``Either<L, R>`` stream — here one DataFrame tagged by ``timed_out``
-    with the union of both payload schemas (NULL-filled on the other side;
-    a column named in both schemas must agree on type and is shared).
+    timeout_schema: str | None,
+):
+    """The CEP output form, shared by the batch and the stream executor
+    (PatternStream.java:98 select, :182 the timeout-handler overload, :305
+    flatSelect, :365 its timeout twin: one NFA, only the function applied
+    to each match or timed-out partial changes). Returns ``(ddl,
+    match_rows, dead_rows)``: the output DDL after the ``long`` key
+    columns, ``match_rows(events, match)`` and ``dead_rows(events, acc,
+    stage_i)`` (None without ``with_timeouts``), each a list of row dicts
+    without the key columns. ``events`` are the scanned event dicts with
+    their epoch-µs ``__ts``; ``match`` and the dead partial's ``acc`` are
+    index tuples per stage, ``stage_i`` the stage the partial never reached.
 
-    ``select_fn({stage: [events]}) -> dict`` runs per full match exactly as
-    in :func:`cep_batch_select`. ``timeout_fn(partial, timeout_ts) -> dict``
-    runs per dead partial (PatternTimeoutFunction.java:59): ``partial`` maps
-    only the REACHED stages to their matched events (the reference's map of
-    matched-so-far events) and ``timeout_ts`` is ``start + within`` in epoch
-    microseconds — the instant the window closed on the partial. A
-    followedByAny stage's waiting fork survives every event, so such
-    partials time out even when a sibling branch completed a full match
-    (NFAITCase.java:344 — the reference never suppresses prefixes of
-    completed matches). ``flat=True`` makes BOTH functions return iterables
-    of dicts
-    (PatternFlatTimeoutFunction.java:56's Collector contract).
+    The id form (no ``select_fn``): one row per match with ``<stage>_id``
+    (or the ``<stage>_ids`` array, ``[]`` when a stage took no event); with
+    ``with_timeouts`` the rows carry ``timed_out=false`` and
+    ``pending_stage`` NULL, and each dead partial gives a row with NULL ids
+    for the unreached stages, ``timed_out=true`` and ``pending_stage``
+    naming the stage that never matched.
 
-    Scale shape: identical to :func:`cep_batch` — one full-width hash
-    exchange, per-key Arrow batches, both user functions run inside the
-    same worker pass that scanned the key."""
-    _validate_pattern(pattern)
-    if pattern.within_micros is None:
+    The select form: ``select_fn({stage: [events]})`` per match returns one
+    dict, or with ``flat`` an iterable of dicts (zero drops the match).
+    With ``with_timeouts`` it is the Either overload: one output tagged
+    ``timed_out`` over the union of ``output_schema`` and
+    ``timeout_schema`` (:func:`_merge_either_schema`), and
+    ``timeout_fn(partial, timeout_ts)`` runs per dead partial
+    (PatternTimeoutFunction.java:59) with ``partial`` mapping only the
+    REACHED stages to their events and ``timeout_ts = start + within`` in
+    epoch µs, the instant the window closed on it. Rows are NULL-filled
+    over the output names."""
+    if select_fn is None:
+        if timeout_fn is not None or flat:
+            raise ValueError("timeout_fn and flat_select require select_fn (the select function form)")
+    elif output_schema is None:
+        raise ValueError("select_fn requires output_schema (Spark DDL of the function's output)")
+    elif with_timeouts and (timeout_fn is None or timeout_schema is None):
+        raise ValueError(
+            "select_fn with with_timeouts is the select(timeoutFn, selectFn) "
+            "overload — pass timeout_fn and timeout_schema "
+            "(PatternStream.java:182), or use the id-column form without select_fn"
+        )
+    elif timeout_fn is not None and not with_timeouts:
+        raise ValueError("timeout_fn requires with_timeouts=True (the Either<L,R> overload)")
+    within_us = pattern.within_micros
+    if timeout_fn is not None and within_us is None:
         raise ValueError(
             "the timeout-handler select overload requires within(): a "
             "partial can only time out against a window"
         )
-    union_ddl, _sel_names, _tmo_names, all_names = _merge_either_schema(
-        output_schema, timeout_schema
+    n_stages = len(pattern.stages)
+    stages = _output_stages(pattern)
+    names = [st.name for st in stages]
+
+    def padded(acc: tuple) -> tuple:
+        return _output_match(pattern, acc + ((),) * (n_stages - len(acc)))
+
+    if select_fn is None:
+        out_cols = _stage_out_cols(pattern)
+        cols = [c for c, _ in out_cols]
+        arrays = [st.emits_array for st in stages]
+        ddl = ", ".join(
+            [f"{c} {t}" for c, t in out_cols]
+            + (["timed_out boolean", "pending_stage string"] if with_timeouts else [])
+        )
+
+        def ids_row(events, idx_runs, no_ids) -> dict:
+            row = {}
+            for col, is_array, idxs in zip(cols, arrays, idx_runs):
+                ids = [events[i][id_col] for i in idxs]
+                row[col] = (ids or no_ids) if is_array else (ids[0] if ids else None)
+            return row
+
+        def match_rows(events, match) -> list[dict]:
+            row = ids_row(events, _output_match(pattern, match), [])
+            if with_timeouts:
+                row["timed_out"] = False
+                row["pending_stage"] = None
+            return [row]
+
+        def dead_rows(events, acc, stage_i) -> list[dict]:
+            row = ids_row(events, padded(acc), None)
+            row["timed_out"] = True
+            row["pending_stage"] = pattern.stages[stage_i].name
+            return [row]
+
+        return ddl, match_rows, dead_rows if with_timeouts else None
+
+    if with_timeouts:
+        union_ddl, _sel, _tmo, out_names = _merge_either_schema(output_schema, timeout_schema)
+        ddl = f"timed_out boolean, {union_ddl}"
+        base = {"timed_out": False, **dict.fromkeys(out_names)}
+    else:
+        ddl = output_schema
+        base = dict.fromkeys(schema_names(output_schema))
+
+    def match_rows(events, match) -> list[dict]:
+        mm = {
+            name: [events[i] for i in idxs]
+            for name, idxs in zip(names, _output_match(pattern, match))
+        }
+        return [{**base, **o} for o in (select_fn(mm) if flat else [select_fn(mm)])]
+
+    def dead_rows(events, acc, _stage_i) -> list[dict]:
+        partial = {
+            name: [events[i] for i in idxs]
+            for name, idxs in zip(names, padded(acc))
+            if idxs
+        }
+        start = min(events[i]["__ts"] for idxs in acc for i in idxs)
+        timeout_ts = int(start + within_us)
+        outs = timeout_fn(partial, timeout_ts) if flat else [timeout_fn(partial, timeout_ts)]
+        return [{**base, "timed_out": True, **o} for o in outs]
+
+    return ddl, match_rows, dead_rows if with_timeouts else None
+
+
+def cep_batch(
+    df: DataFrame,
+    pattern: Pattern,
+    key_cols: list[str],
+    ts_col: str,
+    id_col: str,
+    comparator_cols: list[str] | None = None,
+    *,
+    select_fn=None,
+    output_schema: str | None = None,
+    flat_select: bool = False,
+    with_timeouts: bool = False,
+    timeout_fn=None,
+    timeout_schema: str | None = None,
+) -> DataFrame:
+    """Batch CEP: per-key ordered pattern scan (CEP.pattern + select analog).
+    Per key (:func:`keyed.per_key`) the events become dicts carrying their
+    exact epoch-µs ``__ts``; one :func:`_scan` finds the matches and, only
+    with ``with_timeouts``, the dead partials (deduplicated, first seen
+    first). Output: the key columns (long), then the output form of
+    :func:`_output_form`, the same keywords as :func:`cep_stream`:
+
+    - no ``select_fn``: ``<stage>_id`` (or the ``<stage>_ids`` array for
+      quantified stages), one row per match;
+    - ``with_timeouts``: the timeout side channel (PatternStream.flatSelect
+      with a timeout handler) — dead partials, which the reference reports
+      once the watermark passes start+within, are added with
+      ``timed_out=true`` and ``pending_stage``; partials that are prefixes
+      of an emitted full match are not reported (they completed), except a
+      followedByAny stage's waiting fork, which survives every event
+      (NFAITCase.java:344);
+    - ``select_fn`` + ``output_schema``: PatternSelectFunction /
+      PatternFlatSelectFunction (``flat_select``), run over the FULL input
+      row per event (quantified stages contribute every accepted repeat,
+      optional stages an empty list); with ``with_timeouts``,
+      ``timeout_fn`` + ``timeout_schema`` make it the Either overload.
+
+    ``comparator_cols`` is the ``EventComparator`` analog (CEP.java:51,
+    ``CEP.pattern(input, pattern, comparator)``): extra columns that order
+    SAME-TIMESTAMP events before the scan, exactly where the reference's
+    comparator sorts the elements it pops for one timestamp. The sort key
+    becomes ``(ts, *comparator_cols, id)`` — id stays the final tiebreak so
+    the scan remains deterministic when the comparator itself ties.
+
+    Scale shape: one full-width hash exchange, per-key Arrow batches, the
+    user functions run inside the same worker pass that scanned the key."""
+    _validate_pattern(pattern)
+    ddl, match_rows, dead_rows = _output_form(
+        pattern, id_col, select_fn, output_schema, flat_select,
+        with_timeouts, timeout_fn, timeout_schema,
     )
-    emit = _select_emitter(pattern, all_names, select_fn, flat, timeout_fn)
-    return _cep_per_key(
-        df, pattern, key_cols, ts_col, [ts_col, id_col], f"timed_out boolean, {union_ddl}", emit, True
-    )
+    schema = ", ".join([f"{k} long" for k in key_cols] + [ddl])
+    order = [ts_col, *(comparator_cols or ()), id_col]
+
+    def body(key, pdf: pd.DataFrame) -> list[dict]:
+        ts_us = (pdf[ts_col].to_numpy("datetime64[ns]").view("int64") // 1000).tolist()
+        events = pdf.to_dict("records")
+        for ev, t in zip(events, ts_us):
+            ev["__ts"] = t  # exact epoch-µs
+        dead: list | None = [] if with_timeouts else None
+        rows = []
+        for match in _scan(events, pattern, timeouts=dead):
+            rows.extend(match_rows(events, match))
+        for acc, stage_i in dict.fromkeys(dead or ()):
+            rows.extend(dead_rows(events, acc, stage_i))
+        keyvals = dict(zip(key_cols, key))
+        return [{**keyvals, **r} for r in rows]
+
+    return per_key(df, key_cols, order, body, schema)
 
 
 def _match_monotone(pattern: Pattern) -> bool:
@@ -1238,6 +1211,54 @@ def _prunable_to_live_partials(pattern: Pattern) -> bool:
         if i > 0 and st.contiguity != FOLLOWED_BY:
             return False
     return True
+
+
+def _buffer_horizon_s(
+    pattern: Pattern,
+    buffer_horizon_seconds: float | None,
+    disorder_seconds: float | None,
+) -> float:
+    """The stream buffer horizon in seconds, shared by :func:`cep_stream`
+    and :func:`cep_stream_late_side` so both derive one admit floor
+    ``max(hwm - horizon, hwm - disorder)``. It defaults to ``within``; in
+    watermark mode (``disorder_seconds``) it is raised to ``within +
+    disorder``: a match cannot emit until the fold point passes its
+    within-window, i.e. until hwm >= start + within + disorder, so the
+    buffer must keep events that long. An EXPLICIT horizon below that is a
+    silent-emptiness trap (withheld matches and pending timeouts evicted
+    before the fold point reaches them) and is rejected. Without
+    ``within()`` the horizon must exceed the disorder bound, or events
+    would be evicted before the fold point ever scans them."""
+    # `is not None`, not truthiness: an explicit 0 must be rejected loudly,
+    # not silently replaced by within_seconds (review finding)
+    horizon_s = buffer_horizon_seconds if buffer_horizon_seconds is not None else pattern.within_seconds
+    if horizon_s is None:
+        raise ValueError("streaming CEP needs within() or an explicit buffer horizon")
+    if horizon_s <= 0:
+        raise ValueError(f"buffer horizon must be positive, got {horizon_s}")
+    if disorder_seconds is None:
+        return horizon_s
+    if disorder_seconds < 0:
+        raise ValueError(f"disorder bound must be >= 0, got {disorder_seconds}")
+    if pattern.within_seconds is None:
+        if horizon_s <= disorder_seconds:
+            raise ValueError(
+                f"buffer horizon ({horizon_s}s) must exceed "
+                f"disorder_seconds ({disorder_seconds}s): events would be "
+                "evicted before the fold point ever scans them"
+            )
+        return horizon_s
+    required_s = pattern.within_seconds + disorder_seconds
+    if horizon_s >= required_s:
+        return horizon_s
+    if buffer_horizon_seconds is not None:
+        raise ValueError(
+            f"buffer_horizon_seconds={buffer_horizon_seconds} < "
+            f"within+disorder={required_s}: withheld matches and "
+            "pending timeouts would be trimmed out of the buffer "
+            "before the fold point reaches their emission time"
+        )
+    return required_s
 
 
 def cep_stream(
@@ -1355,88 +1376,32 @@ def cep_stream(
             "disorder_seconds=D (watermark mode, exact for lateness < D) "
             "or eager=True to assert the stream is in event-time order."
         )
-    # `is not None`, not truthiness: an explicit 0 must be rejected loudly,
-    # not silently replaced by within_seconds (review finding)
-    horizon_s = buffer_horizon_seconds if buffer_horizon_seconds is not None else pattern.within_seconds
-    if horizon_s is None:
-        raise ValueError("streaming CEP needs within() or an explicit buffer horizon")
-    if horizon_s <= 0:
-        raise ValueError(f"buffer horizon must be positive, got {horizon_s}")
-    horizon = int(round(horizon_s * 1_000_000))  # exact µs
-    if disorder_seconds is not None and disorder_seconds < 0:
-        raise ValueError(f"disorder bound must be >= 0, got {disorder_seconds}")
-    disorder = None if disorder_seconds is None else int(round(disorder_seconds * 1_000_000))
-    if disorder is not None:
-        # a match cannot emit until the fold point passes its within-window,
-        # i.e. until hwm >= start + within + disorder — the buffer must keep
-        # events that long or they would be trimmed before emission. An
-        # EXPLICIT buffer_horizon_seconds smaller than within+disorder is a
-        # silent-emptiness trap (withheld matches / pending timeouts evicted
-        # before the fold point reaches them), so it is rejected loudly.
-        if pattern.within_seconds is not None:
-            required_s = pattern.within_seconds + disorder_seconds
-            if horizon_s < required_s:
-                if buffer_horizon_seconds is not None:
-                    raise ValueError(
-                        f"buffer_horizon_seconds={buffer_horizon_seconds} < "
-                        f"within+disorder={required_s}: withheld matches and "
-                        "pending timeouts would be trimmed out of the buffer "
-                        "before the fold point reaches their emission time"
-                    )
-                horizon_s = required_s
-                horizon = int(round(horizon_s * 1_000_000))
-        else:
-            # no within(): the buffer horizon doubles as the match bound, so
-            # withheld-emission (start+horizon < hwm-disorder while start is
-            # still buffered) is unsatisfiable — reject the combinations that
-            # would silently emit nothing
-            if _pattern_extendable(pattern) or with_timeouts:
-                raise ValueError(
-                    "disorder_seconds with an extendable pattern or "
-                    "with_timeouts requires within(): without it the "
-                    "emission bound equals the buffer horizon and withheld "
-                    "matches would be evicted before they could ever emit"
-                )
-            if horizon_s <= disorder_seconds:
-                raise ValueError(
-                    f"buffer horizon ({horizon_s}s) must exceed "
-                    f"disorder_seconds ({disorder_seconds}s): events would be "
-                    "evicted before the fold point ever scans them"
-                )
-
-    if with_timeouts and disorder is None:
+    horizon_s = _buffer_horizon_s(pattern, buffer_horizon_seconds, disorder_seconds)
+    if disorder_seconds is None and with_timeouts:
         raise ValueError(
             "with_timeouts requires disorder_seconds (watermark mode): in "
             "eager mode a late-but-in-horizon arrival may still complete a "
             "window, so there is no sound timeout trigger"
         )
-    if select_fn is not None:
-        if output_schema is None:
-            raise ValueError("select_fn requires output_schema (Spark DDL of the function's output)")
-        if with_timeouts and (timeout_fn is None or timeout_schema is None):
-            raise ValueError(
-                "select_fn with with_timeouts is the "
-                "select(timeoutFn, selectFn) overload — pass timeout_fn and "
-                "timeout_schema (PatternStream.java:182), or use the "
-                "id-column form without select_fn"
-            )
-    elif timeout_fn is not None:
-        raise ValueError("timeout_fn requires select_fn (the Either<L,R> overload)")
-
-    out_col_types = _stage_out_cols(pattern)
-    if select_fn is not None and with_timeouts:
-        union_ddl, _sn, _tn, _an = _merge_either_schema(output_schema, timeout_schema)
-        out_schema = ", ".join(
-            [f"{k} long" for k in key_cols] + ["timed_out boolean", union_ddl]
+    if disorder_seconds is not None and pattern.within_seconds is None and (
+        _pattern_extendable(pattern) or with_timeouts
+    ):
+        # no within(): the buffer horizon doubles as the match bound, so
+        # withheld-emission (start+horizon < hwm-disorder while start is
+        # still buffered) is unsatisfiable — reject the combinations that
+        # would silently emit nothing
+        raise ValueError(
+            "disorder_seconds with an extendable pattern or "
+            "with_timeouts requires within(): without it the "
+            "emission bound equals the buffer horizon and withheld "
+            "matches would be evicted before they could ever emit"
         )
-    elif select_fn is not None:
-        out_schema = ", ".join([f"{k} long" for k in key_cols] + [output_schema])
-    else:
-        out_schema = ", ".join(
-            [f"{k} long" for k in key_cols]
-            + [f"{c} {t}" for c, t in out_col_types]
-            + (["timed_out boolean", "pending_stage string"] if with_timeouts else [])
-        )
+    disorder = None if disorder_seconds is None else int(round(disorder_seconds * 1_000_000))
+    out_ddl = _output_form(
+        pattern, id_col, select_fn, output_schema, flat_select,
+        with_timeouts, timeout_fn, timeout_schema,
+    )[0]
+    out_schema = ", ".join([f"{k} long" for k in key_cols] + [out_ddl])
     state_schema = (
         "buf_ids array<long>, buf_ts array<double>, buf_types array<string>, "
         "emitted array<string>, hwm double"
@@ -1449,7 +1414,7 @@ def cep_stream(
     timer_ms = int(horizon_s * 1000) if cleanup_timer_ms is None else int(cleanup_timer_ms)
 
     step = _stream_kernel(
-        pattern, ts_col, id_col, type_col, horizon, horizon_s,
+        pattern, ts_col, id_col, type_col, horizon_s,
         use_cleanup_timer, disorder, timer_ms, with_timeouts, attr_cols,
         select_fn=select_fn, output_schema=output_schema, flat_select=flat_select,
         timeout_fn=timeout_fn, timeout_schema=timeout_schema,
@@ -1468,7 +1433,6 @@ def _stream_kernel(
     ts_col: str,
     id_col: str,
     type_col: str,
-    horizon: int,
     horizon_s: float,
     use_cleanup_timer: bool = True,
     disorder: int | None = None,
@@ -1489,7 +1453,9 @@ def _stream_kernel(
     (tests/test_properties.py interleaves late/duplicate/out-of-order
     deliveries and asserts batch-executor equivalence — NFA.java:82's
     order-robustness contract — without paying a Structured Streaming query
-    per hypothesis example). ``rows`` are dicts without the key columns.
+    per hypothesis example). ``rows`` are dicts without the key columns,
+    built by :func:`_output_form`. ``horizon_s`` is the buffer horizon in
+    seconds, ``disorder`` the disorder bound in µs (None: eager mode).
 
     Value layout: (buf_ids, buf_ts, buf_types, emitted_sigs, hwm). ``hwm`` is
     the per-key event-time high-water mark over EVERY event ever seen — the
@@ -1498,10 +1464,11 @@ def _stream_kernel(
     ``newest`` was computed from the live buffer only). The fold point is
     derived, not stored: ``hwm - disorder`` (monotone because hwm is).
     """
-    out_col_types = _stage_out_cols(pattern)
-    either_names: list[str] = []
-    if select_fn is not None and with_timeouts:
-        _u, _sn, _tn, either_names = _merge_either_schema(output_schema, timeout_schema)
+    _ddl, match_rows, dead_rows = _output_form(
+        pattern, id_col, select_fn, output_schema, flat_select,
+        with_timeouts, timeout_fn, timeout_schema,
+    )
+    horizon = int(round(horizon_s * 1_000_000))  # exact µs
     if timer_ms is None:
         timer_ms = int(horizon_s * 1000)
     within_us = pattern.within_micros
@@ -1577,40 +1544,13 @@ def _stream_kernel(
             if sig in emitted:
                 continue
             emitted.add(sig)
-            if select_fn is not None:
-                # PatternSelectFunction over the state-buffer events (the
-                # id/ts/type skeleton + attr_cols opt-ins — carry what the
-                # function reads, the same economy as the predicates)
-                mm = {
-                    st.name: [events[i] for i in idxs]
-                    for st, idxs in zip(
-                        _output_stages(pattern), _output_match(pattern, match)
-                    )
-                }
-                outs = select_fn(mm) if flat_select else [select_fn(mm)]
-                base = {}
-                if with_timeouts:  # Either<L,R> overload: tag + NULL-fill
-                    base["timed_out"] = False
-                    base.update({c: None for c in either_names})
-                for o in outs:
-                    rows.append({**base, **o})
-                continue
-            row = {}
-            for st, (col, _), idxs in zip(
-                _output_stages(pattern), out_col_types, _output_match(pattern, match)
-            ):
-                ids = [events[i][id_col] for i in idxs]
-                row[col] = ids if st.emits_array else (ids[0] if ids else None)
-            if with_timeouts:
-                row["timed_out"] = False
-                row["pending_stage"] = None
-            rows.append(row)
+            rows.extend(match_rows(events, match))
         for acc, stage_i in (touts if with_timeouts else None) or ():
             # a partial is DEAD once the fold point passes its within-window:
             # no admissible arrival can land inside it anymore (suffix and
             # future events are all >= fold_pt). On flush (fold_pt None) the
             # stream has ended — every dead partial is reported, the batch
-            # executor's end-of-data convention (cep_batch_with_timeouts).
+            # executor's end-of-data convention (cep_batch with_timeouts).
             start = min(events[i]["__ts"] for idxs in acc for i in idxs)
             if fold_pt is not None and start + bound >= fold_pt:
                 continue
@@ -1622,38 +1562,7 @@ def _stream_kernel(
             if sig in emitted:
                 continue
             emitted.add(sig)
-            padded = acc + ((),) * (len(pattern.stages) - len(acc))
-            if timeout_fn is not None:
-                # Either<L,R> overload (PatternTimeoutFunction.java:59): the
-                # partial map carries only REACHED stages; timeout_ts is
-                # start + within in epoch µs — when the window closed on it
-                partial = {}
-                for st, idxs in zip(
-                    _output_stages(pattern), _output_match(pattern, padded)
-                ):
-                    evs = [events[i] for i in idxs]
-                    if evs:
-                        partial[st.name] = evs
-                timeout_ts = int(start + bound)
-                outs = (
-                    timeout_fn(partial, timeout_ts)
-                    if flat_select
-                    else [timeout_fn(partial, timeout_ts)]
-                )
-                base = {"timed_out": True}
-                base.update({c: None for c in either_names})
-                for o in outs:
-                    rows.append({**base, **o})
-                continue
-            row = {}
-            for st, (col, _), idxs in zip(
-                _output_stages(pattern), out_col_types, _output_match(pattern, padded)
-            ):
-                ids = [events[i][id_col] for i in idxs]
-                row[col] = (ids if ids else None) if st.emits_array else (ids[0] if ids else None)
-            row["timed_out"] = True
-            row["pending_stage"] = pattern.stages[stage_i].name
-            rows.append(row)
+            rows.extend(dead_rows(events, acc, stage_i))
         return touts
 
     compactable = _prunable_to_live_partials(pattern)
@@ -1796,8 +1705,9 @@ def cep_stream_late_side(
     it keeps only the per-key high-water mark (one double of state) and
     emits each arrival that the admit rule rejects, with its original
     columns. Pass the same ``pattern`` / ``buffer_horizon_seconds`` /
-    ``disorder_seconds`` you gave ``cep_stream`` so both queries derive the
-    same horizon (including the within+disorder auto-raise).
+    ``disorder_seconds`` you gave ``cep_stream``: both derive the horizon
+    through :func:`_buffer_horizon_s` (the within+disorder raise included,
+    and the same refusals), so they share one admit floor.
 
     Exactness caveat (declared): lateness is batching-dependent — an
     element is late relative to what arrived in EARLIER micro-batches. Over
@@ -1811,18 +1721,8 @@ def cep_stream_late_side(
     trickle, not the stream — strictly cheaper than the main query."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    horizon_s = (
-        buffer_horizon_seconds
-        if buffer_horizon_seconds is not None
-        else pattern.within_seconds
-    )
-    if horizon_s is None:
-        raise ValueError("late side output needs within() or an explicit buffer horizon")
+    horizon = int(round(_buffer_horizon_s(pattern, buffer_horizon_seconds, disorder_seconds) * 1_000_000))
     disorder = None if disorder_seconds is None else int(round(disorder_seconds * 1_000_000))
-    if disorder is not None and pattern.within_seconds is not None:
-        # mirror cep_stream's auto-raise so both queries share one floor
-        horizon_s = max(horizon_s, pattern.within_seconds + disorder_seconds)
-    horizon = int(round(horizon_s * 1_000_000))
 
     out_schema = ", ".join(
         [f"{k} long" for k in key_cols]
@@ -1837,12 +1737,11 @@ def cep_stream_late_side(
             max(hwm - horizon, hwm - disorder) if disorder is not None else hwm - horizon
         )
         rows = []
-        for i, t, y in zip(pdf[id_col], pdf[ts_col], pdf[type_col]):
-            t = pd.Timestamp(t)
-            ts_us = float(t.value // 1000)
-            if ts_us < admit_floor:
+        ts_us = (pdf[ts_col].to_numpy("datetime64[ns]").view("int64") // 1000).astype(float)
+        for i, t, us, y in zip(pdf[id_col], pdf[ts_col], ts_us.tolist(), pdf[type_col]):
+            if us < admit_floor:
                 rows.append({id_col: int(i), ts_col: t, type_col: str(y)})
-            hwm = max(hwm, ts_us)
+            hwm = max(hwm, us)
         return rows, (hwm,), None
 
     return per_key_state(
@@ -1892,6 +1791,22 @@ class PatternStream:
                 "narrow event skeleton; add attr_cols for more fields)"
             )
 
+    def _run(self, **form) -> DataFrame:
+        """The one executor dispatch: a stream runs :func:`cep_stream` with
+        this PatternStream's stream options, a bounded frame
+        :func:`cep_batch` with its comparator. ``form`` is the output form,
+        the keywords both executors share."""
+        self._require_type_col()
+        if self.df.isStreaming:
+            return cep_stream(
+                self.df, self.pattern, self.key_cols, self.ts_col, self.id_col,
+                self.type_col, **{**self.stream_opts, **form},
+            )
+        return cep_batch(
+            self.df, self.pattern, self.key_cols, self.ts_col, self.id_col,
+            self.comparator_cols, **form,
+        )
+
     def select(
         self,
         fn=None,
@@ -1913,43 +1828,10 @@ class PatternStream:
         each side NULL-filled on the other's columns. Streams require the
         watermark mode (``disorder_seconds``), as for
         :meth:`select_with_timeouts`."""
-        self._require_type_col()
-        if timeout_fn is not None:
-            if fn is None:
-                raise ValueError("select(timeout_fn=...) requires the select fn too")
-            if timeout_schema is None:
-                raise ValueError("select(timeout_fn) requires timeout_schema (Spark DDL)")
-        if fn is not None:
-            if output_schema is None:
-                raise ValueError("select(fn) requires output_schema (Spark DDL)")
-            if self.df.isStreaming:
-                opts = dict(self.stream_opts)
-                if timeout_fn is not None:
-                    opts["with_timeouts"] = True
-                return cep_stream(
-                    self.df, self.pattern, self.key_cols, self.ts_col,
-                    self.id_col, self.type_col,
-                    select_fn=fn, output_schema=output_schema,
-                    timeout_fn=timeout_fn, timeout_schema=timeout_schema,
-                    **opts,
-                )
-            if timeout_fn is not None:
-                return cep_batch_select_with_timeouts(
-                    self.df, self.pattern, self.key_cols, self.ts_col,
-                    self.id_col, fn, output_schema, timeout_fn, timeout_schema,
-                )
-            return cep_batch_select(
-                self.df, self.pattern, self.key_cols, self.ts_col, self.id_col,
-                fn, output_schema,
-            )
-        if self.df.isStreaming:
-            return cep_stream(
-                self.df, self.pattern, self.key_cols, self.ts_col,
-                self.id_col, self.type_col, **self.stream_opts,
-            )
-        return cep_batch(
-            self.df, self.pattern, self.key_cols, self.ts_col, self.id_col,
-            comparator_cols=self.comparator_cols,
+        return self._run(
+            select_fn=fn, output_schema=output_schema,
+            with_timeouts=timeout_fn is not None,
+            timeout_fn=timeout_fn, timeout_schema=timeout_schema,
         )
 
     def flat_select(
@@ -1965,28 +1847,10 @@ class PatternStream:
         ``timeout_schema``, the flatSelect timeout-handler overload
         (PatternStream.java:365) — BOTH functions return iterables
         (PatternFlatTimeoutFunction.java:56's Collector contract)."""
-        self._require_type_col()
-        if timeout_fn is not None and timeout_schema is None:
-            raise ValueError("flat_select(timeout_fn) requires timeout_schema (Spark DDL)")
-        if self.df.isStreaming:
-            opts = dict(self.stream_opts)
-            if timeout_fn is not None:
-                opts["with_timeouts"] = True
-            return cep_stream(
-                self.df, self.pattern, self.key_cols, self.ts_col,
-                self.id_col, self.type_col,
-                select_fn=fn, output_schema=output_schema, flat_select=True,
-                timeout_fn=timeout_fn, timeout_schema=timeout_schema,
-                **opts,
-            )
-        if timeout_fn is not None:
-            return cep_batch_select_with_timeouts(
-                self.df, self.pattern, self.key_cols, self.ts_col, self.id_col,
-                fn, output_schema, timeout_fn, timeout_schema, flat=True,
-            )
-        return cep_batch_select(
-            self.df, self.pattern, self.key_cols, self.ts_col, self.id_col,
-            fn, output_schema, flat=True,
+        return self._run(
+            select_fn=fn, output_schema=output_schema, flat_select=True,
+            with_timeouts=timeout_fn is not None,
+            timeout_fn=timeout_fn, timeout_schema=timeout_schema,
         )
 
     def late_side(self) -> DataFrame:
@@ -2011,15 +1875,7 @@ class PatternStream:
 
     def select_with_timeouts(self) -> DataFrame:
         """Matches + timed-out partials (flatSelect + timeout handler)."""
-        self._require_type_col()
-        if self.df.isStreaming:
-            return cep_stream(
-                self.df, self.pattern, self.key_cols, self.ts_col,
-                self.id_col, self.type_col, with_timeouts=True, **self.stream_opts,
-            )
-        return cep_batch_with_timeouts(
-            self.df, self.pattern, self.key_cols, self.ts_col, self.id_col
-        )
+        return self._run(with_timeouts=True)
 
 
 def pattern(

@@ -21,6 +21,7 @@ The engine does the same for both of its inputs:
 
 from __future__ import annotations
 
+import re
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
@@ -38,7 +39,8 @@ BUCKET = "__bucket"
 def schema_fields(ddl: str) -> list[tuple[str, str]]:
     """(name, type) pairs of a flat Spark DDL string ('a long, b double').
     Splits on top-level commas only, so parameterized types
-    (``map<string,int>``, ``struct<a:int,b:int>``) don't shear."""
+    (``map<string,int>``, ``decimal(10,2)``) don't shear. A field may also
+    be spelled ``a: long``, as Spark's DDL parser allows."""
     fields, depth, start = [], 0, 0
     for i, ch in enumerate(ddl + ","):
         if ch in "<(":
@@ -48,7 +50,7 @@ def schema_fields(ddl: str) -> list[tuple[str, str]]:
         elif ch == "," and depth == 0:
             part = ddl[start:i].strip()
             if part:
-                name, _, typ = part.partition(" ")
+                name, typ = re.match(r"([^\s:]+)\s*:?(.*)", part, re.S).groups()
                 fields.append((name, typ.strip()))
             start = i + 1
     return fields

@@ -481,8 +481,6 @@ def test_cep_allow_combinations(spark):
 
 
 def test_cep_timeout_side_channel(spark):
-    from flink_1_6_0_spark.streaming.cep import cep_batch_with_timeouts
-
     # user1 completes view→purchase; user2's view has no purchase in horizon
     evs = [
         (1, "2024-01-01 00:00:00", 1, "view"),
@@ -497,7 +495,7 @@ def test_cep_timeout_side_channel(spark):
         .followed_by("purchase", lambda e: e["event_type"] == "purchase")
         .within(3600)
     )
-    out = cep_batch_with_timeouts(df, p, ["user_id"], "ts", "event_id").collect()
+    out = cep_batch(df, p, ["user_id"], "ts", "event_id", with_timeouts=True).collect()
     full = {(r.user_id, r.view_id, r.purchase_id) for r in out if not r.timed_out}
     timed = {(r.user_id, r.view_id, r.purchase_id, r.pending_stage) for r in out if r.timed_out}
     assert full == {(1, 1, 2)}
@@ -505,8 +503,6 @@ def test_cep_timeout_side_channel(spark):
 
 
 def test_cep_timeout_not_reported_when_completed(spark):
-    from flink_1_6_0_spark.streaming.cep import cep_batch_with_timeouts
-
     # single user, complete match — no timeout rows at all
     evs = [
         (1, "2024-01-01 00:00:00", 1, "view"),
@@ -519,7 +515,7 @@ def test_cep_timeout_not_reported_when_completed(spark):
         .followed_by("purchase", lambda e: e["event_type"] == "purchase")
         .within(3600)
     )
-    out = cep_batch_with_timeouts(df, p, ["user_id"], "ts", "event_id").collect()
+    out = cep_batch(df, p, ["user_id"], "ts", "event_id", with_timeouts=True).collect()
     assert [r.timed_out for r in out] == [False]
 
 
@@ -1152,7 +1148,7 @@ def test_cep_pattern_facade_routes_batch_and_stream(spark, sf_dir):
     via_keyed = ks.cep(mk(), "ts", "event_id").select().toPandas()
     assert len(via_keyed) == len(direct)
 
-    # batch timeout variant routes to cep_batch_with_timeouts
+    # batch timeout variant routes to cep_batch(with_timeouts=True)
     to = pattern(ev, mk(), ["user_id"], "ts", "event_id").select_with_timeouts().toPandas()
     assert set(to.columns) >= {"timed_out", "pending_stage"}
     assert to["timed_out"].any() and (~to["timed_out"]).any()
@@ -1268,6 +1264,7 @@ def test_cep_stream_explicit_horizon_smaller_than_within_plus_disorder_raises(sp
     import pytest
 
     from flink_1_6_0_spark.sources.stream import events_stream
+    from flink_1_6_0_spark.streaming.cep import cep_stream_late_side
 
     stream = events_stream(spark, sf_dir)
     pat = (
@@ -1286,6 +1283,17 @@ def test_cep_stream_explicit_horizon_smaller_than_within_plus_disorder_raises(sp
         stream, pat, ["user_id"], "ts", "event_id", "event_type",
         buffer_horizon_seconds=4200, disorder_seconds=600,
         use_cleanup_timer=False,
+    ).isStreaming
+    # the late side output derives the same horizon, so it refuses the same
+    # explicit value instead of widening it to a floor of its own
+    with pytest.raises(ValueError, match="within\\+disorder"):
+        cep_stream_late_side(
+            stream, pat, ["user_id"], "ts", "event_id", "event_type",
+            buffer_horizon_seconds=3600, disorder_seconds=600,
+        )
+    assert cep_stream_late_side(
+        stream, pat, ["user_id"], "ts", "event_id", "event_type",
+        buffer_horizon_seconds=4200, disorder_seconds=600,
     ).isStreaming
 
 
@@ -1634,8 +1642,6 @@ def test_cep_select_timeout_overload_argument_errors(spark):
 def test_cep_select_function_batch_matches_ids_form(spark):
     """select(fn) must see exactly the matches the id-columns form emits:
     projecting the ids out of the function output equals plain select()."""
-    from flink_1_6_0_spark.streaming.cep import cep_batch, cep_batch_select
-
     df = _events_df(spark)
     pat = _funnel(3600)
 
@@ -1648,10 +1654,119 @@ def test_cep_select_function_batch_matches_ids_form(spark):
 
     a = {
         tuple(r)
-        for r in cep_batch_select(
-            df, pat, ["user_id"], "ts", "event_id", ids,
-            "view_id long, click_id long, purchase_id long",
+        for r in cep_batch(
+            df, pat, ["user_id"], "ts", "event_id", select_fn=ids,
+            output_schema="view_id long, click_id long, purchase_id long",
         ).collect()
     }
     b = {tuple(r) for r in cep_batch(df, _funnel(3600), ["user_id"], "ts", "event_id").collect()}
     assert a == b and a
+
+
+# (event_id, ts seconds, user_id, event_type): user 1 completes three
+# funnels (views 1 and 5 share purchase 2) and leaves view 9 open; user 2's
+# view 3 dies (its purchase lands beyond the 1 h window) and view 8 is
+# still open at the flush
+_FORM_EVENTS = [
+    (1, 0, 1, "view"),
+    (2, 600, 1, "purchase"),
+    (3, 0, 2, "view"),
+    (4, 7200, 2, "purchase"),
+    (5, 100, 1, "view"),
+    (6, 9000, 1, "view"),
+    (7, 9300, 1, "purchase"),
+    (8, 20000, 2, "view"),
+    (9, 30000, 1, "view"),
+]
+
+
+def _form_select(m):
+    return {"view_id": m["view"][0]["event_id"], "purchase_id": m["purchase"][0]["event_id"]}
+
+
+def _form_flat(m):  # zero rows for view 6, fan-out elsewhere
+    return [{"view_id": m["view"][0]["event_id"], "copy": c} for c in range(m["view"][0]["event_id"] % 3)]
+
+
+def _form_timeout(partial, timeout_ts):
+    return {"view_id": partial["view"][0]["event_id"], "deadline_us": timeout_ts}
+
+
+def _form_flat_timeout(partial, timeout_ts):
+    return [{"view_id": partial["view"][0]["event_id"], "copy": -c} for c in range(2)]
+
+
+_OUTPUT_FORMS = {
+    "ids": {},
+    "ids+timeouts": {"with_timeouts": True},
+    "select": {"select_fn": _form_select, "output_schema": "view_id long, purchase_id long"},
+    "flat_select": {
+        "select_fn": _form_flat, "output_schema": "view_id long, copy long", "flat_select": True,
+    },
+    "select+timeout_fn": {
+        "select_fn": _form_select, "output_schema": "view_id long, purchase_id long",
+        "with_timeouts": True, "timeout_fn": _form_timeout,
+        "timeout_schema": "view_id long, deadline_us long",
+    },
+    "flat_select+timeout_fn": {
+        "select_fn": _form_flat, "output_schema": "view_id long, copy long", "flat_select": True,
+        "with_timeouts": True, "timeout_fn": _form_flat_timeout, "timeout_schema": "copy long",
+    },
+}
+
+
+@pytest.mark.parametrize("form", list(_OUTPUT_FORMS))
+def test_every_output_form_is_the_same_in_batch_and_stream(spark, form):
+    """Each CEP output form gives the same rows from the batch executor and
+    from the stream kernel fed each key's events as three micro-batches
+    and then flushed: one output form serves both executors."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from flink_1_6_0_spark.streaming.cep import _stream_kernel
+    from flink_1_6_0_spark.streaming.keyed import Clock
+
+    kw = _OUTPUT_FORMS[form]
+    pat = (
+        Pattern.begin("view", lambda e: e["event_type"] == "view")
+        .followed_by("purchase", lambda e: e["event_type"] == "purchase")
+        .within(3600)
+    )
+    df = spark.createDataFrame(
+        _FORM_EVENTS, "event_id long, ts long, user_id long, event_type string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    out = cep_batch(df, pat, ["user_id"], "ts", "event_id", **kw)
+    names = out.columns
+
+    def freeze(v):
+        return tuple(v) if isinstance(v, list) else v
+
+    want = Counter(tuple(freeze(r[c]) for c in names) for r in out.collect())
+
+    step = _stream_kernel(
+        pat, "ts", "event_id", "event_type", horizon_s=5400.0,
+        use_cleanup_timer=False, disorder=1_800_000_000, **kw,
+    )
+    got: Counter = Counter()
+    for user in sorted({e[2] for e in _FORM_EVENTS}):
+        evs = sorted((e for e in _FORM_EVENTS if e[2] == user), key=lambda e: (e[1], e[0]))
+        frame = pd.DataFrame(
+            {
+                "event_id": [e[0] for e in evs],
+                "ts": pd.to_datetime([e[1] for e in evs], unit="s"),
+                "event_type": [e[3] for e in evs],
+            }
+        )
+        value, rows = None, []
+        for part in (frame.iloc[:2], frame.iloc[2:4], frame.iloc[4:]):
+            emitted, value, _ = step((user,), part.reset_index(drop=True), value, Clock(False, 0, None))
+            rows += emitted
+        rows += step((user,), frame.iloc[:0], value, Clock(True, 0, None))[0]
+        got.update(
+            tuple(user if c == "user_id" else freeze(r.get(c)) for c in names) for r in rows
+        )
+    assert got == want
+    assert want  # every form emits rows here
+    if kw.get("with_timeouts"):
+        assert {r[names.index("timed_out")] for r in want} == {True, False}

@@ -43,6 +43,7 @@ def test_per_key_empty_result_takes_the_schema_names(spark):
     """A parameterized type keeps its top-level name: a key that emits
     nothing returns an empty frame named (k, s), which Spark accepts."""
     assert schema_names("k long, s struct<a:int,b:int>") == ["k", "s"]
+    assert schema_names("k: long, s decimal(10,2), u:string") == ["k", "s", "u"]
     df = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
     out = per_key(df, ["k"], ["v"], lambda key, pdf: [], "k long, s struct<a:int,b:int>")
     assert out.columns == ["k", "s"]

@@ -541,7 +541,7 @@ def _drive_kernel(pattern, batches, horizon_s, disorder_s=None, flush=False):
 
     step = _stream_kernel(
         pattern, "ts", "eid", "etype",
-        horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
+        horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=None if disorder_s is None else int(disorder_s * 1_000_000),
     )
@@ -712,7 +712,7 @@ def _drive_kernel_with_timeouts(pattern, batches, horizon_s, disorder_s):
 
     step = _stream_kernel(
         pattern, "ts", "eid", "etype",
-        horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
+        horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=int(disorder_s * 1_000_000),
         with_timeouts=True,
@@ -724,7 +724,7 @@ def _drive_kernel_with_timeouts(pattern, batches, horizon_s, disorder_s):
 
 
 def _batch_matches_and_timeouts(pattern, events):
-    """The batch executor's convention EXACTLY (cep_batch_with_timeouts):
+    """The batch executor's convention EXACTLY (cep_batch with_timeouts):
     dead partials that are prefixes of a full match are suppressed — they
     completed via a sibling branch (round-9 advice: the old oracle compared
     raw _scan output, leaving the suppression divergence untested)."""
@@ -789,7 +789,7 @@ def _drive_kernel_quant(pattern, batches, horizon_s, disorder_s):
 
     step = _stream_kernel(
         pattern, "ts", "eid", "etype",
-        horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
+        horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=int(disorder_s * 1_000_000),
     )
@@ -898,7 +898,7 @@ def test_bucket_runner_equals_the_per_key_kernel(batches):
     ).within(100)
     step = _stream_kernel(
         p, "ts", "eid", "etype",
-        horizon=200_000_000, horizon_s=200.0, use_cleanup_timer=True,
+        horizon_s=200.0, use_cleanup_timer=True,
         disorder=30_000_000, timer_ms=1000, with_timeouts=True,
     )
     names = ["k", "a_id", "b_id", "timed_out", "pending_stage"]
@@ -978,7 +978,7 @@ def _assert_stream_equals_batch_generic(pattern_fn, events, batches, horizon_s=2
     p = pattern_fn()
     step = _stream_kernel(
         p, "ts", "eid", "etype",
-        horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
+        horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=int(disorder_s * 1_000_000),
     )
@@ -1255,7 +1255,7 @@ def _drive_kernel_with_comparator(pattern, batches, horizon_s, disorder_s, flush
 
     step = _stream_kernel(
         pattern, "ts", "eid", "etype",
-        horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
+        horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=None if disorder_s is None else int(disorder_s * 1_000_000),
         attr_cols=["prio"], comparator_cols=["prio"],
@@ -1316,7 +1316,7 @@ def _kernel_state_after(pattern, batches, horizon_s, disorder_s):
 
     step = _stream_kernel(
         pattern, "ts", "eid", "etype",
-        horizon=int(horizon_s * 1_000_000), horizon_s=horizon_s,
+        horizon_s=horizon_s,
         use_cleanup_timer=False,
         disorder=None if disorder_s is None else int(disorder_s * 1_000_000),
     )

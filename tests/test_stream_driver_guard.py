@@ -83,3 +83,21 @@ def test_only_the_runner_keeps_live_key_state():
     streaming = list((ENGINE / "streaming").rglob("*.py"))
     for token in ("setTimeoutTimestamp(", "setTimeoutDuration(", "hasTimedOut", "GroupState("):
         assert _uses(token, streaming) <= {"flink_1_6_0_spark/streaming/keyed.py"}, token
+
+
+def test_only_the_output_form_builds_cep_rows():
+    """streaming/cep.py::_output_form is the one place CEP match rows,
+    timed-out partial rows and their schema are built: the batch executor
+    and the stream kernel both take its ``match_rows`` / ``dead_rows``."""
+    import ast
+
+    assert _uses("_output_match(", ENGINE.rglob("*.py")) == {"flink_1_6_0_spark/streaming/cep.py"}
+    tree = ast.parse((ENGINE / "streaming" / "cep.py").read_text(encoding="utf-8"))
+    callers = {
+        top.name
+        for top in tree.body
+        if isinstance(top, (ast.FunctionDef, ast.ClassDef))
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_output_match"
+    }
+    assert callers == {"_output_form"}

@@ -28,6 +28,23 @@ def test_table_function_outer_keeps_empty(spark):
     assert {(r.id, r.word) for r in out.collect()} == {(1, "x"), (2, None)}
 
 
+def test_table_function_parameterized_type_keeps_field_names(spark):
+    """A ``decimal(10,2)`` field's inner comma must not split the row schema:
+    the field after it keeps its own name and value on the vectorized path."""
+    from decimal import Decimal
+
+    split = table_function(
+        lambda s: [(Decimal(w.split(":")[1]), w.split(":")[0]) for w in s.split()],
+        "amount decimal(10,2), tag string",
+    )
+    df = spark.createDataFrame([(1, "a:1.25 b:20.50")], "id long, s string")
+    out = join_lateral(df, split(F.col("s")), ["amount", "tag"], keep=["id"])
+    assert {(r.id, r.amount, r.tag) for r in out.collect()} == {
+        (1, Decimal("1.25"), "a"),
+        (1, Decimal("20.50"), "b"),
+    }
+
+
 def test_ml_facade_scaler_and_split(spark):
     from pyspark.ml.linalg import Vectors
 
